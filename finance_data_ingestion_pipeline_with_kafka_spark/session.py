@@ -8,6 +8,17 @@ Scale posture (100 TB readiness — SURVEY §4, §7):
 * Arrow-backed pandas interchange for the (rare) Pandas-UDF paths.
 * ``shuffle.partitions`` is a knob, not a constant — callers size it to the
   cluster; the local default keeps small-SF latency low while AQE coalesces.
+* Local masters write streaming checkpoints through Spark's FileSystem-based
+  checkpoint file manager. pip PySpark ships no native libhadoop, so
+  Hadoop's local filesystem shells out for ``readlink`` on every
+  FileContext rename and for ``chmod`` on every file create. Spark's
+  default FileContext manager renames each checkpoint file (and its
+  ``.crc``) that way, several forks per file per micro-batch. The
+  FileSystem manager renames with ``File.renameTo`` (POSIX ``rename(2)``),
+  which on a local disk is as atomic as FileContext's own local rename
+  (check, then rename). Checkpoint checksums and ``.crc`` files stay on.
+  Cluster masters keep Spark's default, so HDFS keeps its atomic
+  ``FileContext.rename``.
 
 On a real cluster the same builder is used with master/memory provided by
 the deployer; nothing here assumes local mode.
@@ -18,6 +29,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: Checkpoint file manager for local masters (see the module docstring).
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def get_spark(
@@ -84,6 +101,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("ENGINE_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass", LOCAL_CHECKPOINT_FILE_MANAGER
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

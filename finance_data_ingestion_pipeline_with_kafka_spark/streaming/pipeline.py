@@ -11,8 +11,12 @@ documented fixes (SURVEY §7):
   §2.8 F1);
 * the validity gate runs INSIDE the stream (the reference runs it in an
   Airflow sensor before Spark, §2.2 P6);
-* producer-side unbounded-memory dedup becomes watermarked
-  ``dropDuplicates`` — bounded state store (§2.9 T4).
+* producer-side in-memory dedup becomes ``dropDuplicates(["id"])`` on a
+  watermarked stream (§2.9 T4). The state is a checkpointed state store,
+  not producer memory, but it is NOT bounded: the dedup key leaves out the
+  event-time column, so Spark never evicts a key and the store holds one
+  row per distinct tick ever seen. The watermark only drops input rows
+  more than ``dedup_watermark`` late.
 
 Every function is pure ``DataFrame → DataFrame`` (the signature the
 reference's stubs declare, yfinance_processing.py:30) and works on both
@@ -74,9 +78,16 @@ def finnhub_transform(df: DataFrame, dedup_watermark: str | None = "10 minutes")
     """Finnhub rename contract (dags/...finnhub...py:253-259) with the
     converted timestamp KEPT, validity gate (v>0 AND s IS NOT NULL,
     dags/...finnhub...py:91), deterministic key over the producer's dedup
-    tuple (str(c),p,s,t,v) (StockFinnhubMetrics.py:82-88), and watermarked
-    stateful dedup on that key (bounded state vs the producer's unbounded
-    in-memory set)."""
+    tuple (str(c),p,s,t,v) (StockFinnhubMetrics.py:82-88), and stateful
+    dedup on that key behind a ``dedup_watermark`` event-time watermark.
+
+    The watermark drops input ticks that arrive more than
+    ``dedup_watermark`` behind the latest event time seen, but it evicts no
+    dedup state: ``dropDuplicates(["id"])`` does not name the event-time
+    column, so every distinct ``id`` stays in the state store for the life
+    of the checkpoint (like the producer's in-memory set, but checkpointed
+    and restart-safe). Bounding it would mean adding ``datetime`` to the
+    dedup columns, which also changes which late ticks are dropped."""
     renamed = df.select(
         F.col("c").alias("trade_conditions"),
         F.col("p").alias("last_price"),

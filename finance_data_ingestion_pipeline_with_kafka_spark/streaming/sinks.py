@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import DataType, DateType, StringType, StructField, StructType
 
 
 #: Event-date partition column added by the idempotent sink (storage
@@ -22,11 +23,10 @@ from pyspark.sql.streaming import StreamingQuery
 PARTITION_COL = "sink_date"
 
 #: Output-file sizing for the idempotent sink (guide §6: files in the
-#: 128 MB-1 GB range; micro-batches land nearer the floor). ROW_BYTES is
-#: the measured parquet-compressed footprint of one trade row (~60-100 B
-#: on the finnhub schema); files target 64 MB so a 62k-row batch writes
-#: ONE file while a 100M-row batch writes ~150 parallel writers.
-_SINK_ROW_BYTES = 96
+#: 128 MB-1 GB range; micro-batches land nearer the floor). Files target
+#: 64 MB of Spark's per-row size estimate for the batch schema, so a
+#: 62.5k-row finnhub batch writes ONE file while a 100M-row batch writes
+#: ~120 parallel writers, and a wider schema writes proportionally more.
 _SINK_FILE_BYTES = 64 << 20
 
 
@@ -39,14 +39,33 @@ def _sink_has_data(sink_dir: str) -> bool:
     return False
 
 
+def _sink_files(df: DataFrame, n_rows: int) -> int:
+    """Output files for ``n_rows`` rows of ``df`` at ~``_SINK_FILE_BYTES``
+    each. Row bytes are ``StructType.defaultSize`` of the batch schema
+    (8 per long/double/timestamp, 20 per string, ...): Spark's own
+    estimate, near the measured parquet footprint of the finnhub row
+    (60-100 B), and it grows with every column a wider schema adds."""
+    row_bytes = df._jdf.schema().defaultSize()
+    return n_rows * row_bytes // _SINK_FILE_BYTES + 1
+
+
 def existing_keys_in_range(
-    spark, sink_dir: str, key: str, lo, hi, horizon_days: int = 0
+    spark, sink_dir: str, key: str, lo, hi, horizon_days: int = 0,
+    key_type: DataType = StringType(),
 ) -> DataFrame:
     """Keys already sunk in event-date partitions [lo - horizon, hi] —
     a partition-pruned scan (PartitionFilters on ``sink_date``), so
     per-batch anti-join cost is bounded by the horizon window, never by
-    total sink history."""
-    existing = spark.read.parquet(sink_dir)
+    total sink history.
+
+    The read carries an explicit two-field schema, ``key`` (of
+    ``key_type``; the engine's deterministic keys are sha2 hex strings)
+    plus ``sink_date DATE``, so no batch pays a parquet footer-inference
+    job, and the read is the same whatever else the sunk rows carry."""
+    schema = StructType(
+        [StructField(key, key_type), StructField(PARTITION_COL, DateType())]
+    )
+    existing = spark.read.schema(schema).parquet(sink_dir)
     return existing.where(
         (F.col(PARTITION_COL) >= F.date_sub(F.lit(lo), horizon_days))
         & (F.col(PARTITION_COL) <= F.lit(hi))
@@ -60,7 +79,8 @@ def foreach_batch_idempotent_parquet(
 
     Shape parity with dags/...yfinance...py:272-279 (foreachBatch → batch
     append), plus idempotence: batch-local dedup on ``key`` then anti-join
-    against already-sunk keys.
+    against already-sunk keys. Re-running a batch (a crash between the
+    sink write and the offset commit replays it) appends nothing.
 
     Scale contract: the sink is hive-partitioned by event date
     (``sink_date = to_date(ts_col)``) and the anti-join reads ONLY the
@@ -75,46 +95,55 @@ def foreach_batch_idempotent_parquet(
 
     ``ts_col=None`` falls back to the unpartitioned full-history anti-join
     (only for keys not derived from an event time).
+
+    Either way the sunk keys are read with the batch's own key field as
+    an explicit schema (no per-batch schema-inference job), and the
+    output files are sized from the batch's row count and schema
+    (``_sink_files``).
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        key_field = batch_df.schema[key]
         fresh = batch_df.dropDuplicates([key])
-        if ts_col is None:
-            if _sink_has_data(sink_dir):
-                existing = spark.read.parquet(sink_dir).select(key)
-                fresh = fresh.join(existing, on=key, how="left_anti")
-            fresh.write.mode("append").parquet(sink_dir)
-            return
-        dated = fresh.withColumn(PARTITION_COL, F.to_date(F.col(ts_col))).persist()
+        if ts_col is not None:
+            fresh = fresh.withColumn(PARTITION_COL, F.to_date(F.col(ts_col)))
+        fresh = fresh.persist()
         try:
-            out = dated
-            # row count rides the SAME action as the date bounds (free):
-            # it sizes the output files below
-            bounds = dated.agg(
-                F.min(PARTITION_COL).alias("lo"),
-                F.max(PARTITION_COL).alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            ).first()
-            if _sink_has_data(sink_dir) and bounds["lo"] is not None:
-                existing = existing_keys_in_range(
-                    spark, sink_dir, key, bounds["lo"], bounds["hi"], horizon_days
-                )
-                out = dated.join(existing, on=key, how="left_anti")
+            out = fresh
+            if ts_col is None:
+                n_rows = fresh.count()
+                if _sink_has_data(sink_dir):
+                    existing = spark.read.schema(StructType([key_field])).parquet(sink_dir)
+                    out = fresh.join(existing, on=key, how="left_anti")
+            else:
+                # row count rides the SAME action as the date bounds (free):
+                # it sizes the output files below
+                bounds = fresh.agg(
+                    F.min(PARTITION_COL).alias("lo"),
+                    F.max(PARTITION_COL).alias("hi"),
+                    F.count(F.lit(1)).alias("n"),
+                ).first()
+                n_rows = bounds["n"]
+                if _sink_has_data(sink_dir) and bounds["lo"] is not None:
+                    existing = existing_keys_in_range(
+                        spark, sink_dir, key, bounds["lo"], bounds["hi"], horizon_days,
+                        key_field.dataType,
+                    )
+                    out = fresh.join(existing, on=key, how="left_anti")
             # Output-file sizing (r17, guide §6): without it every batch
             # wrote one file per post-shuffle partition (32 ~90 kB files
             # per 62.5k-row batch — 256 sink files after one replay),
             # and every LATER batch's anti-join re-listed and re-opened
-            # all of them, so batch time grew with sink history. Width
-            # derives from the batch's own row count at ~64 MB/file —
-            # a repartition, not coalesce, so the anti-join upstream
-            # keeps its parallelism (coalesce would fuse and cap it).
-            n_files = max(1, int(bounds["n"] or 0) * _SINK_ROW_BYTES // _SINK_FILE_BYTES + 1)
-            out.repartition(n_files).write.mode("append").partitionBy(
-                PARTITION_COL
-            ).parquet(sink_dir)
+            # all of them, so batch time grew with sink history. A
+            # repartition, not coalesce, so the anti-join upstream keeps
+            # its parallelism (coalesce would fuse and cap it).
+            writer = out.repartition(_sink_files(fresh, n_rows)).write.mode("append")
+            if ts_col is not None:
+                writer = writer.partitionBy(PARTITION_COL)
+            writer.parquet(sink_dir)
         finally:
-            dated.unpersist()
+            fresh.unpersist()
 
     return _write
 

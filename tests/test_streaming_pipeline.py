@@ -4,6 +4,7 @@ golden sink contracts, idempotent-replay semantics, watermarked dedup.
 """
 
 import json
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -271,3 +272,188 @@ def test_ingest_observation_counts_gate_drops(spark, tmp_path):
             totals["n_rows"] += m["n_rows"]
             totals["n_invalid"] += m["n_invalid"]
     assert totals == {"n_rows": 7, "n_invalid": 3}
+
+
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager_class(spark, path) -> str:
+    """Class of the checkpoint file manager Spark builds for ``path``
+    under the session's current conf (the same factory the offset,
+    commit and state-store logs use)."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getName()
+
+
+def test_local_master_uses_filesystem_checkpoint_manager(spark, tmp_path):
+    """A local-master session writes checkpoints through the FileSystem-
+    based manager (plain rename(2), no ``readlink`` fork per rename)."""
+    from finance_data_ingestion_pipeline_with_kafka_spark.session import (
+        LOCAL_CHECKPOINT_FILE_MANAGER,
+        get_spark,
+    )
+
+    session = get_spark(master="local[2]", shuffle_partitions=8)
+    assert session.conf.get(CHECKPOINT_MANAGER_KEY) == LOCAL_CHECKPOINT_FILE_MANAGER
+    assert _checkpoint_manager_class(session, tmp_path / "cp") == LOCAL_CHECKPOINT_FILE_MANAGER
+    # integrity checks stay on
+    assert session.conf.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
+
+
+def test_checkpoint_manager_choice_by_master_and_extra_conf(monkeypatch):
+    """``extra_conf`` overrides the local default, and a cluster master
+    keeps Spark's default manager. Read from the builder's options, so the
+    shared test session is not re-configured."""
+    from pyspark.sql import SparkSession
+
+    from finance_data_ingestion_pipeline_with_kafka_spark.session import (
+        LOCAL_CHECKPOINT_FILE_MANAGER,
+        get_spark,
+    )
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: dict(self._options))
+    assert get_spark(master="local[2]")[CHECKPOINT_MANAGER_KEY] == LOCAL_CHECKPOINT_FILE_MANAGER
+    file_context = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    overridden = get_spark(master="local[2]", extra_conf={CHECKPOINT_MANAGER_KEY: file_context})
+    assert overridden[CHECKPOINT_MANAGER_KEY] == file_context
+    assert CHECKPOINT_MANAGER_KEY not in get_spark(master="spark://cluster:7077")
+
+
+def _finnhub_batch(spark, n=40, day=0):
+    """A static batch with the finnhub pipeline's exact output schema."""
+    from finance_data_ingestion_pipeline_with_kafka_spark.streaming.pipeline import (
+        finnhub_pipeline,
+    )
+
+    base = 1704205200000 + day * 86_400_000
+    msgs = [fh_msg("AAPL" if i % 2 else "MSFT", base + i * 1000, 100.0 + i, 1 + i) for i in range(n)]
+    return finnhub_pipeline(spark.createDataFrame([(m,) for m in msgs], ["value"]))
+
+
+def _wide_batch(spark, n, first=0):
+    """A batch of another shape: a LONG key named ``trade_key``, event
+    time ``event_ts`` on one day, and 40 payload columns."""
+    extra = [F.col("k").cast("double").alias(f"x{i}") for i in range(20)] + [
+        F.concat(F.lit(f"s{i}-"), F.col("k").cast("string")).alias(f"s{i}") for i in range(20)
+    ]
+    return spark.range(first, first + n).toDF("k").select(
+        F.col("k").alias("trade_key"),
+        (F.lit(1704205200).cast("long") + F.col("k")).cast("timestamp").alias("event_ts"),
+        *extra,
+    )
+
+
+def _parquet_files(sink):
+    return sorted(pathlib.Path(sink).rglob("*.parquet"))
+
+
+class TestIdempotentSinkReplay:
+    """Exactly-once under a replayed micro-batch: a crash between the
+    sink write and the offset commit makes Spark re-run the same batch
+    id with the same rows. The second call must append nothing."""
+
+    def _sunk_once(self, spark, sink, key, expected_keys):
+        landed = spark.read.parquet(sink)
+        keys = [r[0] for r in landed.select(key).collect()]
+        assert len(keys) == len(set(keys)), "a key was sunk twice"
+        assert set(keys) == set(expected_keys)
+
+    def test_finnhub_batch_replayed(self, spark, tmp_path):
+        from finance_data_ingestion_pipeline_with_kafka_spark.streaming.sinks import (
+            foreach_batch_idempotent_parquet,
+        )
+
+        sink = str(tmp_path / "sink")
+        write = foreach_batch_idempotent_parquet(sink)
+        batch = _finnhub_batch(spark)
+        ids = [r[0] for r in batch.select("id").collect()]
+        write(batch, 7)
+        write(batch, 7)  # the replay
+        self._sunk_once(spark, sink, "id", ids)
+        assert len(ids) == 40
+
+    @pytest.mark.parametrize("ts_col", ["event_ts", None])
+    def test_wide_batch_with_other_key_replayed(self, spark, tmp_path, ts_col):
+        """Extra columns and a non-``id``, non-string key: the sunk-key
+        read takes its schema from the batch, so it works for any shape.
+        The replay also overlaps a later batch's keys."""
+        from finance_data_ingestion_pipeline_with_kafka_spark.streaming.sinks import (
+            foreach_batch_idempotent_parquet,
+        )
+
+        sink = str(tmp_path / "sink")
+        write = foreach_batch_idempotent_parquet(sink, key="trade_key", ts_col=ts_col)
+        first, second = _wide_batch(spark, 50), _wide_batch(spark, 50, first=30)
+        write(first, 0)
+        write(first, 0)  # replay of batch 0
+        write(second, 1)  # 20 of its keys are already sunk
+        write(second, 1)  # replay of batch 1
+        self._sunk_once(spark, sink, "trade_key", range(80))
+        landed = spark.read.parquet(sink)
+        assert landed.where(F.col("trade_key") == 42).first()["s3"] == "s3-42"
+
+    def test_sunk_key_read_runs_no_job(self, spark, tmp_path):
+        """The sunk keys are read with an explicit schema: building the
+        anti-join input runs no parquet schema-inference job."""
+        import datetime
+
+        from finance_data_ingestion_pipeline_with_kafka_spark.streaming.sinks import (
+            existing_keys_in_range,
+            foreach_batch_idempotent_parquet,
+        )
+
+        sink = str(tmp_path / "sink")
+        foreach_batch_idempotent_parquet(sink)(_finnhub_batch(spark), 0)
+        sc = spark.sparkContext
+        sc.setJobGroup("sink-key-read", "existing_keys_in_range")
+        try:
+            keys = existing_keys_in_range(
+                spark, sink, "id", datetime.date(2024, 1, 2), datetime.date(2024, 1, 2)
+            )
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(sc.statusTracker().getJobIdsForGroup("sink-key-read")) == 0
+        assert keys.count() == 40
+
+
+class TestSinkFileSizing:
+    """Output files are sized from the batch's rows and schema
+    (``StructType.defaultSize``), not from one schema's row width."""
+
+    def test_finnhub_batch_writes_one_file_up_to_62_5k_rows(self, spark):
+        from finance_data_ingestion_pipeline_with_kafka_spark.streaming.sinks import (
+            PARTITION_COL,
+            _sink_files,
+        )
+
+        sunk = _finnhub_batch(spark, n=1).withColumn(PARTITION_COL, F.to_date("datetime"))
+        assert _sink_files(sunk, 62_500) == 1
+        assert _sink_files(sunk, 100_000_000) > 100
+
+    @pytest.mark.parametrize("ts_col", ["event_ts", None])
+    def test_wide_schema_file_count(self, spark, tmp_path, monkeypatch, ts_col):
+        """With the file target shrunk to 64 kB, 600 wide rows split into
+        the files their schema's row size asks for, while the same number
+        of finnhub rows still fits one file."""
+        from finance_data_ingestion_pipeline_with_kafka_spark.streaming import sinks
+
+        monkeypatch.setattr(sinks, "_SINK_FILE_BYTES", 64 << 10)
+        wide = _wide_batch(spark, 600)
+        row_bytes = wide._jdf.schema().defaultSize() + (4 if ts_col else 0)  # + sink_date
+        expected = 600 * row_bytes // (64 << 10) + 1
+        assert expected >= 3
+        sink = str(tmp_path / "wide")
+        sinks.foreach_batch_idempotent_parquet(sink, key="trade_key", ts_col=ts_col)(wide, 0)
+        assert len(_parquet_files(sink)) == expected
+        assert spark.read.parquet(sink).count() == 600
+
+        narrow = str(tmp_path / "narrow")
+        sinks.foreach_batch_idempotent_parquet(narrow)(_finnhub_batch(spark, n=600), 0)
+        assert len(_parquet_files(narrow)) == 1
