@@ -177,26 +177,13 @@ def main() -> None:
         _force(spec.fn(spark, sf_dir))
         return name, time.perf_counter() - t0
 
-    # suppress_conf_mutation: the data-aware initialPartitionNum floor is
-    # a session-global conf; with ~20 threads on one session, set/unset
-    # races would make it nondeterministic — so this phase freezes the
-    # confs, race-free (see registry.py). Note: queries whose plan was
-    # memoized during the sequential pass keep that pass's physical
-    # shape; only newly planned work picks up the restored confs.
-    from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
-        restore_session_confs,
-        suppress_conf_mutation,
-    )
-
-    # reset ALL managed confs ONCE, pre-threads: AQE back on, floor
-    # cleared, and shuffle.partitions restored from the first-touch
-    # snapshot (the last sequential query may have left a tiny-input
-    # AQE-off static partition count behind)
-    restore_session_confs(spark)
+    # Each query runs under its own execution policy: a policy'd query
+    # plans on a child session carrying that policy, and no invocation
+    # writes this shared session's conf (registry.policy_session), so the
+    # threads cannot race on it.
     t0 = time.perf_counter()
-    with suppress_conf_mutation():
-        with ThreadPoolExecutor(max_workers=len(bench_specs)) as pool:
-            list(pool.map(_run_one, bench_specs.items()))
+    with ThreadPoolExecutor(max_workers=len(bench_specs)) as pool:
+        list(pool.map(_run_one, bench_specs.items()))
     concurrent_total = round(time.perf_counter() - t0, 4)
 
     detail = {

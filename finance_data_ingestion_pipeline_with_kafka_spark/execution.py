@@ -13,7 +13,7 @@ import threading
 import weakref
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 #: Last ENGINE_RELIABLE_CHECKPOINT value actually applied via
 #: setCheckpointDir. Tracked here instead of reverse-parsing
@@ -113,18 +113,23 @@ _OFROWS_OK: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _OFROWS_WARNED = False
 
 
-def rewrap_analyzed(df: DataFrame) -> DataFrame | None:
+def rewrap_analyzed(
+    df: DataFrame, session: SparkSession | None = None
+) -> DataFrame | None:
     """Fresh Dataset over ``df``'s memoized ANALYZED plan — re-executes
     every stage (new RDD, no shuffle-stage reuse), the prepared-statement
-    rewrap both plan caches use. Returns ``None`` when the JVM-internal
-    ``org.apache.spark.sql.classic.Dataset.ofRows`` hook is unavailable
-    (non-classic session, Connect mode, moved internals): callers fall
-    back to a full rebuild. The capability is probed at most once per
+    rewrap both plan caches use. With ``session``, the fresh Dataset
+    belongs to that session instead of ``df``'s, so it plans and runs
+    under that session's runtime conf (the CC loop re-homes its edge set
+    onto a narrow-width child this way). Returns ``None`` when the
+    JVM-internal ``org.apache.spark.sql.classic.Dataset.ofRows`` hook is
+    unavailable (non-classic session, Connect mode, moved internals):
+    callers fall back to a full rebuild. The capability is probed at most once per
     session, and the first fallback logs a one-time warning — a Spark
     upgrade that breaks the hook must not silently re-pay the ~1 s
     construction this rewrap exists to remove (ADVICE r16)."""
     global _OFROWS_WARNED
-    spark = df.sparkSession
+    spark = session if session is not None else df.sparkSession
     ok = _OFROWS_OK.get(spark)
     if ok is False:
         return None

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.core import DEC, davg, dsum
-from ..registry import query
+from ..registry import query, sized
 
 
 @query(
@@ -34,7 +34,7 @@ from ..registry import query
     """,
     tags=("A1",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[A1] Flagship: TPC-H-Q1-style grouped hash aggregation (the

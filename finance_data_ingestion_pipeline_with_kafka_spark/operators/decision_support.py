@@ -1245,9 +1245,8 @@ def product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top_revenue_orders there is NO broadcast() hint anywhere in this
     # query — whether the filtered customer side builds a broadcast hash
     # table is entirely the planner's runtime call, which is what AQE's
-    # exact-bytes shuffle->broadcast conversion exists for. keep_aqe so
-    # that conversion stays armed at every data scale.
-    keep_aqe=True,
+    # exact-bytes shuffle->broadcast conversion exists for. No policy, so
+    # it runs on the caller's session with that conversion armed.
 )
 def shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J1/J2/A1/O4] TPC-H Q3 shipping-priority report with an UNHINTED

@@ -18,8 +18,9 @@ from ..functions.core import davg
 from ..execution import (  # re-export: the dedup pipeline is its historical home
     materialize,
     materialize_counted,
+    rewrap_analyzed,
 )
-from ..registry import query
+from ..registry import ExecPolicy, policy_session, query, sized
 from .text import TOKEN_SPLIT, tokens
 
 # MinHash parameters: 16 permutations in 4 bands × 4 rows. With Jaccard
@@ -51,7 +52,7 @@ SHINGLE_N = 3
     # fits, and the tiny-input AQE-off static path applies cleanly.
     # Measured (interleaved same-JVM A/B, min-of-5 × 2 rounds, sf0.1):
     # unsized 0.32-0.43 s vs sized 0.175-0.200 s.
-    sized_partitions=True,
+    policy=sized,
 )
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U4] Exact dedup via canonical-fingerprint hash-groupBy: one shuffle
@@ -394,21 +395,22 @@ SELECT doc_a, doc_b, jaccard FROM (
 _DEDUP_WIDTH_EXPLOSION = 32
 
 
-def _dedup_shuffle_width(spark: SparkSession, sf_dir: str) -> int | None:
-    """Data-aware shuffle width for the minhash pipeline's tiny-bytes
-    exchanges, or ``None`` to leave the session untouched (r17, guide
-    §2.2/§2.4). Measured at sf0.1 (interleaved same-JVM, min/med of 5):
-    the signatures+candidates checkpoint at the session's static width
+def _dedup_shuffle_width(spark: SparkSession, sf_dir: str) -> ExecPolicy | None:
+    """Execution policy for the dedup pipelines' tiny-bytes exchanges: AQE
+    off at a data-aware static width, or ``None`` to run on the caller's
+    session as it is (r17, guide §2.2/§2.4). Measured at sf0.1
+    (interleaved same-JVM, min/med of 5): the signatures+candidates
+    checkpoint at the session's static width
     32 ran 0.975/1.231 s vs 0.427/0.472 s at 8 — three exchanges of
     ~1 MB shared among 32 sub-millisecond reduce tasks each is pure
     scheduling (AQE's coalescing cannot help: parallelismFirst keeps
     defaultParallelism partitions by design — session.py). The width
     derives from the MEASURED documents bytes × replication ×
     ``_DEDUP_WIDTH_EXPLOSION``, floored at 8 and capped at the session's
-    own setting, so a lake-scale corpus (or the 10× crossover's
-    replicated scan) keeps full width — the knob only removes overhead
-    from inputs whose explosion-inflated size still fits single-digit
-    partitions."""
+    own effective setting (200 when it was never set), so a lake-scale
+    corpus (or the 10× crossover's replicated scan) keeps full width —
+    the knob only removes overhead from inputs whose explosion-inflated
+    size still fits single-digit partitions."""
     import os as _os
 
     try:
@@ -418,40 +420,13 @@ def _dedup_shuffle_width(spark: SparkSession, sf_dir: str) -> int | None:
     replicate = max(int(_os.environ.get("ENGINE_SCAN_REPLICATE", "1")), 1)
     eff = bytes_ * replicate * _DEDUP_WIDTH_EXPLOSION
     try:
-        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        # the effective value: a default here would stand in for a key
+        # the session never set, whose effective width is Spark's 200
+        session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
         return None
     n = max(8, min(session_parts, eff // (8 << 20)))
-    return int(n) if n < session_parts else None
-
-
-from contextlib import contextmanager as _contextmanager
-
-
-@_contextmanager
-def _narrowed_shuffle(spark: SparkSession, n_parts: int | None):
-    """Scoped static-width shuffle for a dedup pipeline's checkpointed
-    stages: same save/restore + concurrent-phase-freeze discipline as the
-    CC loop's conf guard (and the same single-query-at-a-time caveat —
-    the narrowing is session-visible while active, a perf wobble only,
-    never correctness). No-op when ``n_parts`` is None or the registry's
-    concurrent freeze is on."""
-    from .. import registry as _registry
-
-    if n_parts is None or _registry._SUPPRESS_CONF_MUTATION:
-        yield
-        return
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+    return ExecPolicy(False, int(n)) if n < session_parts else None
 
 
 @query(
@@ -470,10 +445,25 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-portable (see ``minhash_signatures``), so the whole pipeline —
     including which candidate pairs the banding surfaces — has an exact
     DuckDB twin and the driver hash-compares it; injected-near-dup tests
-    additionally pin recall behavior."""
-    docs = load_table(spark, sf_dir, "documents")
-    with _narrowed_shuffle(spark, _dedup_shuffle_width(spark, sf_dir)):
-        return minhash_pairs(docs)
+    additionally pin recall behavior.
+
+    The pipeline's checkpointed stages run under ``_dedup_shuffle_width``
+    on a child session and the verified pairs come back on ``spark``, so
+    the composites that call this fn directly (near_dup_clusters and the
+    survivor/stats queries over it) get the same narrowing as the
+    catalog entry, and their own later stages keep the caller's width."""
+    narrow = policy_session(spark, _dedup_shuffle_width(spark, sf_dir))
+    return _on_session(minhash_pairs(load_table(narrow, sf_dir, "documents")), spark)
+
+
+def _on_session(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df`` re-homed onto ``session`` (``rewrap_analyzed``): it plans
+    and runs under that session's conf. ``df`` itself when it is already
+    there or the rewrap hook is unavailable."""
+    if df.sparkSession is session:
+        return df
+    out = rewrap_analyzed(df, session)
+    return out if out is not None else df
 
 
 def minhash_pairs(docs: DataFrame) -> DataFrame:
@@ -867,7 +857,7 @@ def minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17: explosion-aware static width in the measured-tiny regime only
     # (interleaved same-JVM A/B at sf0.1, noop min/med: 0.679/0.728 at
     # session width 32 -> 0.599/0.653 at 8); None above the regime
-    width_fn=lambda spark, sf_dir: _dedup_shuffle_width(spark, sf_dir),
+    policy=_dedup_shuffle_width,
 )
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U4] Exact word-bigram Jaccard with (lang, length-bucket) blocking —
@@ -1153,7 +1143,7 @@ def _simhash_oracle() -> str:
     # r17: explosion-aware static width in the measured-tiny regime only
     # (interleaved same-JVM A/B at sf0.1, noop min/med: 0.851/0.934 at
     # session width 32 -> 0.543/0.588 at 8); None above the regime
-    width_fn=lambda spark, sf_dir: _dedup_shuffle_width(spark, sf_dir),
+    policy=_dedup_shuffle_width,
 )
 def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U4] SimHash near-dup: 4×15-bit band blocking, then Hamming
@@ -1459,52 +1449,28 @@ def connected_components(
     # floored at 1 and capped at the session's own shuffle.partitions,
     # so a 100 TB edge set keeps full cluster parallelism (the knob can
     # only remove overhead from loops too small to need the width; same
-    # pattern as registry's tiny-input static path). AQE is switched
-    # off for the loop only in the small regime, where adaptive
-    # replanning per materialized stage buys nothing. Conf mutations
-    # respect the registry's concurrent-phase freeze and are restored
-    # in the finally below.
-    from .. import registry as _registry
-
+    # pattern as registry's tiny-input static path). In the small
+    # regime the loop runs AQE off on a child session at that width
+    # (``registry.policy_session``): the checkpointed edge set is
+    # re-homed onto it, every round plans there, and the result is
+    # re-homed back, so nothing else planned on the caller's session
+    # (another query, a streaming micro-batch) sees the narrow width.
     spark = edges.sparkSession
     _LOOP_EDGES_PER_PARTITION = 1 << 16
-    manage_conf = (
-        not _registry._SUPPRESS_CONF_MUTATION
-        and n_e < 64 * _LOOP_EDGES_PER_PARTITION
-    )
-    # SESSION-GLOBAL mutation, single-query-at-a-time assumption (ADVICE
-    # r16): the narrowed width is visible to anything ELSE planned on
-    # this session while the loop runs. The registry's concurrent phase
-    # is covered by the _SUPPRESS_CONF_MUTATION freeze above; any other
-    # concurrent user of the same session (e.g. an active streaming
-    # micro-batch planning a batch mid-loop) would inherit the narrow
-    # width for that plan — a perf wobble, never a correctness issue,
-    # and only in the <4.2M-edge regime where the guard fires at all.
-    saved_conf: dict[str, str] = {}
-    if manage_conf:
-        saved_conf = {
-            "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled"),
-            "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
-        }
+    if n_e < 64 * _LOOP_EDGES_PER_PARTITION:
         try:
-            session_parts = int(saved_conf["spark.sql.shuffle.partitions"] or "32")
+            session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         except ValueError:
             # non-integer conf value (e.g. "auto" from an external
-            # resource manager): leave the session untouched rather
-            # than raise mid-query (ADVICE r16)
-            manage_conf = False
-            saved_conf = {}
-    if manage_conf:
-        n_parts = max(1, min(session_parts,
-                             n_e // _LOOP_EDGES_PER_PARTITION + 1))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        return _cc_loop(e, n_e, nodes if not assume_canonical else None,
-                        assume_canonical, max_iter)
-    finally:
-        for k, v in saved_conf.items():
-            spark.conf.set(k, v)
+            # resource manager): run the loop on the caller's session
+            # rather than raise mid-query (ADVICE r16)
+            session_parts = None
+        if session_parts is not None:
+            n_parts = max(1, min(session_parts, n_e // _LOOP_EDGES_PER_PARTITION + 1))
+            e = _on_session(e, policy_session(spark, ExecPolicy(False, n_parts)))
+    out = _cc_loop(e, n_e, nodes if not assume_canonical else None,
+                   assume_canonical, max_iter)
+    return _on_session(out, spark)
 
 
 #: One contraction round — ``_small_star(_large_star(e))`` — as a single
@@ -1566,8 +1532,7 @@ def _cc_loop(
     max_iter: int,
 ) -> DataFrame:
     """The alternating-star contraction loop body of
-    ``connected_components`` (factored out so the data-aware conf scope
-    wraps exactly the loop's actions)."""
+    ``connected_components``; it runs on ``e``'s session."""
     for _ in range(max_iter):
         # Two-tier fixed-point check (r16, guide §2.4): both sides are
         # DISTINCT canonical sets, so unequal counts prove inequality

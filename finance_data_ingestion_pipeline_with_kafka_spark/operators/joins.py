@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.core import dsum
-from ..registry import query
+from ..registry import query, sized, tiny_static
 
 
 @query(
@@ -36,18 +36,11 @@ from ..registry import query
     """,
     tags=("J1", "A1", "O4"),
     bench=True,
-    sized_partitions=True,
-    # the filtered customer⋈orders side only proves broadcast-small at
-    # execution time — above the tiny threshold AQE's exact-bytes
-    # shuffle→broadcast conversion is load-bearing (measured: AQE on
-    # 0.88 s at 30× vs the unhinted AQE-off 1.24 s)
-    keep_aqe=True,
-    # ...but in the tiny regime the fn below steers the broadcast itself
-    # (data-aware hint), so the static plan is already the good one and
-    # AQE's per-stage replanning latency buys nothing (r17, guide §3.1;
-    # interleaved same-JVM A/B at sf0.1: AQE 0.613/0.670 min/med →
-    # AQE-off static + steer 0.288/0.353)
-    tiny_static=True,
+    # static AQE-off plan in the tiny regime, where the fn below steers
+    # the broadcast itself; plain AQE above it, where the runtime
+    # shuffle→broadcast conversion is load-bearing (measurements in the
+    # registry module docstring)
+    policy=tiny_static,
 )
 def top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J1] TPC-H-Q3-shaped fact⋈fact⋈dim join + grouped agg + top-k.
@@ -103,7 +96,7 @@ def top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("J2", "A1"),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def broadcast_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J2] Fact ⋈ broadcast dims — the 101-row symbol-table pattern
@@ -271,7 +264,7 @@ def range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("J1", "J2", "A1"),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J1/J2] TPC-H-Q5-shaped 6-way join: local-supplier revenue per

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..registry import query
+from ..registry import query, sized
 
 
 @query(
@@ -29,7 +29,7 @@ from ..registry import query
     """,
     tags=("P8", "F6"),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[P8/F6] Range + between + comparison predicates with computed

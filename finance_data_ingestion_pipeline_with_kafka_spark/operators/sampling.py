@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..registry import query
+from ..registry import query, sized
 
 #: first-two-hex-chars bucket of the row's content hash: 256 uniform bins.
 def _hash_bucket(key: F.Column) -> F.Column:
@@ -37,7 +37,7 @@ _HASH_BUCKET_SQL = "substr(md5(CAST({key} AS VARCHAR)), 1, 2)"
     """,
     tags=("U6",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment (93.75 / 3.125 / 3.125 %)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.core import davg, dsum
-from ..registry import query
+from ..registry import query, sized
 
 N_QUERY_VECS = 5  # vec_id 0..4 serve as the query set
 TOP_K = 10
@@ -133,7 +133,7 @@ _ORACLE_COSINE = """
     oracle=_ORACLE_COSINE.format(nq=N_QUERY_VECS, k=TOP_K),
     tags=("U5",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U5] Brute-force cosine top-k as a vectorized Arrow kernel:
@@ -609,7 +609,7 @@ def _ivf_topk(
     )
 
 
-@query("ivf_ann", oracle=_ivf_oracle(), tags=("U5",), sized_partitions=True)
+@query("ivf_ann", oracle=_ivf_oracle(), tags=("U5",), policy=sized)
 def ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U5] IVF ANN at the default N_PROBE — see ``_ivf_topk`` for the
     full design discussion (the builder is shared with
@@ -1177,7 +1177,7 @@ def _pq_wide(spark: SparkSession, sf_dir: str):
     return wide, d6s
 
 
-@query("pq_ann", oracle=_PQ_ANN_ORACLE, tags=("U5",), sized_partitions=True)
+@query("pq_ann", oracle=_PQ_ANN_ORACLE, tags=("U5",), policy=sized)
 def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U5] Asymmetric-distance (ADC) search over the PQ codes — the
     end of the product-quantization path: each query precomputes a
@@ -2457,7 +2457,7 @@ _IVFPQ_ORACLE = (
 )
 
 
-@query("ivfpq_ann", oracle=_IVFPQ_ORACLE, tags=("U5",), sized_partitions=True)
+@query("ivfpq_ann", oracle=_IVFPQ_ORACLE, tags=("U5",), policy=sized)
 def ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U5] IVF-PQ compound index (the FAISS ``IndexIVFPQ`` architecture,
     re-expressed Spark-first): coarse quantizer cells from ``ivf_ann``'s

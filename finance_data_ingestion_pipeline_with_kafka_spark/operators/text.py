@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.core import DEC, davg
-from ..registry import query
+from ..registry import query, sized
 
 # Tiny per-language stopword anchors for the n-gram/stopword language-ID
 # heuristic. Real corpora would use a larger table broadcast as a dim.
@@ -46,7 +46,7 @@ def tokens(col: str = "text") -> F.Column:
     """,
     tags=("U6",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U6] Token counting + character-class stats — per-row expression
@@ -239,7 +239,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("U6",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U6] TF-IDF as pure relational algebra: term frequency (groupBy),

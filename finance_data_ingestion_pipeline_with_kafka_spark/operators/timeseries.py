@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.core import DEC, davg, dsum, dsum_scaled, snap_scaled
-from ..registry import query
+from ..registry import query, sized
 
 MACD_WINDOW = 50  # lag truncation, matching the `ewma` query's frame
 _MACD_Q_FAST = 11 / 13  # 1 - 2/(12+1)
@@ -47,7 +47,7 @@ _MACD_W_SIG = 1 - _MACD_Q_SIG**9
     """,
     tags=("T7", "A2"),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[T7] Tumbling event-time window — the 1-minute bar grid generalized.
@@ -110,7 +110,7 @@ def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("T9",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[T9] Session windows (30-minute inactivity gap) — trading-burst
@@ -180,7 +180,7 @@ def _purchase_click_sides(e: DataFrame) -> DataFrame:
     """,
     tags=("J5",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[J5] As-of join — for each purchase, the latest click at-or-before
@@ -258,7 +258,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("A2",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def ohlcv_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[A2] OHLCV bar builder — the aggregation contract behind the
@@ -377,7 +377,7 @@ def last_closed_bar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("A2",),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def multi_resolution_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[A2] Hypertable-style continuous-aggregate rollup: 6-hour bars

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.core import DEC
-from ..registry import query
+from ..registry import query, sized
 
 
 @query(
@@ -31,7 +31,7 @@ from ..registry import query
     """,
     tags=("W1", "O1"),
     bench=True,
-    sized_partitions=True,
+    policy=sized,
 )
 def window_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[W1] Per-group top-k via row_number/rank/dense_rank — the

@@ -16,6 +16,46 @@ Determinism rules enforced across the catalog (SURVEY §7 hard parts):
 * ``first``/``last`` style picks use ``min_by``/``max_by`` with a total
   ordering, never order-dependent ``F.first`` under shuffle.
 * Every computed column is aliased identically in Spark and oracle SQL.
+
+Execution policy. A query may declare a ``policy``: a function of
+``(spark, sf_dir)`` that returns an :class:`ExecPolicy` (AQE on or off,
+and a partition count) or ``None``. The registry wrapper resolves it
+once per invocation and runs the query on :func:`policy_session`: the
+caller's session for ``None``, otherwise a cached child session whose
+runtime conf is the caller's plus only the policy's keys. The caller's
+session is never written, so streaming micro-batches and other queries
+planned on it concurrently keep its AQE setting and shuffle width. Three
+policies exist, each data-aware:
+
+* :func:`sized` — the interactive scan-agg surface. Below
+  ``_AQE_OFF_MAX_BYTES`` of input it runs AQE off at a static width of
+  ``min(sized_partition_num, cores)``; above it, AQE on with
+  ``sized_partition_num`` as the ``initialPartitionNum`` floor. Not for
+  the dedup family, whose shuffles are explosion-dominated (shingle rows
+  ≫ input bytes, so a bytes heuristic underestimates).
+* :func:`tiny_static` — the tiny branch of :func:`sized` and ``None``
+  above it: plain AQE on the caller's session, no floor. For
+  top_revenue_orders, whose plan above the threshold depends on AQE's
+  runtime shuffle→broadcast conversion (its filtered customer⋈orders
+  side only proves small at execution time, an exact-bytes check no
+  static hint can replace scale-safely). Measured: AQE on 0.44/0.88 s
+  at 1×/30× vs AQE off 0.72/1.24 s, and the floor's bytes proxy
+  mis-sizes a join whose cost is the probe side (floor 62 at 30× ran
+  1.20 s vs 0.87 s without). In the tiny regime its fn steers the
+  broadcast itself (``tiny_input``), so the static plan is already the
+  good one (sf0.1 A/B: AQE 0.613/0.670 min/med vs static + steer
+  0.288/0.353).
+* ``operators.dedup._dedup_shuffle_width`` — the dedup pipelines'
+  explosion-aware static width, ``None`` outside its measured-tiny
+  regime.
+
+Two stages choose a policy mid-query instead, because their callers are
+other queries' fns: ``minhash_near_dup``'s checkpointed stages (under
+``_dedup_shuffle_width``) and the connected-components loop (from its
+measured edge count). Each runs on a :func:`policy_session` child and
+hands its result back on the caller's session.
+
+A query with no policy runs on the caller's session as the caller set it.
 """
 
 from __future__ import annotations
@@ -23,10 +63,31 @@ from __future__ import annotations
 import threading
 import weakref
 from collections.abc import Callable
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+@dataclass(frozen=True)
+class ExecPolicy:
+    """How one invocation executes. ``aqe=False`` runs statically at
+    ``partitions`` shuffle partitions. ``aqe=True`` runs adaptively, with
+    ``partitions`` (when set) as AQE's ``initialPartitionNum`` floor."""
+
+    aqe: bool
+    partitions: int | None = None
+
+    def confs(self) -> dict[str, str]:
+        """The runtime conf keys this policy sets on its child session."""
+        if not self.aqe:
+            return {_AQE_KEY: "false", _SHUFFLE_KEY: str(self.partitions)}
+        out = {_AQE_KEY: "true"}
+        if self.partitions:
+            out[_INIT_PARTITION_KEY] = str(self.partitions)
+        return out
+
+
+Policy = Callable[[SparkSession, str], ExecPolicy | None]
 
 
 @dataclass(frozen=True)
@@ -41,41 +102,13 @@ class QuerySpec:
     #: verification kernels) or that iterate to convergence — at 10×
     #: their DuckDB twins become the phase's wall-clock, not its signal.
     crossover: bool = True
-    #: data-aware reduce-parallelism floor (see ``sized_partition_num``):
-    #: before each invocation, AQE's ``initialPartitionNum`` is set from
-    #: the query's input volume instead of inheriting the static
-    #: ``shuffle.partitions``. On for the interactive scan-agg surface,
-    #: off for the dedup family (whose shuffles are explosion-dominated —
-    #: shingle rows ≫ input bytes, so a bytes heuristic underestimates).
-    sized_partitions: bool = False
-    #: opt OUT of the tiny-input AQE-off path (see
-    #: ``_apply_sized_partitions``): set on sized queries whose plan
-    #: depends on AQE's runtime shuffle→broadcast conversion (a join
-    #: whose build side only proves small at execution time — exact-bytes
-    #: check, so no static hint can replace it scale-safely). Measured on
-    #: top_revenue_orders: AQE on 0.44/0.88 s at 1×/30× vs AQE off
-    #: 0.72/1.24 s — the conversion pays for the adaptive stage latency
-    #: severalfold.
-    keep_aqe: bool = False
-    #: opt a ``keep_aqe`` query back IN to the tiny-input AQE-off static
-    #: path (r17): ``keep_aqe`` exists because a static plan without
-    #: runtime re-planning picked a bad join strategy on these queries —
-    #: but a query whose fn applies a data-aware strategy hint in the
-    #: tiny regime (``tiny_input``; top_revenue_orders' broadcast steer
-    #: of the filtered customer⋈orders side) gets the GOOD static plan
-    #: there, and the adaptive stage latency is again pure overhead.
-    #: Above the tiny threshold the flag is inert and ``keep_aqe``
-    #: semantics apply unchanged (plain AQE, runtime conversion armed).
-    tiny_static: bool = False
-    #: query-supplied shuffle-width policy (r17): called per invocation
-    #: with (spark, sf_dir); a positive int runs the query AQE-off at
-    #: that static width, ``None`` restores session defaults. For
-    #: operator families whose post-shuffle volume the generic bytes
-    #: heuristic mis-models (the dedup pipelines: map-side shingle
-    #: explosion, tiny post-agg exchanges) — the policy encodes the
-    #: family's own scale arithmetic (explosion allowance, replication)
-    #: and must return None outside its measured-tiny regime.
-    width_fn: Callable[[SparkSession, str], int | None] | None = None
+    #: execution policy, resolved per invocation with the caller's
+    #: ``(spark, sf_dir)``: an :class:`ExecPolicy` runs the query on a
+    #: child session carrying it (:func:`policy_session`), ``None`` (or
+    #: no policy) on the caller's session. Policies must be data-aware
+    #: and return ``None`` or an adaptive policy at lake scale; see the
+    #: module docstring for the three in use and their measurements.
+    policy: Policy | None = None
 
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -105,6 +138,13 @@ def _dir_bytes(sf_dir: str) -> int:
     return cached
 
 
+def _cores(spark: SparkSession) -> int:
+    try:
+        return spark.sparkContext.defaultParallelism
+    except Exception:
+        return 32
+
+
 def sized_partition_num(spark: SparkSession, sf_dir: str) -> int:
     """Reduce-parallelism floor sized to input volume, not a constant.
 
@@ -125,11 +165,7 @@ def sized_partition_num(spark: SparkSession, sf_dir: str) -> int:
 
     replicate = int(os.environ.get("ENGINE_SCAN_REPLICATE", "1"))
     bytes_total = _dir_bytes(sf_dir) * max(replicate, 1)
-    try:
-        cores = spark.sparkContext.defaultParallelism
-    except Exception:
-        cores = 32
-    cap = max(64, 2 * cores)
+    cap = max(64, 2 * _cores(spark))
     return max(_SIZED_PARTITION_MIN, min(cap, bytes_total // _SIZED_PARTITION_TARGET_BYTES or _SIZED_PARTITION_MIN))
 
 
@@ -168,139 +204,62 @@ def tiny_input(sf_dir: str) -> bool:
     replicate = max(int(os.environ.get("ENGINE_SCAN_REPLICATE", "1")), 1)
     return _dir_bytes(sf_dir) * replicate < _AQE_OFF_MAX_BYTES
 
-#: First-touch snapshot of each session's shuffle.partitions, restored on
-#: every unsized (and non-tiny sized) invocation.
-_ORIG_SHUFFLE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
-#: The sized-partitions knob is a SESSION-global runtime conf. When many
-#: catalog queries run concurrently in threads on ONE session (bench.py's
-#: concurrent phase), one thread's unset/overwrite can land between
-#: another thread's set and its action planning — making the floor
-#: nondeterministic (perf noise only, never results). Concurrent callers
-#: therefore wrap the phase in ``suppress_conf_mutation()``: no thread
-#: touches the conf, every query runs under plain AQE, race-free.
-_SUPPRESS_CONF_MUTATION = False
-
-
-@contextmanager
-def suppress_conf_mutation():
-    """Race-free concurrent execution: within this context no catalog
-    invocation mutates session-global runtime confs (the data-aware
-    ``initialPartitionNum`` floor is skipped; plain AQE applies)."""
-    global _SUPPRESS_CONF_MUTATION
-    prior = _SUPPRESS_CONF_MUTATION
-    _SUPPRESS_CONF_MUTATION = True
-    try:
-        yield
-    finally:
-        _SUPPRESS_CONF_MUTATION = prior
+def tiny_static(spark: SparkSession, sf_dir: str) -> ExecPolicy | None:
+    """Policy: AQE off at ``min(sized_partition_num, cores)`` on tiny
+    input, ``None`` above it. The static width is capped at the core
+    count because without AQE nothing coalesces sliver partitions, and
+    more than one wave of sub-second tasks is pure scheduling overhead
+    (measured: 32 beats 64 at 0.5 GB on 32 cores across the floor-bound
+    family)."""
+    if not tiny_input(sf_dir):
+        return None
+    return ExecPolicy(False, min(sized_partition_num(spark, sf_dir), _cores(spark)))
 
 
-def restore_session_confs(spark: SparkSession) -> None:
-    """Restore the managed runtime confs to their pre-catalog state:
-    AQE on, the session's first-touch ``shuffle.partitions`` snapshot
-    (``_ORIG_SHUFFLE``), no ``initialPartitionNum`` floor. For callers
-    (bench.py's concurrent phase) that are about to run under
-    ``suppress_conf_mutation()`` and must not inherit whatever the last
-    sequential query left behind — in particular a tiny-input AQE-off
-    static partition count."""
-    orig_shuffle = _ORIG_SHUFFLE.get(spark)
-    if orig_shuffle is None:
-        orig_shuffle = spark.conf.get(_SHUFFLE_KEY, "32")
-        _ORIG_SHUFFLE[spark] = orig_shuffle
-    try:
-        spark.conf.unset(_INIT_PARTITION_KEY)
-    except Exception:
-        pass
-    spark.conf.set(_AQE_KEY, "true")
-    spark.conf.set(_SHUFFLE_KEY, orig_shuffle)
+def sized(spark: SparkSession, sf_dir: str) -> ExecPolicy:
+    """Policy: :func:`tiny_static` on tiny input, otherwise AQE on with
+    the data-aware ``initialPartitionNum`` floor."""
+    return tiny_static(spark, sf_dir) or ExecPolicy(True, sized_partition_num(spark, sf_dir))
 
 
-def _apply_sized_partitions(
-    spark: SparkSession,
-    sf_dir: str,
-    sized: bool,
-    keep_aqe: bool = False,
-    tiny_static: bool = False,
-    width_fn: Callable[[SparkSession, str], int | None] | None = None,
-) -> None:
-    """Set (or clear) the managed confs deterministically on EVERY catalog
-    invocation, so query ordering can never leak one query's setting into
-    the next. Two knobs, both data-aware: the AQE reduce-parallelism
-    floor (``sized_partition_num``), and AQE itself OFF below
-    ``_AQE_OFF_MAX_BYTES`` of input (tiny inputs pay adaptive
-    stage-sequencing latency for nothing). Runtime-conf writes are cheap
-    (~1 ms py4j) and read at action planning time, which follows this
-    call."""
-    if _SUPPRESS_CONF_MUTATION:
-        return
-    orig_shuffle = _ORIG_SHUFFLE.get(spark)
-    if orig_shuffle is None:
-        orig_shuffle = spark.conf.get(_SHUFFLE_KEY, "32")
-        _ORIG_SHUFFLE[spark] = orig_shuffle
-    if width_fn is not None:
-        # query-supplied width policy (r17): static AQE-off width when
-        # the policy fires, plain session defaults when it returns None
-        # (outside its measured-tiny regime — scale-safety lives in the
-        # policy's own arithmetic, see QuerySpec.width_fn)
-        n = width_fn(spark, sf_dir)
-        try:
-            spark.conf.unset(_INIT_PARTITION_KEY)
-        except Exception:
-            pass
-        if n:
-            spark.conf.set(_AQE_KEY, "false")
-            spark.conf.set(_SHUFFLE_KEY, str(n))
-        else:
-            spark.conf.set(_AQE_KEY, "true")
-            spark.conf.set(_SHUFFLE_KEY, orig_shuffle)
-        return
-    if sized:
-        import os
+#: Child sessions: parent session → {(policy, parent conf): child}. A
+#: child is ``cloneSession()`` of its parent (runtime conf, temp views,
+#: functions) plus the policy's keys, so everything the engine memoizes
+#: per session (plan cache, scan cache, ``cached_subplan``) follows the
+#: child on its own. ``newSession()`` would not do: it starts from the
+#: SparkContext conf and drops what the parent's session options or caller set
+#: (e.g. ``parquet.nanosAsLong``, the session timezone). Keying on the
+#: parent's runtime conf makes a conf the caller sets on the parent
+#: after a first invocation govern the next one. Weakly keyed by the
+#: parent, and capped per parent (oldest first), like the other caches.
+_CHILD_SESSIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_CHILD_SESSIONS_MAX = 16
+_CHILD_SESSIONS_LOCK = threading.Lock()
 
-        replicate = max(int(os.environ.get("ENGINE_SCAN_REPLICATE", "1")), 1)
-        n = sized_partition_num(spark, sf_dir)
-        if (not keep_aqe or tiny_static) and (
-            _dir_bytes(sf_dir) * replicate < _AQE_OFF_MAX_BYTES
-        ):
-            # tiny input: static sized plan, no adaptive re-planning.
-            # The static reduce count is additionally capped at the core
-            # count — without AQE there is no coalescing to merge sliver
-            # partitions, and >1 wave of sub-second tasks is pure
-            # scheduling overhead (measured: 32 beats 64 at 0.5 GB on 32
-            # cores across the floor-bound family).
-            try:
-                cores = spark.sparkContext.defaultParallelism
-            except Exception:
-                cores = 32
-            spark.conf.set(_AQE_KEY, "false")
-            spark.conf.set(_SHUFFLE_KEY, str(min(n, cores)))
-            try:
-                spark.conf.unset(_INIT_PARTITION_KEY)
-            except Exception:
-                pass
-        elif keep_aqe:
-            # runtime-replan-dependent plan: plain AQE, no floor — the
-            # floor's bytes proxy mis-sizes a join whose dominant cost is
-            # the probe side (measured on top_revenue_orders: floor 62 at
-            # 30× ran 1.20 s vs 0.87 s without)
-            spark.conf.set(_AQE_KEY, "true")
-            spark.conf.set(_SHUFFLE_KEY, orig_shuffle)
-            try:
-                spark.conf.unset(_INIT_PARTITION_KEY)
-            except Exception:
-                pass
-        else:
-            spark.conf.set(_AQE_KEY, "true")
-            spark.conf.set(_SHUFFLE_KEY, orig_shuffle)
-            spark.conf.set(_INIT_PARTITION_KEY, str(n))
-    else:
-        try:
-            spark.conf.unset(_INIT_PARTITION_KEY)
-        except Exception:
-            pass
-        spark.conf.set(_AQE_KEY, "true")
-        spark.conf.set(_SHUFFLE_KEY, orig_shuffle)
+
+def policy_session(spark: SparkSession, policy: ExecPolicy | None) -> SparkSession:
+    """The session an invocation under ``policy`` runs on: ``spark``
+    itself for ``None``, otherwise a cached child whose runtime conf is
+    ``spark``'s plus ``policy.confs()``. ``spark`` is never written."""
+    if policy is None:
+        return spark
+    # one py4j call: dict(spark.conf.getAll) costs ~60 ms of per-entry
+    # round trips, the JVM map's string form ~1 ms
+    key = (policy, spark._jsparkSession.conf().getAll().toString())
+    with _CHILD_SESSIONS_LOCK:
+        children = _CHILD_SESSIONS.get(spark)
+        if children is None:
+            children = _CHILD_SESSIONS.setdefault(spark, {})
+        child = children.get(key)
+        if child is None:
+            child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+            for k, v in policy.confs().items():
+                child.conf.set(k, v)
+            while len(children) >= _CHILD_SESSIONS_MAX:
+                children.pop(next(iter(children)))
+            children[key] = child
+    return child
 
 
 #: Prepared-plan cache: session → {(sf_dir, name, env fingerprint): DataFrame}.
@@ -337,31 +296,29 @@ def query(
     bench: bool = False,
     prepared: bool = True,
     crossover: bool = True,
-    sized_partitions: bool = False,
-    keep_aqe: bool = False,
-    tiny_static: bool = False,
-    width_fn: Callable[[SparkSession, str], int | None] | None = None,
+    policy: Policy | None = None,
 ):
     """Decorator registering a query in the catalog. The registered
-    callable memoizes the constructed DataFrame per (session, sf_dir,
-    env): repeat invocations reuse the analyzed plan — execution still
-    happens per action, exactly like a prepared statement.
+    callable runs the query on ``policy_session(spark, policy(spark,
+    sf_dir))`` (see :attr:`QuerySpec.policy`) and memoizes the
+    constructed DataFrame per (session, sf_dir, env): repeat invocations
+    reuse the analyzed plan — execution still happens per action,
+    exactly like a prepared statement.
 
     ``prepared=False`` opts out, for queries whose construction
     materializes data into their returned lineage (``localCheckpoint``,
     iterative loops): caching those would replay stored ROWS, not re-run
     the query."""
 
+    def session_for(spark: SparkSession, sf_dir: str) -> SparkSession:
+        return policy_session(spark, policy(spark, sf_dir) if policy else None)
+
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
         if not prepared:
             def unprepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-                _apply_sized_partitions(
-                    spark, sf_dir, sized_partitions, keep_aqe, tiny_static,
-                    width_fn,
-                )
-                return fn(spark, sf_dir)
+                return fn(session_for(spark, sf_dir), sf_dir)
 
             unprepared.__name__ = fn.__name__
             unprepared.__module__ = fn.__module__
@@ -374,16 +331,12 @@ def query(
             unprepared.__source_fn__ = fn
             QUERIES[name] = QuerySpec(
                 name=name, fn=unprepared, oracle=oracle, tags=tags, bench=bench,
-                crossover=crossover, sized_partitions=sized_partitions,
-                keep_aqe=keep_aqe, tiny_static=tiny_static, width_fn=width_fn,
+                crossover=crossover, policy=policy,
             )
             return fn
 
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _apply_sized_partitions(
-                spark, sf_dir, sized_partitions, keep_aqe, tiny_static,
-                width_fn,
-            )
+            spark = session_for(spark, sf_dir)
             per_session = _PLAN_CACHE.get(spark)
             if per_session is None:
                 per_session = _PLAN_CACHE.setdefault(spark, {})
@@ -425,8 +378,7 @@ def query(
         cached.__wrapped__ = fn
         QUERIES[name] = QuerySpec(
             name=name, fn=cached, oracle=oracle, tags=tags, bench=bench,
-            crossover=crossover, sized_partitions=sized_partitions,
-            keep_aqe=keep_aqe, tiny_static=tiny_static, width_fn=width_fn,
+            crossover=crossover, policy=policy,
         )
         return fn
 
@@ -451,7 +403,7 @@ def query(
 #:       tiny-regime coalesce, the minhash phase-B/C SQL generation and
 #:       its downstream composites, the SQL contraction round's CC
 #:       consumers (near_dup_clusters, phash_clusters/survivors,
-#:       incremental_clusters), and the width_fn registrations
+#:       incremental_clusters), and the dedup width-policy registrations
 #:       (simhash_near_dup, ngram_jaccard_pairs). Subtracted from their
 #:       freshness tiers below, as every rotation has done.
 #:   (2) ``_VERIFIED_R10`` — the 2 rows displaced from the r16 window

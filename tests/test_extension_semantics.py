@@ -3880,9 +3880,9 @@ def test_minhash_phase_bc_sql_equals_dataframe_form(spark):
 def test_dedup_width_fn_policy(spark, sf_dir):
     """r17 pin: the dedup width policy fires only in its measured-tiny
     regime (explosion-inflated documents bytes under single-digit
-    partitions), is replication-aware, and the registry applies it per
-    invocation — AQE off + static width on fire, session defaults on
-    None — while the concurrent-phase freeze suppresses it entirely."""
+    partitions), is replication-aware, and the registry runs a query
+    declaring it AQE off at the policy's width on a child session while
+    the caller's session keeps its own."""
     import os
 
     from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
@@ -3890,17 +3890,13 @@ def test_dedup_width_fn_policy(spark, sf_dir):
     )
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
         _SHUFFLE_KEY,
+        ExecPolicy,
         load_all,
-        suppress_conf_mutation,
-    )
-
-    from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
-        _apply_sized_partitions,
     )
 
     cat = load_all()
-    assert cat["simhash_near_dup"].width_fn is not None
-    assert cat["ngram_jaccard_pairs"].width_fn is not None
+    for name in ("simhash_near_dup", "ngram_jaccard_pairs"):
+        assert cat[name].policy is _dedup_shuffle_width, name
     orig_shuffle = spark.conf.get(_SHUFFLE_KEY)  # test session runs at 8
     # policy arithmetic: against a 32-wide session the sf0.01 fixture is
     # deep inside the tiny regime (floor 8); replication pushes the
@@ -3908,7 +3904,18 @@ def test_dedup_width_fn_policy(spark, sf_dir):
     # the session's own width (8) narrowing buys nothing -> None
     spark.conf.set(_SHUFFLE_KEY, "32")
     try:
-        assert _dedup_shuffle_width(spark, sf_dir) == 8
+        assert _dedup_shuffle_width(spark, sf_dir) == ExecPolicy(False, 8)
+        df = cat["simhash_near_dup"].fn(spark, sf_dir)
+        assert df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert df.sparkSession.conf.get(_SHUFFLE_KEY) == "8"
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        assert spark.conf.get(_SHUFFLE_KEY) == "32"
+        # minhash_near_dup narrows its checkpointed stages itself (its
+        # composites call the fn directly) and returns on the caller's
+        # session
+        assert cat["minhash_near_dup"].policy is None
+        assert cat["minhash_near_dup"].fn(spark, sf_dir).sparkSession is spark
+        assert spark.conf.get(_SHUFFLE_KEY) == "32"
         os.environ["ENGINE_SCAN_REPLICATE"] = "100000"
         try:
             assert _dedup_shuffle_width(spark, sf_dir) is None
@@ -3917,18 +3924,34 @@ def test_dedup_width_fn_policy(spark, sf_dir):
     finally:
         spark.conf.set(_SHUFFLE_KEY, orig_shuffle)
     assert _dedup_shuffle_width(spark, sf_dir) is None
-    # registry hook: a firing policy runs AQE-off at its width; a None
-    # policy restores session defaults; the concurrent freeze suppresses
-    _apply_sized_partitions(spark, sf_dir, False, width_fn=lambda s, d: 5)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get(_SHUFFLE_KEY) == "5"
-    _apply_sized_partitions(spark, sf_dir, False, width_fn=lambda s, d: None)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert spark.conf.get(_SHUFFLE_KEY) == orig_shuffle
-    _apply_sized_partitions(spark, sf_dir, False, width_fn=lambda s, d: 5)
-    with suppress_conf_mutation():
-        _apply_sized_partitions(spark, sf_dir, False, width_fn=lambda s, d: 7)
-        assert spark.conf.get(_SHUFFLE_KEY) == "5"  # frozen: untouched
-    cat["grouped_stats"].fn(spark, sf_dir)  # unsized: restores defaults
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert spark.conf.get(_SHUFFLE_KEY) == orig_shuffle
+    assert cat["simhash_near_dup"].fn(spark, sf_dir).sparkSession is spark
+
+
+def test_dedup_width_reads_effective_width_of_unset_conf(spark, sf_dir, monkeypatch):
+    """A session that never set spark.sql.shuffle.partitions runs at
+    Spark's default 200, and the dedup width policy caps at that, not at
+    a stand-in 32. The replication puts the explosion-inflated estimate
+    between the two caps, where they give different answers."""
+    import os
+
+    from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
+        _DEDUP_WIDTH_EXPLOSION,
+        _dedup_shuffle_width,
+    )
+    from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
+        _SHUFFLE_KEY,
+        ExecPolicy,
+    )
+
+    doc_bytes = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
+    replicate = (100 << 23) // (doc_bytes * _DEDUP_WIDTH_EXPLOSION)
+    want = doc_bytes * replicate * _DEDUP_WIDTH_EXPLOSION // (8 << 20)
+    assert 32 < want < 200
+    monkeypatch.setenv("ENGINE_SCAN_REPLICATE", str(replicate))
+    saved = spark.conf.get(_SHUFFLE_KEY)
+    spark.conf.unset(_SHUFFLE_KEY)
+    try:
+        assert spark.conf.get(_SHUFFLE_KEY) == "200"
+        assert _dedup_shuffle_width(spark, sf_dir) == ExecPolicy(False, want)
+    finally:
+        spark.conf.set(_SHUFFLE_KEY, saved)

@@ -307,7 +307,7 @@ def test_new_family_no_cartesian(spark, sf_dir, name):
 
 
 def test_q3_topk_aqe_broadcasts_dim_and_pushes_dates(spark, sf_dir):
-    """shipping_priority_topk (TPC-H Q3 shape, keep_aqe): AQE's RUNTIME
+    """shipping_priority_topk (TPC-H Q3 shape, no execution policy): AQE's RUNTIME
     size estimate must broadcast the filtered customer dim (no explicit
     broadcast hint in the query — the decision is the planner's), both
     date predicates must reach their scans, and the top-k must plan as

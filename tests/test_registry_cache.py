@@ -88,14 +88,15 @@ def test_dead_session_entries_are_released():
 
 def test_plan_cache_is_bounded(spark, sf_dir):
     spec = _catalog()["filter_project"]
-    spec.fn(spark, sf_dir)
-    per_session = registry._PLAN_CACHE[spark]
+    # the cache is per session the query runs on (a child under its policy)
+    session = spec.fn(spark, sf_dir).sparkSession
+    per_session = registry._PLAN_CACHE[session]
     # flood with synthetic entries well past the cap; the real insert path
     # must evict oldest-first rather than grow without bound
     for i in range(registry._PLAN_CACHE_MAX + 10):
         per_session[("synthetic", str(i))] = object()
     spec.fn(spark, f"{sf_dir}/")  # distinct sf_dir key → fresh insert
-    assert len(registry._PLAN_CACHE[spark]) <= registry._PLAN_CACHE_MAX
+    assert len(registry._PLAN_CACHE[session]) <= registry._PLAN_CACHE_MAX
 
 
 def test_scan_cache_is_bounded(spark, sf_dir):
@@ -130,76 +131,73 @@ def test_sized_partition_policy(spark, sf_dir, monkeypatch):
     assert capped == max(64, 2 * spark.sparkContext.defaultParallelism)
 
 
+def _exchange_widths(df) -> list[int]:
+    """Partition counts of the hash/range exchanges in ``df``'s executed
+    plan (AQE's initial plan when it is adaptive); plans, runs nothing."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [int(n) for n in re.findall(r"Exchange \w+partitioning\(.*, (\d+)\), ", plan)]
+
+
+def _adaptive(df) -> bool:
+    return "AdaptiveSparkPlan" in df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_sized_conf_set_and_cleared_per_query(spark, sf_dir):
-    """A sized query sets the managed AQE conf for its own execution; the
-    next unsized catalog call clears it — ordering can't leak."""
+    """A sized query resolves its policy per invocation and runs on a
+    child session carrying it; an unpolicied query runs on the caller's
+    session as the caller set it. Test sf_dirs are far below
+    _AQE_OFF_MAX_BYTES, so the sized policy is the tiny-input one: AQE
+    off at a static width of min(sized_partition_num, cores)."""
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
-        _INIT_PARTITION_KEY,
+        _SHUFFLE_KEY,
+        ExecPolicy,
+        sized,
+        sized_partition_num,
     )
 
-    from finance_data_ingestion_pipeline_with_kafka_spark.registry import _SHUFFLE_KEY
-
     cat = _catalog()
-    assert cat["pricing_summary"].sized_partitions
-    assert not cat["grouped_stats"].sized_partitions
-    orig_shuffle = spark.conf.get(_SHUFFLE_KEY)
-    cat["pricing_summary"].fn(spark, sf_dir)
-    # test sf_dirs are far below _AQE_OFF_MAX_BYTES, so sized queries take
-    # the tiny-input path: AQE off + data-sized STATIC shuffle partitions
-    # (adaptive re-planning is pure latency on tiny inputs); the AQE floor
-    # stays unset on this path
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get(_SHUFFLE_KEY) == "8"
-    assert spark.conf.get(_INIT_PARTITION_KEY) is None
-    cat["grouped_stats"].fn(spark, sf_dir)
-    assert spark.conf.get(_INIT_PARTITION_KEY) is None  # still unset
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"  # restored
-    assert spark.conf.get(_SHUFFLE_KEY) == orig_shuffle  # restored
+    assert cat["pricing_summary"].policy is sized
+    assert cat["grouped_stats"].policy is None
+    width = min(sized_partition_num(spark, sf_dir), spark.sparkContext.defaultParallelism)
+    assert sized(spark, sf_dir) == ExecPolicy(False, width)
+    df = cat["pricing_summary"].fn(spark, sf_dir)
+    child = df.sparkSession
+    assert child is not spark
+    assert child.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert child.conf.get(_SHUFFLE_KEY) == str(width)
+    assert not _adaptive(df)
+    assert _exchange_widths(df) and set(_exchange_widths(df)) == {width}
+    # the same policy under the same parent conf reuses the same child
+    assert cat["tumbling_window_agg"].fn(spark, sf_dir).sparkSession is child
+    plain = cat["grouped_stats"].fn(spark, sf_dir)
+    assert plain.sparkSession is spark
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert _adaptive(plain)
 
 
 def test_sized_conf_large_input_keeps_aqe_with_floor(spark, sf_dir, monkeypatch):
-    """Above _AQE_OFF_MAX_BYTES the sized path must keep AQE ON with the
+    """Above _AQE_OFF_MAX_BYTES the sized policy keeps AQE ON with the
     data-aware initialPartitionNum floor — the 100 TB posture (runtime
     skew/broadcast re-planning) is never traded away on real volumes."""
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
         _INIT_PARTITION_KEY,
         _SHUFFLE_KEY,
+        ExecPolicy,
+        sized_partition_num,
     )
 
     cat = _catalog()
-    orig_shuffle = spark.conf.get(_SHUFFLE_KEY)
     monkeypatch.setenv("ENGINE_SCAN_REPLICATE", "1000000")  # force >= 1 GB
-    cat["pricing_summary"].fn(spark, sf_dir)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert spark.conf.get(_INIT_PARTITION_KEY) is not None
-    assert spark.conf.get(_SHUFFLE_KEY) == orig_shuffle
-    monkeypatch.delenv("ENGINE_SCAN_REPLICATE")
-    cat["grouped_stats"].fn(spark, sf_dir)  # clean up the managed confs
-
-
-def test_suppress_conf_mutation_freezes_sized_conf(spark, sf_dir):
-    """bench.py's concurrent phase runs mixed sized/unsized queries from
-    ~20 threads on one session; inside suppress_conf_mutation() no
-    catalog call may touch the session-global AQE floor (race-free by
-    not-writing, not by locking)."""
-    from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
-        _INIT_PARTITION_KEY,
-        suppress_conf_mutation,
-    )
-
-    cat = _catalog()
-    try:
-        spark.conf.unset(_INIT_PARTITION_KEY)
-    except Exception:
-        pass
-    with suppress_conf_mutation():
-        cat["pricing_summary"].fn(spark, sf_dir)  # sized: would set
-        assert spark.conf.get(_INIT_PARTITION_KEY) is None
-        spark.conf.set(_INIT_PARTITION_KEY, "17")
-        cat["grouped_stats"].fn(spark, sf_dir)  # unsized: would unset
-        assert spark.conf.get(_INIT_PARTITION_KEY) == "17"
-    # outside the context, mutation resumes
-    cat["grouped_stats"].fn(spark, sf_dir)
+    floor = sized_partition_num(spark, sf_dir)
+    assert cat["pricing_summary"].policy(spark, sf_dir) == ExecPolicy(True, floor)
+    df = cat["pricing_summary"].fn(spark, sf_dir)
+    child = df.sparkSession
+    assert child.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert child.conf.get(_INIT_PARTITION_KEY) == str(floor)
+    assert child.conf.get(_SHUFFLE_KEY) == spark.conf.get(_SHUFFLE_KEY)
+    assert _adaptive(df) and set(_exchange_widths(df)) == {floor}
     assert spark.conf.get(_INIT_PARTITION_KEY) is None
 
 
@@ -216,48 +214,49 @@ def test_session_builder_perf_confs(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+
 def test_keep_aqe_query_runs_plain_aqe(spark, sf_dir):
-    """A keep_aqe query WITHOUT the tiny_static opt-in
-    (shipping_priority_topk — its whole point is the unhinted AQE
-    runtime build-side decision) must run with AQE ON, NO partition
-    floor and the session's own shuffle.partitions — at any input size."""
+    """shipping_priority_topk (its whole point is the unhinted AQE
+    runtime build-side decision) declares no policy: it runs on the
+    caller's session, AQE ON, NO partition floor and the session's own
+    shuffle.partitions — at any input size."""
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
         _INIT_PARTITION_KEY,
         _SHUFFLE_KEY,
     )
 
     cat = _catalog()
-    assert cat["shipping_priority_topk"].keep_aqe
-    assert not cat["shipping_priority_topk"].tiny_static
-    orig_shuffle = spark.conf.get(_SHUFFLE_KEY)
-    cat["shipping_priority_topk"].fn(spark, sf_dir)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert cat["shipping_priority_topk"].policy is None
+    df = cat["shipping_priority_topk"].fn(spark, sf_dir)
+    assert df.sparkSession is spark
     assert spark.conf.get(_INIT_PARTITION_KEY) is None
-    assert spark.conf.get(_SHUFFLE_KEY) == orig_shuffle
-    cat["grouped_stats"].fn(spark, sf_dir)  # clean managed confs
+    assert _adaptive(df)
+    assert set(_exchange_widths(df)) == {int(spark.conf.get(_SHUFFLE_KEY))}
 
 
 def test_tiny_static_keep_aqe_query_takes_static_path(spark, sf_dir):
-    """top_revenue_orders (keep_aqe + tiny_static, r17): in the tiny
-    regime it now takes the AQE-off static-partition path — its fn's
-    data-aware broadcast steer makes the static plan the good one — and
-    its analyzed plan carries the broadcast hint on the customer⋈orders
+    """top_revenue_orders (tiny_static policy, r17): in the tiny regime
+    it takes the AQE-off static-partition path — its fn's data-aware
+    broadcast steer makes the static plan the good one — and its
+    analyzed plan carries the broadcast hint on the customer⋈orders
     side. Above the tiny threshold (simulated via ENGINE_SCAN_REPLICATE)
-    the hint disappears and plain-AQE keep_aqe semantics return."""
+    the policy is None: the hint disappears and the query runs plain AQE
+    on the caller's session."""
     import os
 
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
-        _INIT_PARTITION_KEY,
         tiny_input,
+        tiny_static,
     )
 
     cat = _catalog()
     spec = cat["top_revenue_orders"]
-    assert spec.keep_aqe and spec.tiny_static
+    assert spec.policy is tiny_static
     assert tiny_input(sf_dir)
     df = spec.fn(spark, sf_dir)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get(_INIT_PARTITION_KEY) is None
+    assert df.sparkSession is not spark
+    assert df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert not _adaptive(df)
     # two broadcast hints in the analyzed plan: the customer dim + the
     # steered customer⋈orders side
     analyzed = str(df._jdf.queryExecution().analyzed())
@@ -265,9 +264,9 @@ def test_tiny_static_keep_aqe_query_takes_static_path(spark, sf_dir):
     os.environ["ENGINE_SCAN_REPLICATE"] = "100000"
     try:
         assert not tiny_input(sf_dir)
+        assert spec.policy(spark, sf_dir) is None
         df_big = spec.fn(spark, sf_dir)
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert spark.conf.get(_INIT_PARTITION_KEY) is None  # keep_aqe: no floor
+        assert df_big.sparkSession is spark
         analyzed_big = str(df_big._jdf.queryExecution().analyzed())
         # the steer hint is gone: what remains is the customer-dim hint
         # plus one broadcast-spine hint per replicated scan (customer,
@@ -275,31 +274,149 @@ def test_tiny_static_keep_aqe_query_takes_static_path(spark, sf_dir):
         assert analyzed_big.count("ResolvedHint (strategy=broadcast)") == 4
     finally:
         os.environ.pop("ENGINE_SCAN_REPLICATE", None)
-    cat["grouped_stats"].fn(spark, sf_dir)  # clean managed confs
 
 
-def test_restore_session_confs_resets_tiny_input_residue(spark, sf_dir):
-    """ADVICE r6: bench's concurrent phase must not inherit the last
-    sequential query's tiny-input AQE-off static partition count.
-    restore_session_confs() must put back AQE=on, the first-touch
-    shuffle.partitions snapshot, and no floor — after a sized query has
-    mutated all three."""
+def test_invocations_never_change_parent_conf(spark, sf_dir, monkeypatch):
+    """No catalog invocation writes the caller's session: its runtime
+    conf is identical before and after one invocation under each policy
+    (sized tiny, sized large, tiny_static, the dedup width, the CC loop's
+    mid-query width), and each executed plan shows its own policy. The
+    parent runs at width 32 here so that the dedup width policy fires
+    and every static width differs from the parent's."""
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
-        _INIT_PARTITION_KEY,
         _SHUFFLE_KEY,
-        restore_session_confs,
+        ExecPolicy,
+        sized_partition_num,
     )
 
     cat = _catalog()
-    orig_shuffle = spark.conf.get(_SHUFFLE_KEY)
-    # tumbling_window_agg is sized and the sf0.01 input is far below the
-    # AQE-off cutoff: it leaves AQE off + a static partition count behind
-    cat["tumbling_window_agg"].fn(spark, sf_dir)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    restore_session_confs(spark)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert spark.conf.get(_INIT_PARTITION_KEY) is None
-    assert spark.conf.get(_SHUFFLE_KEY) == orig_shuffle
+    saved = spark.conf.get(_SHUFFLE_KEY)
+    spark.conf.set(_SHUFFLE_KEY, "32")
+    try:
+        def invoke(name, run=True):
+            before = dict(spark.conf.getAll)
+            df = cat[name].fn(spark, sf_dir)
+            if run:
+                df.collect()
+            assert dict(spark.conf.getAll) == before, name
+            return df
+
+        for name in ("tumbling_window_agg", "top_revenue_orders", "simhash_near_dup"):
+            policy = cat[name].policy(spark, sf_dir)
+            assert policy is not None and not policy.aqe and policy.partitions < 32, name
+            df = invoke(name)
+            assert not _adaptive(df), name
+            assert _exchange_widths(df) and set(_exchange_widths(df)) == {policy.partitions}, name
+        invoke("near_dup_clusters")  # the CC loop narrows to 1 partition mid-query
+        with monkeypatch.context() as m:
+            m.setenv("ENGINE_SCAN_REPLICATE", "1000000")
+            floor = sized_partition_num(spark, sf_dir)
+            assert cat["pricing_summary"].policy(spark, sf_dir) == ExecPolicy(True, floor)
+            df = invoke("pricing_summary", run=False)  # planned, not run at 1e6×
+            assert _adaptive(df) and set(_exchange_widths(df)) == {floor}
+        df = invoke("shipping_priority_topk")
+        assert _adaptive(df) and set(_exchange_widths(df)) == {32}
+    finally:
+        spark.conf.set(_SHUFFLE_KEY, saved)
+
+
+def test_parent_conf_set_later_reaches_next_invocation(spark, sf_dir):
+    """A runtime conf the caller sets on its session after a first
+    invocation governs the next one: child sessions are keyed on the
+    parent's conf, not frozen at their first use."""
+    key = "spark.sql.codegen.wholeStage"
+    spec = _catalog()["pricing_summary"]
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    first = spec.fn(spark, sf_dir)
+    assert "*(" in plan(first)  # whole-stage codegen stages
+    spark.conf.set(key, "false")
+    try:
+        second = spec.fn(spark, sf_dir)
+        assert second.sparkSession is not first.sparkSession
+        assert second.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false"
+        assert "*(" not in plan(second)
+        assert second.collect() == first.collect()
+    finally:
+        spark.conf.unset(key)
+    assert spec.fn(spark, sf_dir).sparkSession is first.sparkSession
+
+
+def test_micro_batch_keeps_session_conf_while_cc_loop_runs(spark, sf_dir, tmp_path):
+    """A finnhub_pipeline stream started and run while near_dup_clusters
+    (whose CC loop narrows to one partition, AQE off) runs on another
+    thread keeps the session's shuffle width and AQE setting: the
+    stream's own session (a clone Spark takes at start, with AQE off as
+    for every stream) plans each batch at the caller's width, and
+    whatever a batch plans on the caller's session (as a sink that reads
+    through it does) runs adaptive at that width."""
+    import json
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from finance_data_ingestion_pipeline_with_kafka_spark.registry import _SHUFFLE_KEY
+    from finance_data_ingestion_pipeline_with_kafka_spark.sources import (
+        kafka_shaped_file_stream,
+        write_json_fixture,
+    )
+    from finance_data_ingestion_pipeline_with_kafka_spark.streaming.pipeline import (
+        finnhub_pipeline,
+    )
+
+    want = (spark.conf.get("spark.sql.adaptive.enabled"), spark.conf.get(_SHUFFLE_KEY))
+    width = int(want[1])
+    src = tmp_path / "src"
+    for i in range(3):
+        msgs = [json.dumps({"c": ["1"], "p": 100.0 + j, "s": "AAPL",
+                            "t": 1704205200000 + 1000 * (10 * i + j), "v": 1})
+                for j in range(10)]
+        write_json_fixture(str(src), msgs, f"f{i}.json")
+    stop, errors, runs = threading.Event(), [], []
+
+    def cc_loop():
+        try:
+            while not stop.is_set():
+                _catalog()["near_dup_clusters"].fn(spark, sf_dir).collect()
+                runs.append(1)
+        except Exception as ex:  # surfaced in the main thread
+            errors.append(ex)
+
+    seen = []
+
+    def record(batch, batch_id):
+        by_symbol = batch.groupBy("symbol").count()
+        on_parent = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+        seen.append((
+            batch.sparkSession.conf.get(_SHUFFLE_KEY),
+            set(_exchange_widths(by_symbol)),
+            (spark.conf.get("spark.sql.adaptive.enabled"), spark.conf.get(_SHUFFLE_KEY)),
+            _adaptive(on_parent),
+            set(_exchange_widths(on_parent)),
+        ))
+        by_symbol.collect()  # a foreachBatch must consume its batch
+
+    worker = threading.Thread(target=cc_loop)
+    worker.start()
+    try:
+        while not runs and not errors:  # the loop is hot before the stream starts
+            stop.wait(0.05)
+        raw = kafka_shaped_file_stream(spark, str(src), max_files_per_trigger=1)
+        q = (finnhub_pipeline(raw).writeStream.foreachBatch(record)
+             .option("checkpointLocation", str(tmp_path / "cp"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+    finally:
+        stop.set()
+        worker.join(300)
+    assert not errors, errors
+    assert len(seen) >= 3  # one batch per file, plus any no-data batch
+    for stream_width, batch_widths, parent_conf, adaptive, parent_widths in seen:
+        assert stream_width == want[1] and batch_widths == {width}
+        assert parent_conf == want
+        assert adaptive and parent_widths == {width}
 
 
 # ---------------------------------------------------------------------------
@@ -356,3 +473,63 @@ def test_prepared_plan_is_materialization_free(spark, sf_dir, name):
         "InMemoryRelation — construction persisted a subtree; cached "
         "rows would replay across invocations"
     )
+
+
+def test_no_session_conf_writes_in_operators_or_registry():
+    """Source scan: no operator module and nothing in the registry writes
+    a session's runtime conf. An execution policy reaches Spark only
+    through a child session's conf, set once when registry.policy_session
+    builds that child; catalog.py's UTC and nanosAsLong guards for
+    externally built sessions are outside this scan."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(registry.__file__).parent
+    files = sorted((pkg / "operators").glob("*.py")) + [pkg / "registry.py"]
+    writes = [
+        (f.name, line.strip())
+        for f in files
+        for line in f.read_text().splitlines()
+        if re.search(r"\.conf\.(set|unset)\(", line)
+    ]
+    assert writes == [("registry.py", "child.conf.set(k, v)")], writes
+
+
+def test_policy_session_is_one_child_per_policy_under_threads(spark):
+    """Many threads resolving the same policy at once share one child
+    session (the cache's check-then-insert runs under its lock), and a
+    different policy gets its own child."""
+    import sys
+    import threading
+
+    from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
+        ExecPolicy,
+        policy_session,
+    )
+
+    policy = ExecPolicy(False, 5)
+    got, errors = [], []
+
+    def resolve():
+        try:
+            for _ in range(20):
+                got.append(policy_session(spark, policy))
+        except Exception as ex:  # surfaced in the main thread
+            errors.append(ex)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=resolve) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and not errors, errors
+    assert len(got) == 16 * 20 and len({id(s) for s in got}) == 1
+    child = got[0]
+    assert child is not spark and child.conf.get("spark.sql.shuffle.partitions") == "5"
+    assert policy_session(spark, ExecPolicy(False, 6)) is not child
+    assert policy_session(spark, None) is spark
