@@ -49,10 +49,13 @@ def dsum(col: Column | str) -> Column:
     # the BigDecimal/oracle rounding on every representable input.
     x = c * _SCALE
     u = F.when(c >= 0, F.floor(x + 0.5)).otherwise(-F.floor(-x + 0.5)).cast("long")
+    # u == hi·2^42 + mid·2^21 + lo for every long u, negatives included
+    # (two's complement). Shifts and masks only: under ANSI mode long
+    # ``-``/``*`` run overflow-checked (Math.*Exact) on every row.
+    mask = F.lit((1 << _LIMB) - 1)
     hi = F.shiftright(u, 2 * _LIMB)  # arithmetic shift: floor division
-    rem = u - hi * (1 << (2 * _LIMB))  # in [0, 2^42)
-    mid = F.shiftright(rem, _LIMB)
-    lo = rem.bitwiseAND(F.lit((1 << _LIMB) - 1))
+    mid = F.shiftright(u, _LIMB).bitwiseAND(mask)
+    lo = u.bitwiseAND(mask)
     total = (
         F.sum(hi).cast("decimal(38,0)") * (1 << (2 * _LIMB))
         + F.sum(mid).cast("decimal(38,0)") * (1 << _LIMB)

@@ -226,16 +226,29 @@ def sized(spark: SparkSession, sf_dir: str) -> ExecPolicy:
 #: Child sessions: parent session → {(policy, parent conf): child}. A
 #: child is ``cloneSession()`` of its parent (runtime conf, temp views,
 #: functions) plus the policy's keys, so everything the engine memoizes
-#: per session (plan cache, scan cache, ``cached_subplan``) follows the
-#: child on its own. ``newSession()`` would not do: it starts from the
-#: SparkContext conf and drops what the parent's session options or caller set
-#: (e.g. ``parquet.nanosAsLong``, the session timezone). Keying on the
+#: per session (plan cache, ``cached_subplan``) follows the child on its
+#: own, and the catalog's scan cache starts from the parent's scans
+#: (:func:`parent_session`). ``newSession()`` would not do: it starts
+#: from the SparkContext conf and drops what the parent's session options
+#: or caller set (e.g. ``parquet.nanosAsLong``, the session timezone). Keying on the
 #: parent's runtime conf makes a conf the caller sets on the parent
 #: after a first invocation govern the next one. Weakly keyed by the
 #: parent, and capped per parent (oldest first), like the other caches.
 _CHILD_SESSIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _CHILD_SESSIONS_MAX = 16
 _CHILD_SESSIONS_LOCK = threading.Lock()
+#: Child → weak reference to the parent it was cloned from, so the
+#: catalog's scan cache can re-home a parent's scans onto its children
+#: (:func:`parent_session`). Weak both ways: the parent holds its
+#: children, not the reverse.
+_PARENTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def parent_session(spark: SparkSession) -> SparkSession | None:
+    """The session :func:`policy_session` cloned ``spark`` from, or
+    ``None`` for a session it did not create (or whose parent is gone)."""
+    ref = _PARENTS.get(spark)
+    return ref() if ref is not None else None
 
 
 def policy_session(spark: SparkSession, policy: ExecPolicy | None) -> SparkSession:
@@ -256,6 +269,7 @@ def policy_session(spark: SparkSession, policy: ExecPolicy | None) -> SparkSessi
             child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
             for k, v in policy.confs().items():
                 child.conf.set(k, v)
+            _PARENTS[child] = weakref.ref(spark)
             while len(children) >= _CHILD_SESSIONS_MAX:
                 children.pop(next(iter(children)))
             children[key] = child

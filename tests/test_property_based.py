@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -120,8 +120,10 @@ def test_salted_agg_equals_plain_groupby(rows, n_salts):
     assert got == want
 
 
+#: Up to ±1e10: past 2^42/10^6 ≈ 4.4e6 the scaled value has a non-zero
+#: high limb, and negatives exercise the sign-extended one.
 FLOATS = st.lists(
-    st.integers(min_value=-10**9, max_value=10**9).map(lambda n: n / 1000.0),
+    st.integers(min_value=-10**13, max_value=10**13).map(lambda n: n / 1000.0),
     min_size=1,
     max_size=80,
 )
@@ -129,11 +131,15 @@ FLOATS = st.lists(
 
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(xs=FLOATS, parts=st.sampled_from([1, 3, 7]))
+@example(xs=[4.4e6, -4.4e6, 0.000001, -0.000001], parts=3)
+@example(xs=[-9999999999.999, 8796093.022208, -4398046.511104, 12.5], parts=7)
 def test_dsum_matches_serial_decimal_reference(xs, parts):
     """dsum over ANY partitioning equals the serial fixed-point reference:
     per-element round-half-away-from-zero at 6 digits (in double
     arithmetic, mirroring the plan), exact integer total, one double
-    division."""
+    division. The examples pin high limbs of both signs, exact limb
+    boundaries (2^42 and 2^43 scaled) and values whose low limbs are all
+    ones (-1 scaled)."""
     import math
 
     spark = get_test_spark()
