@@ -27,7 +27,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2, in the
+    registry's verification order (``registry.verification_order``)."""
     return {name: spec.fn for name, spec in load_all().items()}
 
 

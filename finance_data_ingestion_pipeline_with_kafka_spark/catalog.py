@@ -185,6 +185,21 @@ def _lake_cached_scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame 
         return df
 
 
+def scan_replicate() -> int:
+    """The scan replication factor ``ENGINE_SCAN_REPLICATE`` asks for, 1
+    when it is unset. Every reader of the variable goes through here, so
+    a value that is not an integer >= 1 raises instead of being read as 1
+    by some callers and as itself by others."""
+    raw = os.environ.get("ENGINE_SCAN_REPLICATE", "1")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"ENGINE_SCAN_REPLICATE must be an integer >= 1, got {raw!r}")
+    return n
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str, replicate: int = 1) -> DataFrame:
     """Columnar scan of a fixture table. ``replicate > 1`` unions N
     key-shifted copies (see ``KEY_SHIFT_COLS``) — TPC-H-style N× data
@@ -195,7 +210,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, replicate: int = 1) 
     if replicate == 1:
         # env override lets the bench scale-crossover run the unmodified
         # catalog queries against an N×-replicated scan
-        replicate = int(os.environ.get("ENGINE_SCAN_REPLICATE", "1"))
+        replicate = scan_replicate()
     if not KEY_SHIFT_COLS.get(name, ()):  # fixed-size dims don't grow
         replicate = 1
     lake_cache = os.environ.get("ENGINE_LAKE_CACHE") == "1"

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, scan_replicate
 from ..functions.core import davg
 from ..execution import (  # re-export: the dedup pipeline is its historical home
     materialize,
@@ -417,8 +417,7 @@ def _dedup_shuffle_width(spark: SparkSession, sf_dir: str) -> ExecPolicy | None:
         bytes_ = _os.path.getsize(_os.path.join(sf_dir, "documents.parquet"))
     except OSError:
         return None
-    replicate = max(int(_os.environ.get("ENGINE_SCAN_REPLICATE", "1")), 1)
-    eff = bytes_ * replicate * _DEDUP_WIDTH_EXPLOSION
+    eff = bytes_ * scan_replicate() * _DEDUP_WIDTH_EXPLOSION
     try:
         # the effective value: a default here would stand in for a key
         # the session never set, whose effective width is Spark's 200

@@ -56,14 +56,29 @@ measured edge count). Each runs on a :func:`policy_session` child and
 hands its result back on the caller's session.
 
 A query with no policy runs on the caller's session as the caller set it.
+
+Verification order. The driver checks ``queries()`` in dict order and
+records rows for only the first 50 entries each round, so :func:`load_all`
+orders the catalog by what a fresh driver row is worth, derived from the
+committed ``CORRECTNESS_r<N>.json`` files next to the package (read once
+per process, rounds compared as integers). First come the queries never
+hash-green or whose latest row is not green; then the ``_MODIFIED_SINCE``
+names whose last green round is at or before its stamp, because their
+code changed after that round; then the rest by ascending last-green
+round, stalest evidence first. Registration order breaks ties, and is the
+whole order when no round files are present.
 """
 
 from __future__ import annotations
 
+import functools
+import json
+import re
 import threading
 import weakref
-from collections.abc import Callable
+from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -161,10 +176,9 @@ def sized_partition_num(spark: SparkSession, sf_dir: str) -> int:
     degrades to ordinary AQE behavior — it can never UNDER-parallelize a
     100 TB shuffle, because AQE starts from ≥2 tasks per core and
     coalesces by size from there."""
-    import os
+    from .catalog import scan_replicate
 
-    replicate = int(os.environ.get("ENGINE_SCAN_REPLICATE", "1"))
-    bytes_total = _dir_bytes(sf_dir) * max(replicate, 1)
+    bytes_total = _dir_bytes(sf_dir) * scan_replicate()
     cap = max(64, 2 * _cores(spark))
     return max(_SIZED_PARTITION_MIN, min(cap, bytes_total // _SIZED_PARTITION_TARGET_BYTES or _SIZED_PARTITION_MIN))
 
@@ -199,10 +213,9 @@ def tiny_input(sf_dir: str) -> bool:
     the hint vanishes and AQE's exact-bytes runtime decisions govern, so
     the hint can never force an unbounded broadcast at lake scale —
     data-aware by construction, same pattern as the sizing knobs here."""
-    import os
+    from .catalog import scan_replicate
 
-    replicate = max(int(os.environ.get("ENGINE_SCAN_REPLICATE", "1")), 1)
-    return _dir_bytes(sf_dir) * replicate < _AQE_OFF_MAX_BYTES
+    return _dir_bytes(sf_dir) * scan_replicate() < _AQE_OFF_MAX_BYTES
 
 
 def tiny_static(spark: SparkSession, sf_dir: str) -> ExecPolicy | None:
@@ -297,10 +310,9 @@ _PLAN_CACHE_LOCK = threading.Lock()
 def _env_fingerprint() -> tuple:
     import os
 
-    return (
-        os.environ.get("ENGINE_SCAN_REPLICATE", "1"),
-        os.environ.get("ENGINE_LAKE_CACHE", "0"),
-    )
+    from .catalog import scan_replicate
+
+    return (scan_replicate(), os.environ.get("ENGINE_LAKE_CACHE", "0"))
 
 
 def query(
@@ -399,140 +411,81 @@ def query(
     return deco
 
 
-#: Catalog emission order. The driver's correctness sweep processes
-#: ``queries()`` in dict order and verifies only the FIRST ~50 entries
-#: per round — so queries with no driver row yet must register FIRST,
-#: and after that the window refreshes the STALEST evidence (testdata
-#: regenerates between rounds, so old green rows decay).
-#:
-#: Round-17 ordering (cumulative after CORRECTNESS_r16: 287/287
-#: hash-green, zero latest-run failures across r01–r16; tiers derived by
-#: ``tools/rotate_verified.py`` over CORRECTNESS_r01..r16):
-#:   (0) brand-new queries — none this round (optimization round).
-#:   (1) ``_R17_MODIFIED`` — the 19 queries whose execution paths
-#:       changed during round 17's optimization work after their last
-#:       driver verification (standing rule: code-changed ⇒ next driver
-#:       window): the tiny-regime broadcast steers (top_revenue_orders,
-#:       regional_revenue), the single-scan as-of family, knn's
-#:       tiny-regime coalesce, the minhash phase-B/C SQL generation and
-#:       its downstream composites, the SQL contraction round's CC
-#:       consumers (near_dup_clusters, phash_clusters/survivors,
-#:       incremental_clusters), and the dedup width-policy registrations
-#:       (simhash_near_dup, ngram_jaccard_pairs). Subtracted from their
-#:       freshness tiers below, as every rotation has done.
-#:   (2) ``_VERIFIED_R10`` — the 2 rows displaced from the r16 window
-#:       (window_cume_nth, window_first_last — flagged by the r16
-#:       rotation as heading this round's staleness order).
-#:   (3..9) ``_VERIFIED_R11..R16`` — freshness order below the fold.
-#:
-#: Round-17 window arithmetic: 19 modified + 2 r10 + the 29 oldest r11
-#: rows (registration order) fill the 50 slots; the 11 displaced r11
-#: rows head the next round's staleness order.
+#: Queries whose own operator code or registration changed after the
+#: driver round in the stamp was committed, so their rows from that round
+#: or earlier vouch for code that no longer ships. Each ranks right after
+#: the never-green queries until a later round records it green, which
+#: drops it back on its own. Mechanical registration renames and
+#: shared-helper changes (``dsum``, the lake open) do not count:
+#: ``tools/driver_mimic.py`` checks those across the whole catalog. A
+#: change after a newer round is committed restamps it with that round.
+_MODIFIED_SINCE = (17, frozenset({
+    "minhash_near_dup",
+    "ngram_jaccard_pairs",
+    "simhash_near_dup",
+}))
 
-_R17_MODIFIED = frozenset((
-    "asof_join", "asof_join_forward", "asof_join_nearest", "asof_join_tolerance",
-    "corpus_build_funnel", "dedup_cluster_stats", "dedup_survivors", "incremental_clusters",
-    "knn_bruteforce", "minhash_near_dup", "minhash_recall", "near_dup_clusters",
-    "ngram_jaccard_pairs", "phash_clusters", "phash_survivors", "quality_survivors",
-    "regional_revenue", "simhash_near_dup", "top_revenue_orders",
-))
+_ROUND_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
-_VERIFIED_R10 = frozenset((
-    "window_cume_nth", "window_first_last",
-))
 
-_VERIFIED_R11 = frozenset((
-    "anti_join", "approx_percentiles", "argmax_order", "boilerplate_ngrams",
-    "bollinger_bands", "bpe_token_count", "broadcast_dim_join", "contamination_check",
-    "correlation", "count_min_freq", "cross_join_pairs", "doc_fingerprint",
-    "domain_mix_weights", "embedding_normalize", "fuzzy_prefix_join", "gapfill_bars",
-    "grouping_sets", "hll_sketch_users", "language_id", "macd",
-    "media_features", "media_resize", "min_cost_supplier", "obv_flow",
-    "outer_join_counts", "pii_redaction", "quality_score", "repetition_filter",
-    "rsi_indicator", "scd2_intervals", "scd2_point_in_time", "scd_upsert",
-    "semi_join", "sequence_packing", "stochastic_oscillator", "token_budget_sample",
-    "token_stats", "unpivot_metrics", "winnow_fingerprints", "word_frequency",
-))
+def read_rounds(root: Path) -> dict[int, dict[str, dict]]:
+    """The driver's ``CORRECTNESS_r<N>.json`` rows under ``root`` as
+    ``{N: {name: row}}``. A round file that is present but not a JSON
+    object raises instead of being skipped."""
+    rounds = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = _ROUND_FILE.fullmatch(path.name)
+        if m is None:
+            continue
+        try:
+            rows = json.loads(path.read_text())
+        except (OSError, ValueError) as ex:
+            raise ValueError(f"unreadable driver round file {path}: {ex}") from ex
+        if not isinstance(rows, dict):
+            raise ValueError(f"driver round file {path} is not a JSON object")
+        rounds[int(m.group(1))] = rows
+    return rounds
 
-_VERIFIED_R12 = frozenset((
-    "activity_streaks", "ann_ndcg", "ann_recall", "bloom_join_prune",
-    "conversion_funnel", "customer_ltv_pareto", "disjunctive_predicate_join", "dominant_part_suppliers",
-    "dormant_high_balance", "event_transitions", "forecast_revenue_change", "fuzzy_block_recall",
-    "important_parts", "incremental_join_view", "incremental_ohlcv", "interval_concurrency",
-    "ivf_ann", "ivf_delta_assign", "ivf_probe_sweep", "key_skew_profile",
-    "large_volume_customers", "nation_market_share", "nearest_centroid_eval", "order_priority_check",
-    "pit_feature_matrix", "pmi_collocations", "position_ledger", "pq_refine_rerank",
-    "promo_revenue_share", "returned_item_ranking", "rfm_segmentation", "rolling_pair_correlation",
-    "rolling_robust_stats", "running_distinct_users", "salted_skew_join", "session_fold_sessions",
-    "session_window_agg", "small_quantity_revenue", "snapshot_diff", "sq8_recall",
-    "suppliers_kept_waiting", "table_expectations", "top_supplier_revenue", "twap",
-    "two_nation_volume", "var_breach_backtest",
-))
 
-_VERIFIED_R13 = frozenset((
-    "ab_test_readout", "amihud_illiquidity", "approx_distinct", "atr_keltner",
-    "autocorrelation", "basket_pair_lift", "benford_audit", "bigram_lm_score",
-    "bipower_fold_series", "correlated_exists", "correlation_matrix", "cusum_changepoint",
-    "dominant_event_type", "drawdown_fold_series", "garman_klass_vol", "hhi_concentration",
-    "hybrid_rrf_fusion", "jaccard_threshold_curve", "jpeg_decode", "k_anonymity_audit",
-    "ks_drift", "language_id_eval", "length_outliers", "market_beta",
-    "median_absolute_deviation", "null_safe_join", "order_count_histogram", "part_supplier_stats",
-    "pq_ann", "pq_distortion", "product_profit_by_nation", "psi_value_drift",
-    "quantile_sketch_merge", "range_join", "realized_bipower", "risk_adjusted_returns",
-    "roll_spread", "ship_latency_percentiles", "sort_partition_balance", "url_domain_dedup",
-    "value_histogram", "vocab_coverage", "volume_zscore_anomaly", "winsorized_stats",
-    "word_entropy", "zorder_skipping", "zscore_by_group",
-))
+@functools.cache
+def _committed_rounds() -> dict[int, dict[str, dict]]:
+    return read_rounds(Path(__file__).parents[1])
 
-_VERIFIED_R14 = frozenset((
-    "bmp_decode", "bmp_features", "bollinger_fold_series", "datetime_functions",
-    "distinct_count", "distinct_rows", "drawdown_duration", "dsir_importance_selection",
-    "dsir_selection_eval", "exact_substring_dedup_apply", "exact_substring_spans", "filter_project",
-    "frame_sample", "funnel_time_to_convert", "grouped_pandas_sign_flips", "grouped_stats",
-    "hurst_aggvar", "ivfpq_ann", "ivfpq_recall", "kyle_lambda",
-    "lead_lag_xcorr", "lsh_bucket_profile", "macd_fold_series", "matryoshka_recall",
-    "membership_predicate", "minhash_band_sweep", "minhash_incremental", "mp3_duration_profile",
-    "mp3_frame_scan", "mp4_box_scan", "multimodal_metadata", "ngram_novelty",
-    "null_conditional", "pandas_udf_token_count", "pricing_summary", "realized_moments",
-    "repeat_purchase_intervals", "rsi_fold_series", "scalar_subquery", "seasonal_profile",
-    "shipping_priority_topk", "string_functions", "udtf_bigrams", "udtf_tokenize",
-    "ulcer_index", "variance_ratio", "wav_decode", "weighted_hash_sample",
-    "zipf_fit",
-))
 
-_VERIFIED_R15 = frozenset((
-    "array_functions", "asof_fold_series", "bootstrap_ci", "bpe_apply_tokenize",
-    "bpe_train_merges", "centrality_agreement", "chunk_documents", "cube_subtotals",
-    "dataset_card", "dataset_interleave", "dataset_split", "date_arithmetic",
-    "domain_pagerank", "donchian_channel", "ewma", "except_feeds",
-    "explode_outer_numbers", "funnel_analysis", "gif_decode", "gif_features",
-    "harmonic_centrality", "hash_functions", "intersect_feeds", "json_extraction",
-    "km_logrank", "km_survival", "kmeans_refine", "kmv_distinct",
-    "label_propagation", "map_functions", "ols_regression", "percentiles",
-    "pivot_matrix", "reservoir_sample", "retention_cohorts", "rolling_volatility",
-    "rollup_subtotals", "running_drawdown", "semantic_dedup", "stddev_variance",
-    "stratified_sample", "table_profile", "touch_attribution", "triangle_clustering",
-    "trustrank_seeded", "union_feeds", "variant_json_agg",
-))
+def verification_order(
+    names: Iterable[str],
+    rounds: Mapping[int, Mapping[str, Mapping]],
+    modified: tuple[int, frozenset[str]] = _MODIFIED_SINCE,
+) -> list[str]:
+    """``names``, given in registration order, ranked for the driver's
+    window over the parsed ``{round: rows}`` (see the module docstring):
+    never green or latest row not green, then ``modified`` names last
+    green at or before its stamp, then ascending last-green round."""
+    last_green: dict[str, int] = {}
+    latest_green: dict[str, bool] = {}
+    for rnd in sorted(rounds):
+        for name, row in rounds[rnd].items():
+            latest_green[name] = bool(row.get("hash_match"))
+            if latest_green[name]:
+                last_green[name] = rnd
+    stamp, since = modified
 
-_VERIFIED_R16 = frozenset((
-    "ann_lsh_bucketed", "bm25_score", "bm25_topk_retrieval", "embedding_near_dup",
-    "embedding_quantize", "exact_dedup", "except_all_multiset", "fingerprint_containment",
-    "historical_var", "intersect_all_multiset", "last_closed_bar", "length_bucketing",
-    "minhash_jaccard_estimate", "multi_resolution_bars", "ohlcv_bars", "phash_incremental",
-    "phash_near_dup", "phash_recall", "png_decode", "pq_encode",
-    "simhash_recall", "sliding_window_agg", "sql_entry_revenue", "tfidf_top_terms",
-    "tumbling_window_agg", "unigram_lm_eval", "unigram_lm_tokenize", "unigram_lm_train",
-    "unigram_logprob", "union_by_name_missing", "vwap", "window_cumulative",
-    "window_lag_returns", "window_moving_avg", "window_ntile_pctrank", "window_range_frame",
-    "window_rank_topk",
-))
+    def rank(item: tuple[int, str]) -> tuple[int, int, int]:
+        i, name = item
+        last = last_green.get(name)
+        if last is None or not latest_green[name]:
+            return (0, 0, i)
+        if name in since and last <= stamp:
+            return (1, 0, i)
+        return (2, last, i)
+
+    return [name for _, name in sorted(enumerate(names), key=rank)]
 
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every operator module so its queries register, then return
-    the catalog ordered by verification priority (never-driver-verified
-    queries first, then stalest evidence — see the tier frozensets above)."""
+    the catalog in :func:`verification_order` over the committed
+    ``CORRECTNESS_r*.json`` files (registration order without them)."""
     from .operators import (  # noqa: F401
         aggregations,
         attribution,
@@ -564,19 +517,4 @@ def load_all() -> dict[str, QuerySpec]:
         windows,
     )
 
-    reg_order = {n: i for i, n in enumerate(QUERIES)}
-
-    def rank(item: tuple[str, QuerySpec]) -> tuple[int, int, int]:
-        name, _spec = item
-        for i, tier in enumerate((
-            _R17_MODIFIED, _VERIFIED_R10, _VERIFIED_R11, _VERIFIED_R12,
-            _VERIFIED_R13, _VERIFIED_R14, _VERIFIED_R15, _VERIFIED_R16,
-        )):
-            if name in tier:
-                return (i + 1, 0, reg_order[name])
-        # brand-new queries (registered after CORRECTNESS_r16 was
-        # written): no driver row yet, so they lead the window ahead of
-        # even the code-modified re-verification tier
-        return (0, 0, reg_order[name])
-
-    return dict(sorted(QUERIES.items(), key=rank))
+    return {name: QUERIES[name] for name in verification_order(QUERIES, _committed_rounds())}

@@ -9,6 +9,8 @@ stages. See registry._PLAN_CACHE.
 import gc
 import os
 
+import pytest
+
 from finance_data_ingestion_pipeline_with_kafka_spark import catalog, registry
 from finance_data_ingestion_pipeline_with_kafka_spark.registry import load_all
 
@@ -129,6 +131,21 @@ def test_sized_partition_policy(spark, sf_dir, monkeypatch):
     monkeypatch.setenv("ENGINE_SCAN_REPLICATE", "1000")
     capped = sized_partition_num(spark, "/root/testdata/sf0.1")
     assert capped == max(64, 2 * spark.sparkContext.defaultParallelism)
+
+
+@pytest.mark.parametrize("raw", ["3", "0", "-2", "x"])
+def test_scan_replicate_accepts_only_positive_integers(monkeypatch, sf_dir, raw):
+    """One parse of ``ENGINE_SCAN_REPLICATE`` for every reader: 0, a
+    negative or a non-integer raises naming the variable instead of
+    being read as 1."""
+    monkeypatch.setenv("ENGINE_SCAN_REPLICATE", raw)
+    if raw == "3":
+        assert catalog.scan_replicate() == 3
+        return
+    with pytest.raises(ValueError, match="ENGINE_SCAN_REPLICATE"):
+        catalog.scan_replicate()
+    with pytest.raises(ValueError, match="ENGINE_SCAN_REPLICATE"):
+        registry.tiny_input(sf_dir)
 
 
 def _exchange_widths(df) -> list[int]:
@@ -432,8 +449,6 @@ def test_micro_batch_keeps_session_conf_while_cc_loop_runs(spark, sf_dir, tmp_pa
 # registration fails CI the day it lands, not two rounds later in a
 # judge audit. Plan-string check only — no job runs.
 # ---------------------------------------------------------------------------
-
-import pytest
 
 _PREPARED_NAMES = sorted(
     n for n, s in _catalog().items() if hasattr(s.fn, "__wrapped__")

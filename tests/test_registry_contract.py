@@ -1,35 +1,120 @@
 """Catalog-level contract the driver depends on.
 
-The driver sweeps ``queries()`` in dict order and historically records
-only the first ~50 rows — so ordering and oracle coverage are
-load-bearing, not cosmetic.
+The driver sweeps ``queries()`` in dict order and records rows for only
+the first 50 entries each round, so ordering and oracle coverage are
+load-bearing, not cosmetic. The order is derived from the committed
+``CORRECTNESS_r*.json`` files by ``registry.verification_order``; the
+synthetic-round tests pin its rules, the repo-state tests pin what it
+makes of the rounds committed here.
 """
 
 import pytest
 
 from finance_data_ingestion_pipeline_with_kafka_spark.registry import (
-    _R17_MODIFIED,
-    _VERIFIED_R10,
-    _VERIFIED_R11,
-    _VERIFIED_R12,
-    _VERIFIED_R13,
-    _VERIFIED_R14,
-    _VERIFIED_R15,
-    _VERIFIED_R16,
+    _MODIFIED_SINCE,
+    _committed_rounds,
     load_all,
     query,
+    read_rounds,
+    verification_order,
 )
 
-_ALL_TIERS = (
-    _R17_MODIFIED,
-    _VERIFIED_R10,
-    _VERIFIED_R11,
-    _VERIFIED_R12,
-    _VERIFIED_R13,
-    _VERIFIED_R14,
-    _VERIFIED_R15,
-    _VERIFIED_R16,
-)
+WINDOW = 50
+GREEN = {"hash_match": True}
+RED = {"hash_match": False}
+NAMES = ["a", "b", "c", "d", "e", "f"]
+NONE_MODIFIED = (0, frozenset())
+
+
+def test_brand_new_queries_sort_into_the_window():
+    """A query with no row in any round (e), one never green (c) and one
+    whose latest row is red (b) lead, ahead of even a modified name."""
+    rounds = {
+        1: {"a": GREEN, "b": GREEN, "c": RED, "d": GREEN, "f": GREEN},
+        2: {"b": RED, "d": GREEN},
+    }
+    order = verification_order(NAMES, rounds, (2, frozenset({"f"})))
+    assert order == ["b", "c", "e", "f", "a", "d"]
+
+
+def test_modified_name_ranks_next_until_a_later_green_row():
+    rounds = {1: {n: GREEN for n in NAMES}, 2: {"a": GREEN, "f": GREEN}}
+    modified = (2, frozenset({"f", "c"}))
+    order = verification_order(NAMES, rounds, modified)
+    assert order[:2] == ["c", "f"]
+    # a green row after the stamp drops f back to its freshness place
+    rounds[3] = {"f": GREEN}
+    order = verification_order(NAMES, rounds, modified)
+    assert order[0] == "c"
+    assert order[-1] == "f"
+
+
+def test_rest_by_ascending_last_green_round_then_registration():
+    rounds = {
+        1: {n: GREEN for n in NAMES},
+        2: {"a": GREEN, "c": GREEN},
+        3: {"b": GREEN},
+    }
+    order = verification_order(NAMES, rounds, NONE_MODIFIED)
+    assert order == ["d", "e", "f", "a", "c", "b"]
+
+
+def test_no_rounds_means_registration_order():
+    assert verification_order(NAMES, {}, (5, frozenset({"e"}))) == NAMES
+
+
+def test_rounds_sort_as_integers(tmp_path):
+    (tmp_path / "CORRECTNESS_r9.json").write_text('{"a": {"hash_match": true}}')
+    (tmp_path / "CORRECTNESS_r10.json").write_text('{"b": {"hash_match": true}}')
+    rounds = read_rounds(tmp_path)
+    assert sorted(rounds) == [9, 10]
+    # b, last green in r10, is fresher than a, last green in r9
+    assert verification_order(["b", "a"], rounds, NONE_MODIFIED) == ["a", "b"]
+
+
+def test_unreadable_round_file_raises(tmp_path):
+    (tmp_path / "CORRECTNESS_r3.json").write_text("{truncated")
+    with pytest.raises(ValueError, match="CORRECTNESS_r3.json"):
+        read_rounds(tmp_path)
+
+
+def test_modified_names_are_registered():
+    assert _MODIFIED_SINCE[1] <= set(load_all())
+
+
+def _last_green() -> dict[str, int]:
+    last = {}
+    for rnd, rows in sorted(_committed_rounds().items()):
+        last.update({n: rnd for n, row in rows.items() if row.get("hash_match")})
+    return last
+
+
+def test_stalest_evidence_leads_the_window():
+    """The first 50 entries hold every modified name and every query last
+    green in the oldest round still on record."""
+    window = list(load_all())[:WINDOW]
+    last = _last_green()
+    oldest = min(last.values())
+    stalest = {n for n, r in last.items() if r == oldest}
+    assert _MODIFIED_SINCE[1] <= set(window)
+    assert stalest <= set(window), sorted(stalest - set(window))
+
+
+def test_window_spends_no_slot_on_fresh_unmodified_evidence():
+    modified = _MODIFIED_SINCE[1]
+    last = _last_green()
+    newest = max(last.values())
+    wasted = [
+        n for n in list(load_all())[:WINDOW]
+        if last.get(n) == newest and n not in modified
+    ]
+    assert wasted == []
+
+
+def test_order_is_stable_and_complete():
+    first, second = list(load_all()), list(load_all())
+    assert first == second
+    assert len(first) == len(set(first)) == 287
 
 
 def test_every_query_has_an_oracle():
@@ -41,73 +126,6 @@ def test_every_query_has_an_oracle():
 def test_bench_specs_are_oracle_checked():
     cat = load_all()
     assert all(s.oracle is not None for s in cat.values() if s.bench)
-
-
-def test_tiers_partition_the_round16_catalog():
-    """The tier sets are disjoint and cover exactly the 287 names that
-    existed when CORRECTNESS_r16 was written (the full catalog — no
-    brand-new queries in an optimization round). (_R17_MODIFIED holds
-    names re-tiered from their freshness tiers after round-17 kernel/
-    registration changes — they overlap no freshness tier because the
-    rotation subtracts them.)"""
-    union = set()
-    total = 0
-    for tier in _ALL_TIERS:
-        assert not (union & tier), sorted(union & tier)
-        union |= tier
-        total += len(tier)
-    assert total == len(union) == 287
-    assert union == set(load_all())
-
-
-def test_stalest_evidence_leads_the_window():
-    """The driver verifies only the first ~50 catalog entries per round.
-    Round-17 contract: brand-new queries (none this round) rank first,
-    then the 19 queries whose kernels or execution-affecting
-    registration changed in round 17 AFTER their last driver
-    verification (standing rule: code-changed => next window), then the
-    2 r10-displaced rows, then the oldest r11 rows until the window
-    fills; r12..r16 greens sit below in staleness order."""
-    order = list(load_all())
-    known = set().union(*_ALL_TIERS)
-    new = [n for n in order if n not in known]
-    n_new, n_mod, n_r10 = len(new), len(_R17_MODIFIED), len(_VERIFIED_R10)
-    assert set(order[:n_new]) == set(new)
-    assert set(order[n_new : n_new + n_mod]) == set(_R17_MODIFIED)
-    assert set(order[n_new + n_mod : n_new + n_mod + n_r10]) == set(_VERIFIED_R10)
-    # staleness order below the fold: r10 < r11 < ... < r16
-    seq = (_VERIFIED_R10, _VERIFIED_R11, _VERIFIED_R12, _VERIFIED_R13,
-           _VERIFIED_R14, _VERIFIED_R15, _VERIFIED_R16)
-    for older, newer in zip(seq, seq[1:]):
-        assert max(order.index(n) for n in older) < min(
-            order.index(n) for n in newer
-        )
-    # the 50-slot window: every brand-new and code-modified name must be
-    # inside it (the standing rule outranks staleness); remaining slots
-    # go to the r10 displaced rows then the oldest r11 rows
-    window = set(order[:50])
-    assert set(new) <= window, sorted(set(new) - window)
-    assert set(_R17_MODIFIED) <= window, sorted(set(_R17_MODIFIED) - window)
-    rest = window - set(new) - set(_R17_MODIFIED)
-    assert rest <= set(_VERIFIED_R10) | set(_VERIFIED_R11), sorted(
-        rest - set(_VERIFIED_R10) - set(_VERIFIED_R11)
-    )
-    if set(_VERIFIED_R10) - window:
-        assert rest <= set(_VERIFIED_R10), sorted(rest - set(_VERIFIED_R10))
-    # no freshly-verified (r15/r16) row may waste a window slot
-    assert window & (set(_VERIFIED_R15) | set(_VERIFIED_R16)) == set(), sorted(
-        window & (set(_VERIFIED_R15) | set(_VERIFIED_R16))
-    )
-
-
-def test_brand_new_queries_sort_into_the_window():
-    """A query in no tier (i.e. added after CORRECTNESS_r16) must rank
-    ahead of every tiered row, including the code-modified tier."""
-    order = list(load_all())
-    known = set().union(*_ALL_TIERS)
-    first_known = min(order.index(n) for n in known)
-    for name in set(order) - known:
-        assert order.index(name) < first_known, name
 
 
 def test_duplicate_registration_rejected():

@@ -1,4 +1,4 @@
-"""Driver-mimic: t1 smoke + t2 full oracle sweep with a VANILLA session.
+"""Driver-mimic: t1 smoke + t2 oracle sweep with a VANILLA session.
 
 Mirrors the grading driver's consumption of ``__spark_entry__.py``:
 
@@ -6,21 +6,28 @@ Mirrors the grading driver's consumption of ``__spark_entry__.py``:
   engine's tuned builder — the driver uses its own session, so any
   dependence on our session config is a bug this script must catch),
 - t1: calls ``entry(spark)`` and asserts >0 rows,
-- t2: for EVERY ``queries()`` entry runs Spark at sf0.01 and the
-  matching ``oracle_sql()`` in DuckDB over the same parquet views,
-  comparing order-insensitively and EXACTLY (no float tolerance — the
-  engine owes determinism via decimal-accumulated aggregates).
+- t2: for every named ``queries()`` entry (all of them when none are
+  named) runs Spark at each ``--sf`` dir and the matching
+  ``oracle_sql()`` in DuckDB over the same parquet views, comparing with
+  ``tests.oracle_utils.assert_frames_match``: order-insensitive and
+  EXACT (no float tolerance, no cast of the oracle to Spark's dtypes —
+  the engine owes determinism via decimal-accumulated aggregates).
+
+This is the one oracle-compare tool: use it with a few names as the
+inner loop while developing a query, and ``tools/dump_plans.py`` for
+plans.
 
 Also flags oracle output columns whose DuckDB dtype round-trips badly
 through pandas (HUGEINT → float64, DECIMAL → object): those need an
 explicit CAST in the oracle SQL or the driver's schema/hash compare can
 mismatch even when values agree.
 
-Usage: python tools/driver_mimic.py [--sf /root/testdata/sf0.01]
+Usage: python tools/driver_mimic.py [NAME ...] [--sf DIR[,DIR...]]
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -29,8 +36,6 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
-
-SF_SMOKE = "/root/testdata/sf0.001"
 
 
 def flag_fragile_oracle_dtypes(con, sql: str, name: str) -> list[str]:
@@ -46,76 +51,66 @@ def flag_fragile_oracle_dtypes(con, sql: str, name: str) -> list[str]:
     return warnings
 
 
-def main() -> int:
-    sf = "/root/testdata/sf0.01"
-    args = sys.argv[1:]
-    i = 0
-    while i < len(args):
-        if args[i] == "--sf":
-            if i + 1 >= len(args):
-                raise SystemExit("--sf requires a value")
-            sf = args[i + 1]
-            i += 1
-        elif args[i].startswith("--sf="):
-            sf = args[i].split("=", 1)[1]
-        else:
-            raise SystemExit(f"unknown arg {args[i]!r}")
-        i += 1
+def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
+    """Run t1 and the t2 sweep; 0 when every compare is exact. ``spark``
+    defaults to a fresh vanilla session."""
+    parser = argparse.ArgumentParser(prog="driver_mimic.py")
+    parser.add_argument("names", nargs="*", help="queries to check (default: all)")
+    parser.add_argument("--sf", default="/root/testdata/sf0.01",
+                        help="comma-separated fixture dirs")
+    args = parser.parse_args(argv)
 
     import __spark_entry__ as entrymod
     from tests.oracle_utils import assert_frames_match, duckdb_connection
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .appName("driver-mimic")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = [n for n in args.names if n not in queries]
+    if unknown:
+        parser.error(f"unknown query name(s): {', '.join(unknown)}")
+    names = args.names or sorted(queries)
+
+    if spark is None:
+        spark = (
+            SparkSession.builder.master("local[32]")
+            .config("spark.sql.shuffle.partitions", "32")
+            .config("spark.driver.memory", "16g")
+            .appName("driver-mimic")
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("ERROR")
 
     df = entrymod.entry(spark)
     n = df.count()
     print(f"t1 entry(): {n} rows, schema={[f.name for f in df.schema.fields]}")
     assert n > 0
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    con = duckdb_connection(sf)
-    ok, weak, bad, dtype_warnings = [], [], [], []
-    t_start = time.time()
-    for i, (name, fn) in enumerate(sorted(queries.items())):
-        try:
-            spark_pdf = fn(spark, sf).toPandas()
-            if name in oracles:
-                dtype_warnings += flag_fragile_oracle_dtypes(
-                    con, oracles[name], name
-                )
-                oracle_pdf = con.sql(oracles[name]).df()
-                assert_frames_match(spark_pdf, oracle_pdf, name)
-                ok.append(name)
-            else:
-                # rows-only check — the driver's weaker path for
-                # genuinely non-SQL-expressible ops; the driver expects
-                # NON-EMPTY output, so zero rows is a failure here too
-                # (ADVICE r13: >= 0 was vacuous)
-                assert len(spark_pdf) > 0, f"{name}: rows-only query returned 0 rows"
-                weak.append(name)
-        except Exception as ex:
-            bad.append(name)
-            print(f"FAIL {name}: {type(ex).__name__}: {str(ex)[:300]}")
-            traceback.print_exc(limit=3)
-        if (i + 1) % 25 == 0:
-            print(
-                f"  ... {i + 1}/{len(queries)} ({time.time() - t_start:.0f}s)",
-                flush=True,
-            )
-    print(
-        f"t2 sweep: {len(ok)} oracle-exact, {len(weak)} rows-only "
-        f"({sorted(weak)}), {len(bad)} FAILED in {time.time() - t_start:.0f}s"
-    )
-    for w in dtype_warnings:
-        print(f"  dtype warning: {w}")
+    bad = []
+    for sf in args.sf.split(","):
+        con = duckdb_connection(sf)
+        ok, dtype_warnings = 0, []
+        t_start = time.time()
+        for i, name in enumerate(names):
+            try:
+                if name not in oracles:
+                    raise AssertionError(f"{name}: no oracle SQL")
+                spark_pdf = queries[name](spark, sf).toPandas()
+                dtype_warnings += flag_fragile_oracle_dtypes(con, oracles[name], name)
+                assert_frames_match(spark_pdf, con.sql(oracles[name]).df(), name)
+                ok += 1
+            except Exception as ex:
+                bad.append(f"{sf}:{name}")
+                print(f"FAIL {sf} {name}: {type(ex).__name__}: {str(ex)[:300]}")
+                traceback.print_exc(limit=3)
+            if (i + 1) % 25 == 0:
+                print(f"  ... {i + 1}/{len(names)} ({time.time() - t_start:.0f}s)", flush=True)
+        con.close()
+        print(
+            f"t2 sweep {sf}: {ok} oracle-exact, {len(names) - ok} FAILED "
+            f"in {time.time() - t_start:.0f}s"
+        )
+        for w in dtype_warnings:
+            print(f"  dtype warning: {w}")
     if bad:
         print("FAILED:", sorted(bad))
         return 1
