@@ -17,13 +17,15 @@ Pipeline shape (T10 × U4):
    operator.
 2. ``minhash_stream`` — ``groupBy(band_id, band_hash)`` →
    ``applyInPandasWithState``: per band bucket the state holds up to
-   ``HOT_BUCKET_CAP`` keeper signatures within the TTL horizon. New
-   documents are buffered until the watermark passes them (the
-   ``rsi_stream`` ordering discipline — a late-but-in-watermark doc
-   folds in its true event-time position), then probe the keepers,
-   emit one (doc_a, doc_b, est_jaccard) row per bucket hit, and join
-   the keeper set. Exact re-deliveries of an already-kept doc_id are
-   dropped (stateful dedup at ingest).
+   ``HOT_BUCKET_CAP`` keeper signatures within the TTL horizon. The
+   bucket's updater is ``stateful.watermark_buffered`` around the pure
+   ``minhash_bucket_fold``: new documents wait in the bucket's buffer
+   until the watermark passes them, or until the bucket's event-time
+   timer flushes it, so a late-but-in-watermark doc folds in its true
+   event-time position. Each ripe doc probes the keepers, emits one
+   (doc_a, doc_b, est_jaccard) row per bucket hit, and joins the keeper
+   set. Exact re-deliveries of an already-kept doc_id are dropped
+   (stateful dedup at ingest).
 
 State bound: ≤ cap keepers + the sub-watermark buffer per ACTIVE
 bucket; keepers older than ``ttl`` (event time) are evicted as new
@@ -57,7 +59,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -76,6 +78,7 @@ from ..operators.dedup import (
     MINHASH_ROWS,
     SHINGLE_N,
 )
+from .stateful import watermark_buffered
 
 #: Hex chars per permutation piece (32-bit slice of an md5 digest).
 _PIECE_HEX = 8
@@ -219,76 +222,35 @@ _STATE_SCHEMA = StructType(
 )
 
 
-def _update_factory(cap: int, ttl_ms: int):
-    def update(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        band_id = int(key[0])
+def _doc_extract(buf: list, pdf: pd.DataFrame) -> None:
+    for doc_id, ts, sig in zip(pdf["doc_id"], pdf["datetime"], pdf["sig"]):
+        buf.append((int(ts.value // 1_000_000), int(doc_id), sig))
 
-        def load():
-            if state.exists:
-                kid, ksig, kts, bts, bid, bsig = state.get
-                keepers = list(zip(kid or [], ksig or [], kts or []))
-                buf = list(zip(bts or [], bid or [], bsig or []))
-                return keepers, buf
-            return [], []
 
-        def save(keepers, buf):
-            state.update(
-                (
-                    [k[0] for k in keepers],
-                    [k[1] for k in keepers],
-                    [k[2] for k in keepers],
-                    [b[0] for b in buf],
-                    [b[1] for b in buf],
-                    [b[2] for b in buf],
-                )
-            )
+def _pairs_emit(key: tuple, pairs: list) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "band_id": [int(key[0])] * len(pairs),
+            "doc_a": [p[0] for p in pairs],
+            "doc_b": [p[1] for p in pairs],
+            "est_jaccard": [p[2] for p in pairs],
+            "datetime": pd.to_datetime([p[3] for p in pairs], unit="ms"),
+        }
+    )
 
-        def emit(pairs) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "band_id": [band_id] * len(pairs),
-                    "doc_a": [p[0] for p in pairs],
-                    "doc_b": [p[1] for p in pairs],
-                    "est_jaccard": [p[2] for p in pairs],
-                    # one vectorized conversion, not one Timestamp per
-                    # row (value-identical; r16 stateful-emit change)
-                    "datetime": pd.to_datetime(
-                        [p[3] for p in pairs], unit="ms"
-                    ),
-                }
-            )
 
-        keepers, buf = load()
+def _bucket_update(cap: int, ttl_ms: int):
+    """The bucket's ``watermark_buffered`` updater: the core is the
+    keepers' three parallel arrays, the buffer (ts_ms, doc_id, sig)."""
 
-        if state.hasTimedOut:
-            keepers, pairs = minhash_bucket_fold(
-                keepers, sorted(buf), cap, ttl_ms
-            )
-            save(keepers, [])
-            if pairs:
-                yield emit(pairs)
-            return
-
-        for pdf in pdf_iter:
-            for doc_id, ts, sig in zip(
-                pdf["doc_id"], pdf["datetime"], pdf["sig"]
-            ):
-                buf.append((int(ts.value // 1_000_000), int(doc_id), sig))
-        wm = state.getCurrentWatermarkMs()
-        buf.sort()
-        ripe = [r for r in buf if r[0] <= wm]
-        pending = [r for r in buf if r[0] > wm]
+    def fold(core: tuple, ripe: list) -> tuple:
+        keepers = list(zip(*(c or [] for c in core)))
         keepers, pairs = minhash_bucket_fold(keepers, ripe, cap, ttl_ms)
-        save(keepers, pending)
-        if pending:
-            # fire once the watermark passes the YOUNGEST buffered doc
-            state.setTimeoutTimestamp(max(t for t, _, _ in pending) + 1)
-        if pairs:
-            yield emit(pairs)
+        return tuple(list(c) for c in zip(*keepers)) or ([], [], []), pairs
 
-    return update
+    return watermark_buffered(
+        fold, _pairs_emit, _doc_extract, empty=([], [], []), n_buf=3
+    )
 
 
 def minhash_stream(
@@ -309,7 +271,7 @@ def minhash_stream(
         else banded
     )
     return wm.groupBy("band_id", "band_hash").applyInPandasWithState(
-        _update_factory(hot_bucket_cap, ttl_ms),
+        _bucket_update(hot_bucket_cap, ttl_ms),
         outputStructType=MINHASH_STREAM_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",

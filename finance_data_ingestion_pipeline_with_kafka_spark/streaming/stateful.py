@@ -1,13 +1,37 @@
-"""Arbitrary stateful streaming (SURVEY §2.9 T10): running position per
-symbol via ``applyInPandasWithState`` — the custom-stateful-operator slot
-the reference never fills.
+"""Arbitrary stateful streaming (SURVEY §2.9 T10) on
+``applyInPandasWithState`` and Spark 4's ``transformWithStateInPandas``.
 
-State per key is one (position, cash) pair — O(symbols) total state, the
-bounded-state design the 100 TB posture requires.
+Three operators fold each micro-batch as it arrives, with O(1) state per
+key: ``running_position`` (position, cash flow, fills), ``ewma_stream``
+(level, count) and ``max_drawdown_stream`` (peak, drawdown, count).
+``session_stream`` keeps every session the watermark has not finalized.
+
+The event-time-ordered operators (``ewma_stream_ordered``,
+``rsi_stream``, ``macd_stream``, ``bollinger_stream``,
+``asof_enrich_stream``, ``rv_bipower_stream`` and
+``dedup_stream.minhash_stream``) share one state machine,
+``watermark_buffered``, the watermark plus event-time-timeout contract
+of Structured Streaming:
+
+* State is the operator's core fields followed by one array per element
+  of a buffered row. A row waits at most one watermark delay of event
+  time, so the buffer is bounded by the watermark horizon.
+* A row is ripe once its event time is at or below the watermark. Each
+  call appends the batch's rows, sorts the buffer once, folds the ripe
+  rows in that order and keeps the rest.
+* The event-time timer is armed at the youngest buffered row + 1 ms. A
+  key that goes quiet times out once the watermark passes that row, and
+  a timed-out call folds the whole buffer.
+* A call emits only when the fold produced rows.
+
+Each of those operators supplies a row extractor, an adapter around its
+pure fold (``rsi_fold``, ``macd_fold``, …, which the batch twins in
+``operators/timeseries.py`` replay) and an emitter.
 """
 
 from __future__ import annotations
 
+import copy
 from typing import Iterator
 
 import pandas as pd
@@ -56,14 +80,107 @@ def _append_ticks(buf: list, pdf: pd.DataFrame) -> None:
     dt = pdf["datetime"]
     # tz-aware guard (ADVICE r16): a tz-aware datetime column reaches
     # numpy as object dtype and the [ms] cast raises. The pipeline's
-    # decode emits tz-naive UTC today; normalize instead of crashing all
-    # four updaters if a future source attaches a timezone — tz_convert
-    # to UTC then drop the tz yields the same epoch instants the old
-    # ``Timestamp.value // 1_000_000`` path produced.
+    # decode emits tz-naive UTC today; normalize instead of crashing
+    # every indicator that extracts through here if a future source
+    # attaches a timezone — tz_convert to UTC then drop the tz yields the
+    # same epoch instants the old ``Timestamp.value // 1_000_000`` path
+    # produced.
     if isinstance(dt.dtype, pd.DatetimeTZDtype):
         dt = dt.dt.tz_convert("UTC").dt.tz_localize(None)
     ms = dt.to_numpy().astype("datetime64[ms]").astype("int64")
     buf.extend(zip(ms[mask].tolist(), [float(x) for x in px[mask]]))
+
+
+def watermark_buffered(fold, emit, extract, empty, n_buf, sort_key=None, unit=1):
+    """Build the ``applyInPandasWithState`` update function of an
+    event-time-ordered operator (contract in the module docstring).
+
+    ``extract(buf, pdf)`` appends one tuple of ``n_buf`` fields per input
+    row, event time first, in ``unit`` per millisecond. ``sort_key``
+    orders the buffer and must order by event time first; the default,
+    the whole tuple, breaks same-time ties on the row's values, so the
+    fold order does not depend on arrival order. Python's sort is
+    stable, so rows equal under ``sort_key`` stay in arrival order.
+    ``fold(core, ripe)`` returns ``(core, rows)``, with ``empty`` the core
+    of a new key; ``emit(key, rows)`` frames non-empty rows."""
+    n_core = len(empty)
+
+    def update(
+        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.exists:
+            vals = state.get
+            core = tuple(vals[:n_core])
+            buf = list(zip(*(v or [] for v in vals[n_core:])))
+        else:
+            core, buf = copy.deepcopy(empty), []  # folds may grow its rings
+        for pdf in pdf_iter:
+            extract(buf, pdf)
+        buf.sort(key=sort_key)
+        if state.hasTimedOut:
+            ripe, pending = buf, []
+        else:
+            wm = state.getCurrentWatermarkMs() * unit
+            ripe = [r for r in buf if r[0] <= wm]
+            pending = buf[len(ripe):]
+        core, rows = fold(core, ripe)
+        cols = [list(c) for c in zip(*pending)] or [[] for _ in range(n_buf)]
+        state.update((*core, *cols))
+        if pending:
+            state.setTimeoutTimestamp(pending[-1][0] // unit + 1)
+        if rows:
+            yield emit(key, rows)
+
+    return update
+
+
+def _flat(fold):
+    """Adapter for a pure fold written as ``fold(*core, ripe) -> (*core,
+    rows)``."""
+
+    def adapted(core: tuple, ripe: list) -> tuple:
+        *core, rows = fold(*core, ripe)
+        return core, rows
+
+    return adapted
+
+
+def _tick_rows(*names):
+    """Emitter for folds whose rows are ``(ts_ms, *values)``: columns
+    symbol, datetime, then ``names``."""
+
+    def emit(key: tuple, rows: list) -> pd.DataFrame:
+        ts, *cols = zip(*rows)
+        return pd.DataFrame(
+            {
+                "symbol": [key[0]] * len(rows),
+                "datetime": pd.to_datetime(list(ts), unit="ms"),
+                **{name: list(c) for name, c in zip(names, cols)},
+            }
+        )
+
+    return emit
+
+
+def _by_symbol(
+    ticks: DataFrame,
+    watermark: str,
+    update,
+    out_schema: StructType,
+    state_schema: StructType,
+    mode: str,
+    timeout: str = GroupStateTimeout.EventTimeTimeout,
+) -> DataFrame:
+    """Run ``update`` per symbol over a stream watermarked on ``datetime``
+    (a batch frame runs as-is)."""
+    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
+    return wm.groupBy("symbol").applyInPandasWithState(
+        update,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
 
 
 def _update_position(
@@ -95,13 +212,9 @@ def _update_position(
 def running_position(fills: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """T10: per-symbol running position over a fills stream with columns
     (symbol, datetime, last_price, volume, side)."""
-    wm = fills.withWatermark("datetime", watermark) if fills.isStreaming else fills
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _update_position,
-        outputStructType=POSITION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _by_symbol(
+        fills, watermark, _update_position, POSITION_SCHEMA, _STATE_SCHEMA, "update",
+        GroupStateTimeout.NoTimeout
     )
 
 
@@ -123,15 +236,27 @@ _EWMA_STATE_SCHEMA = StructType(
 )
 
 
+def ewma_fold(y, n: int, prices) -> tuple:
+    """Pure recursive EWMA fold: y ← α·x + (1-α)·y, seeded y₁ = α·x₁ so
+    every finite prefix matches the batch operator's truncated Horner
+    exactly (both compute yₙ = Σ α(1-α)ᵏ·xₙ₋ₖ; the batch form truncates
+    at weight (1-α)^50 ≈ 1e-30 purely so a SQL oracle can replay it — one
+    scalar of state needs no truncation, and below 50 obs the two are
+    bit-identical, beyond it within double-precision noise). ``y`` is
+    None before the first price; None/NaN prices are skipped."""
+    for x in prices:
+        if x is None or pd.isna(x):
+            continue
+        x = float(x)
+        y = EWMA_ALPHA * x if y is None else EWMA_ALPHA * x + (1 - EWMA_ALPHA) * y
+        n += 1
+    return y, n
+
+
 def _update_ewma(
     key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Recursive EWMA fold: y ← α·x + (1-α)·y, seeded y₁ = α·x₁ so every
-    finite prefix matches the batch operator's truncated Horner exactly
-    (both compute yₙ = Σ α(1-α)ᵏ·xₙ₋ₖ; the batch form truncates at
-    weight (1-α)^50 ≈ 1e-30 purely so a SQL oracle can replay it — one
-    scalar of state needs no truncation, and below 50 obs the two are
-    bit-identical, beyond it within double-precision noise).
+    """``ewma_fold`` over each micro-batch in its event-time order.
 
     Ordering caveat: ticks are event-time-sorted only WITHIN each
     micro-batch. EWMA is order-sensitive, so a late-but-within-watermark
@@ -141,10 +266,7 @@ def _update_ewma(
     order-correct variant (buffers ticks until the watermark passes
     before folding, at the cost of watermark-lagged output). Pinned by
     ``test_ewma_stream_late_tick_folds_in_arrival_order``."""
-    if state.exists:
-        y, n = state.get
-    else:
-        y, n = None, 0
+    y, n = state.get if state.exists else (None, 0)
     # concat all Arrow chunks and sort ONCE — a group spanning chunks has
     # no cross-chunk ordering guarantee, and EWMA is order-sensitive.
     # kind="stable": tied timestamps keep concat (arrival) order; the
@@ -153,15 +275,7 @@ def _update_ewma(
     chunks = [pdf[["datetime", "last_price"]] for pdf in pdf_iter]
     if chunks:
         batch = pd.concat(chunks).sort_values(["datetime"], kind="stable")
-        for x in batch["last_price"]:
-            if x is None or pd.isna(x):
-                continue
-            y = (
-                EWMA_ALPHA * float(x)
-                if y is None
-                else EWMA_ALPHA * float(x) + (1 - EWMA_ALPHA) * y
-            )
-            n += 1
+        y, n = ewma_fold(y, n, batch["last_price"])
     state.update((y, n))
     yield pd.DataFrame({"symbol": [key[0]], "ewma": [y], "n_obs": [n]})
 
@@ -325,13 +439,9 @@ def session_stream(
     if not m:
         raise ValueError(f"unsupported gap spec {gap!r}")
     gap_ms = int(m.group(1)) * {"second": 1, "minute": 60, "hour": 3600}[m.group(2)] * 1000
-    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _session_update_factory(gap_ms),
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _by_symbol(
+        ticks, watermark, _session_update_factory(gap_ms), SESSION_SCHEMA,
+        _SESSION_STATE_SCHEMA, "append"
     )
 
 
@@ -341,13 +451,9 @@ def ewma_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     catalog query. State is ONE (ewma, n_obs) pair per symbol: O(symbols)
     total, the bounded-state posture; each micro-batch folds its ticks in
     event-time order and emits the updated smoothed level."""
-    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _update_ewma,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _by_symbol(
+        ticks, watermark, _update_ewma, EWMA_SCHEMA, _EWMA_STATE_SCHEMA, "update",
+        GroupStateTimeout.NoTimeout
     )
 
 
@@ -474,58 +580,21 @@ _EWMA_ORDERED_STATE_SCHEMA = StructType(
 )
 
 
-def _update_ewma_ordered(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Watermark-buffered EWMA fold — the ORDER-CORRECT variant of
-    ``_update_ewma``: incoming ticks are held in state and only folded
-    once the watermark guarantees nothing older can still arrive, so a
-    late-but-within-watermark tick lands in its true event-time position
-    instead of after newer data. The buffer is bounded by the watermark
-    horizon (ticks wait at most `watermark` of event time); the folded
-    level is one scalar, same as the simple variant. Emits whenever a
-    fold happens (data batch with ripe ticks, or the event-time timer
-    firing once the watermark passes the youngest buffered tick)."""
-    if state.hasTimedOut:
-        y, n, buf_ms, buf_px = state.get
-        pending = sorted(zip(buf_ms or [], buf_px or []))
-        for _ts, x in pending:
-            y = EWMA_ALPHA * x if y is None else EWMA_ALPHA * x + (1 - EWMA_ALPHA) * y
-            n += 1
-        state.update((y, n, [], []))
-        yield pd.DataFrame({"symbol": [key[0]], "ewma": [y], "n_obs": [n]})
-        return
+def _ewma_rows(core: tuple, ripe: list) -> tuple:
+    y, n = ewma_fold(*core, (x for _, x in ripe))
+    return (y, n), [(y, n)] if ripe else []
 
-    if state.exists:
-        y, n, buf_ms, buf_px = state.get
-        buf = list(zip(buf_ms or [], buf_px or []))
-    else:
-        y, n, buf = None, 0, []
-    for pdf in pdf_iter:
-        _append_ticks(buf, pdf)  # vectorized, value-identical (r16)
-    wm = state.getCurrentWatermarkMs()
-    # full-tuple sort: same-ms ticks tie-break on PRICE, which is
-    # deterministic under any arrival order, and ticks equal in BOTH
-    # (ts, price) are interchangeable in a scalar fold — so unlike the
-    # ts-only sort the r13 advice caught in rv_bipower (fixed with an
-    # explicit id lane), the (ts, px)-sorted folds here are
-    # arrival-order-independent as-is. Same argument applies to the
-    # rsi/macd/bollinger ordered folds below.
-    buf.sort()
-    ripe = [(t, x) for t, x in buf if t <= wm]
-    pending = [(t, x) for t, x in buf if t > wm]
-    for _ts, x in ripe:
-        y = EWMA_ALPHA * x if y is None else EWMA_ALPHA * x + (1 - EWMA_ALPHA) * y
-        n += 1
-    state.update(
-        (y, n, [t for t, _ in pending], [x for _, x in pending])
-    )
-    if pending:
-        # fire once the watermark passes the YOUNGEST buffered tick —
-        # at that instant every buffered tick is final and folds at once
-        state.setTimeoutTimestamp(max(t for t, _ in pending) + 1)
-    if ripe:
-        yield pd.DataFrame({"symbol": [key[0]], "ewma": [y], "n_obs": [n]})
+
+#: emits the level after each fold that advanced it
+_ewma_ordered_update = watermark_buffered(
+    _ewma_rows,
+    lambda key, rows: pd.DataFrame(
+        {"symbol": [key[0]], "ewma": [rows[-1][0]], "n_obs": [rows[-1][1]]}
+    ),
+    _append_ticks,
+    empty=(None, 0),
+    n_buf=2,
+)
 
 
 def ewma_stream_ordered(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -540,13 +609,9 @@ def ewma_stream_ordered(ticks: DataFrame, watermark: str = "10 minutes") -> Data
     symbol (bounded), and the level lags the stream by the watermark —
     the classic latency-vs-correctness trade, now available as a
     choice."""
-    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _update_ewma_ordered,
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=_EWMA_ORDERED_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _by_symbol(
+        ticks, watermark, _ewma_ordered_update, EWMA_SCHEMA, _EWMA_ORDERED_STATE_SCHEMA,
+        "update"
     )
 
 
@@ -567,8 +632,7 @@ RSI_SCHEMA = StructType(
 
 #: prev_px/n_obs carry the fold; diffs is the last ``RSI_PERIOD`` price
 #: changes in event-time order (a fixed-size ring — O(period) state per
-#: symbol); buf_* is the watermark-ordering buffer, bounded by the
-#: watermark horizon exactly as in ``_EWMA_ORDERED_STATE_SCHEMA``.
+#: symbol); buf_* is the watermark buffer.
 _RSI_STATE_SCHEMA = StructType(
     [
         StructField("prev_px", DoubleType()),
@@ -613,56 +677,13 @@ def rsi_fold(
     return prev_px, diffs, n, rows
 
 
-def _update_rsi_ordered(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Watermark-buffered RSI fold (same ordering discipline as
-    ``_update_ewma_ordered``): ticks wait in state until the watermark
-    passes them, then ``rsi_fold`` advances the (prev, ring, n) state in
-    true event-time order. Each event-time row is emitted exactly once
-    (append-sink-safe)."""
-
-    def load():
-        if state.exists:
-            prev_px, diffs, n, buf_ms, buf_px = state.get
-            return prev_px, list(diffs or []), n, list(zip(buf_ms or [], buf_px or []))
-        return 0.0, [], 0, []
-
-    prev_px, diffs, n, buf = load()
-    rows: list[tuple] = []
-
-    def emit() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "symbol": [key[0]] * len(rows),
-                "datetime": pd.to_datetime([t for t, _, _ in rows], unit="ms"),
-                "rsi": [r for _, r, _ in rows],
-                "n_obs": [m for _, _, m in rows],
-            }
-        )
-
-    if state.hasTimedOut:
-        prev_px, diffs, n, rows = rsi_fold(prev_px, diffs, n, sorted(buf))
-        state.update((prev_px, diffs, n, [], []))
-        if rows:
-            yield emit()
-        return
-
-    for pdf in pdf_iter:
-        _append_ticks(buf, pdf)  # vectorized, value-identical (r16)
-    wm = state.getCurrentWatermarkMs()
-    buf.sort()
-    ripe = [(t, x) for t, x in buf if t <= wm]
-    pending = [(t, x) for t, x in buf if t > wm]
-    prev_px, diffs, n, rows = rsi_fold(prev_px, diffs, n, ripe)
-    state.update(
-        (prev_px, diffs, n, [t for t, _ in pending], [x for _, x in pending])
-    )
-    if pending:
-        # fire once the watermark passes the YOUNGEST buffered tick
-        state.setTimeoutTimestamp(max(t for t, _ in pending) + 1)
-    if rows:
-        yield emit()
+_rsi_update = watermark_buffered(
+    _flat(rsi_fold),
+    _tick_rows("rsi", "n_obs"),
+    _append_ticks,
+    empty=(0.0, [], 0),
+    n_buf=2,
+)
 
 
 def rsi_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -677,13 +698,8 @@ def rsi_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     ``test_rsi_stream_volume_parity_out_of_order``. State per symbol is
     O(period + watermark-horizon ticks); output is append-mode (each
     event-time row exactly once)."""
-    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _update_rsi_ordered,
-        outputStructType=RSI_SCHEMA,
-        stateStructType=_RSI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _by_symbol(
+        ticks, watermark, _rsi_update, RSI_SCHEMA, _RSI_STATE_SCHEMA, "append"
     )
 
 
@@ -701,7 +717,7 @@ MACD_SCHEMA = StructType(
 
 #: ring50 holds the last <= MACD_WINDOW prices (the batch query's 50-row
 #: truncation frame), ring9 the last <= 9 ROUNDED macd values (the batch
-#: signal window's inputs); buf_* is the watermark-ordering buffer.
+#: signal window's inputs); buf_* is the watermark buffer.
 _MACD_STATE_SCHEMA = StructType(
     [
         StructField("ring50", ArrayType(DoubleType())),
@@ -774,59 +790,13 @@ def macd_fold(
     return ring50, ring9, n, rows
 
 
-def _update_macd_ordered(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Watermark-buffered MACD state machine — same ordering discipline
-    as ``_update_rsi_ordered``; the fold itself is the pure
-    ``macd_fold``."""
-
-    def load():
-        if state.exists:
-            ring50, ring9, n, buf_ms, buf_px = state.get
-            return (
-                list(ring50 or []),
-                list(ring9 or []),
-                n,
-                list(zip(buf_ms or [], buf_px or [])),
-            )
-        return [], [], 0, []
-
-    ring50, ring9, n, buf = load()
-    rows: list[tuple] = []
-
-    def emit() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "symbol": [key[0]] * len(rows),
-                "datetime": pd.to_datetime([t for t, _, _, _ in rows], unit="ms"),
-                "macd_line": [m for _, m, _, _ in rows],
-                "signal_line": [s_ for _, _, s_, _ in rows],
-                "n_obs": [m for _, _, _, m in rows],
-            }
-        )
-
-    if state.hasTimedOut:
-        ring50, ring9, n, rows = macd_fold(ring50, ring9, n, sorted(buf))
-        state.update((ring50, ring9, n, [], []))
-        if rows:
-            yield emit()
-        return
-
-    for pdf in pdf_iter:
-        _append_ticks(buf, pdf)  # vectorized, value-identical (r16)
-    wm = state.getCurrentWatermarkMs()
-    buf.sort()
-    ripe = [(t, x) for t, x in buf if t <= wm]
-    pending = [(t, x) for t, x in buf if t > wm]
-    ring50, ring9, n, rows = macd_fold(ring50, ring9, n, ripe)
-    state.update(
-        (ring50, ring9, n, [t for t, _ in pending], [x for _, x in pending])
-    )
-    if pending:
-        state.setTimeoutTimestamp(max(t for t, _ in pending) + 1)
-    if rows:
-        yield emit()
+_macd_update = watermark_buffered(
+    _flat(macd_fold),
+    _tick_rows("macd_line", "signal_line", "n_obs"),
+    _append_ticks,
+    empty=([], [], 0),
+    n_buf=2,
+)
 
 
 def macd_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -837,13 +807,8 @@ def macd_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     HALF_UP rounding; see ``macd_fold``). Order-correct via the
     watermark buffer; state per symbol is O(50 + 9 + watermark-horizon
     ticks); append-mode, one row per event-time tick exactly once."""
-    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _update_macd_ordered,
-        outputStructType=MACD_SCHEMA,
-        stateStructType=_MACD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _by_symbol(
+        ticks, watermark, _macd_update, MACD_SCHEMA, _MACD_STATE_SCHEMA, "append"
     )
 
 
@@ -860,7 +825,7 @@ BOLLINGER_SCHEMA = StructType(
 )
 
 #: ring10 holds the last <= 10 INTEGER-CENTS prices (the batch query's
-#: exact-moment frame); buf_* is the watermark-ordering buffer.
+#: exact-moment frame); buf_* is the watermark buffer.
 _BOLLINGER_STATE_SCHEMA = StructType(
     [
         StructField("ring10", ArrayType(LongType())),
@@ -910,54 +875,13 @@ def bollinger_fold(ring10: list, n: int, ripe: list) -> tuple[list, int, list]:
     return ring10, n, rows
 
 
-def _update_bollinger_ordered(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Watermark-buffered Bollinger state machine — same ordering
-    discipline as ``_update_rsi_ordered``/``_update_macd_ordered``; the
-    fold itself is the pure ``bollinger_fold``."""
-
-    def load():
-        if state.exists:
-            ring10, n, buf_ms, buf_px = state.get
-            return list(ring10 or []), n, list(zip(buf_ms or [], buf_px or []))
-        return [], 0, []
-
-    ring10, n, buf = load()
-    rows: list[tuple] = []
-
-    def emit() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "symbol": [key[0]] * len(rows),
-                "datetime": pd.to_datetime([t for t, *_ in rows], unit="ms"),
-                "sma": [r[1] for r in rows],
-                "sigma": [r[2] for r in rows],
-                "lower_band": [r[3] for r in rows],
-                "upper_band": [r[4] for r in rows],
-                "n_obs": [r[5] for r in rows],
-            }
-        )
-
-    if state.hasTimedOut:
-        ring10, n, rows = bollinger_fold(ring10, n, sorted(buf))
-        state.update((ring10, n, [], []))
-        if rows:
-            yield emit()
-        return
-
-    for pdf in pdf_iter:
-        _append_ticks(buf, pdf)  # vectorized, value-identical (r16)
-    wm = state.getCurrentWatermarkMs()
-    buf.sort()
-    ripe = [(t, x) for t, x in buf if t <= wm]
-    pending = [(t, x) for t, x in buf if t > wm]
-    ring10, n, rows = bollinger_fold(ring10, n, ripe)
-    state.update((ring10, n, [t for t, _ in pending], [x for _, x in pending]))
-    if pending:
-        state.setTimeoutTimestamp(max(t for t, _ in pending) + 1)
-    if rows:
-        yield emit()
+_bollinger_update = watermark_buffered(
+    _flat(bollinger_fold),
+    _tick_rows("sma", "sigma", "lower_band", "upper_band", "n_obs"),
+    _append_ticks,
+    empty=([], 0),
+    n_buf=2,
+)
 
 
 def bollinger_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -968,13 +892,9 @@ def bollinger_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFra
     ``bollinger_fold``). Order-correct via the watermark buffer; state
     per symbol is O(10 + watermark-horizon ticks); append-mode, one row
     per event-time tick from the 10th onward, exactly once."""
-    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _update_bollinger_ordered,
-        outputStructType=BOLLINGER_SCHEMA,
-        stateStructType=_BOLLINGER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _by_symbol(
+        ticks, watermark, _bollinger_update, BOLLINGER_SCHEMA, _BOLLINGER_STATE_SCHEMA,
+        "append"
     )
 
 
@@ -997,8 +917,7 @@ ASOF_SCHEMA = StructType(
 
 #: carry_* is the single carried right row (the whole point: as-of state
 #: is ONE row per key, not a windowed buffer of the right stream);
-#: buf_* is the watermark-ordering buffer shared with every *_ordered
-#: operator in this module — bounded by the watermark horizon.
+#: buf_* is the watermark buffer.
 _ASOF_STATE_SCHEMA = StructType(
     [
         StructField("carry_us", LongType()),
@@ -1035,10 +954,23 @@ def asof_fold(carry_ts, carry_val, ripe):
     return carry_ts, carry_val, rows
 
 
-def _asof_emit(key: str, rows: list) -> pd.DataFrame:
+def _asof_extract(buf: list, pdf: pd.DataFrame) -> None:
+    cols = (pdf["datetime"], pdf["side"], pdf["id"], pdf["value"])
+    for ts, side, rid, val in zip(*cols):
+        buf.append(
+            (
+                int(ts.value // 1_000),  # ns → µs
+                int(side),
+                str(rid),
+                None if pd.isna(val) else float(val),
+            )
+        )
+
+
+def _asof_emit(key: tuple, rows: list) -> pd.DataFrame:
     return pd.DataFrame(
         {
-            "symbol": pd.array([key] * len(rows), dtype="string"),
+            "symbol": pd.array([key[0]] * len(rows), dtype="string"),
             "datetime": pd.to_datetime([r[0] for r in rows], unit="us"),
             "trade_id": pd.array([r[1] for r in rows], dtype="string"),
             "trade_value": pd.array([r[2] for r in rows], dtype="float64"),
@@ -1048,61 +980,17 @@ def _asof_emit(key: str, rows: list) -> pd.DataFrame:
     )
 
 
-def _update_asof(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Watermark-buffered as-of state machine: tagged rows wait in state
-    until the watermark finalizes them, then fold through ``asof_fold``
-    in true event-time order — so a late-but-within-watermark bar lands
-    BEFORE the trades it should enrich, exactly as in the batch join."""
-    if state.hasTimedOut:
-        carry_us, carry_val, buf_us, buf_side, buf_id, buf_val = state.get
-        pending = sorted(
-            zip(buf_us or [], buf_side or [], buf_id or [], buf_val or [])
-        )
-        carry_us, carry_val, rows = asof_fold(carry_us, carry_val, pending)
-        state.update((carry_us, carry_val, [], [], [], []))
-        if rows:
-            yield _asof_emit(key[0], rows)
-        return
-
-    if state.exists:
-        carry_us, carry_val, buf_us, buf_side, buf_id, buf_val = state.get
-        buf = list(zip(buf_us or [], buf_side or [], buf_id or [], buf_val or []))
-    else:
-        carry_us, carry_val, buf = None, None, []
-    for pdf in pdf_iter:
-        for ts, side, rid, val in zip(
-            pdf["datetime"], pdf["side"], pdf["id"], pdf["value"]
-        ):
-            buf.append(
-                (
-                    int(ts.value // 1_000),  # ns → µs
-                    int(side),
-                    str(rid),
-                    None if pd.isna(val) else float(val),
-                )
-            )
-    wm_us = state.getCurrentWatermarkMs() * 1_000
-    buf.sort(key=lambda r: (r[0], r[1], r[2]))
-    ripe = [r for r in buf if r[0] <= wm_us]
-    pending = [r for r in buf if r[0] > wm_us]
-    carry_us, carry_val, rows = asof_fold(carry_us, carry_val, ripe)
-    state.update(
-        (
-            carry_us,
-            carry_val,
-            [r[0] for r in pending],
-            [r[1] for r in pending],
-            [r[2] for r in pending],
-            [r[3] for r in pending],
-        )
-    )
-    if pending:
-        # fire once the watermark passes the YOUNGEST buffered row
-        state.setTimeoutTimestamp(max(r[0] for r in pending) // 1_000 + 1)
-    if rows:
-        yield _asof_emit(key[0], rows)
+#: sorted by (ts, side, row_id) — asof_fold's tie contract; a revised
+#: bar (same ts and id) stays in arrival order, so the later one wins
+_asof_update = watermark_buffered(
+    _flat(asof_fold),
+    _asof_emit,
+    _asof_extract,
+    empty=(None, None),
+    n_buf=4,
+    sort_key=lambda r: r[:3],
+    unit=1_000,
+)
 
 
 def asof_enrich_stream(
@@ -1146,7 +1034,7 @@ def asof_enrich_stream(
         else tagged
     )
     return wm.groupBy("symbol").applyInPandasWithState(
-        _update_asof,
+        _asof_update,
         outputStructType=ASOF_SCHEMA,
         stateStructType=_ASOF_STATE_SCHEMA,
         outputMode="append",
@@ -1182,8 +1070,8 @@ RV_BIPOWER_SCHEMA = StructType(
 #: int64 micros lanes: per-term micros <= |r|^2*1e6 (~1e8 at extreme
 #: tick ratios), so a day would need ~1e10 returns to approach int64 —
 #: and the lane resets every day, so the bound is per (symbol, day),
-#: not per stream. buf_* is the watermark-ordering buffer, bounded by
-#: the watermark horizon exactly as in ``_EWMA_ORDERED_STATE_SCHEMA``.
+#: not per stream. buf_* is the watermark buffer; buf_id is the
+#: pipeline's sha2 ``id``, the same-millisecond tie-break.
 _RV_BIPOWER_STATE_SCHEMA = StructType(
     [
         StructField("day_ms", LongType()),
@@ -1195,11 +1083,6 @@ _RV_BIPOWER_STATE_SCHEMA = StructType(
         StructField("n_pairs", LongType()),
         StructField("buf_ms", ArrayType(LongType())),
         StructField("buf_px", ArrayType(DoubleType())),
-        # deterministic per-tick key (the pipeline's sha2 ``id``): the
-        # fold sorts the buffer by (ts, id), so same-millisecond ticks
-        # fold in a stable, arrival-order-independent order (ADVICE r13:
-        # a ts-only sort folded same-ms ticks in arrival order, silently
-        # breaking the replay-parity claim)
         StructField("buf_id", ArrayType(StringType())),
     ]
 )
@@ -1283,66 +1166,31 @@ def rv_bipower_fold(state_vals: tuple, ripe: list) -> tuple[tuple, list]:
     return (day_ms, prev_px, prev_abs_r, rv_mi, bv_mi, n_rets, n_pairs), out
 
 
-def _update_rv_bipower(
-    key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """Watermark-buffered daily RV/bipower fold — the
-    ``_update_ewma_ordered`` buffering scheme around ``rv_bipower_fold``:
-    ticks wait in state until the watermark passes them, then fold in
-    (event-time, trade-id) order — the pipeline's deterministic sha2
-    ``id`` breaks same-millisecond ties, so the emitted daily rows are
-    identical on any arrival order / micro-batch slicing of the same
-    data (the batch-replay discipline: order by (ts, stable id)). A
-    ts-only sort would fold same-ms ticks in arrival order (ADVICE
-    r13)."""
-    empty = (None, None, None, 0, 0, 0, 0)
-    if state.hasTimedOut:
-        vals = state.get
-        core, buf_ms, buf_px, buf_id = vals[:7], vals[7], vals[8], vals[9]
-        pending = sorted(
-            zip(buf_ms or [], buf_px or [], buf_id or []),
-            key=lambda p: (p[0], p[2]),
-        )
-        core, rows = rv_bipower_fold(
-            tuple(core), [(t, x) for t, x, _ in pending]
-        )
-        state.update(tuple(core) + ([], [], []))
-        for r in rows:
-            r["symbol"] = key[0]
-        if rows:
-            yield pd.DataFrame(rows)
-        return
+def _rv_extract(buf: list, pdf: pd.DataFrame) -> None:
+    for ts, x, tid in zip(pdf["datetime"], pdf["last_price"], pdf["id"]):
+        if x is None or pd.isna(x):
+            continue
+        buf.append((int(ts.value // 1_000_000), float(x), str(tid)))
 
-    if state.exists:
-        vals = state.get
-        core = tuple(vals[:7])
-        buf = list(zip(vals[7] or [], vals[8] or [], vals[9] or []))
-    else:
-        core, buf = empty, []
-    for pdf in pdf_iter:
-        for ts, x, tid in zip(pdf["datetime"], pdf["last_price"], pdf["id"]):
-            if x is None or pd.isna(x):
-                continue
-            buf.append((int(ts.value // 1_000_000), float(x), str(tid)))
-    wm = state.getCurrentWatermarkMs()
-    buf.sort(key=lambda p: (p[0], p[2]))
-    ripe = [(t, x) for t, x, _ in buf if t <= wm]
-    pending = [p for p in buf if p[0] > wm]
-    core, rows = rv_bipower_fold(core, ripe)
-    state.update(
-        tuple(core)
-        + (
-            [t for t, _, _ in pending],
-            [x for _, x, _ in pending],
-            [i for _, _, i in pending],
-        )
-    )
-    if pending:
-        state.setTimeoutTimestamp(max(t for t, _, _ in pending) + 1)
+
+def _rv_emit(key: tuple, rows: list) -> pd.DataFrame:
     for r in rows:
         r["symbol"] = key[0]
-    if rows:
-        yield pd.DataFrame(rows)
+    return pd.DataFrame(rows)
+
+
+#: sorted by (ts, id): the pipeline's deterministic sha2 ``id`` breaks
+#: same-millisecond ties, so the emitted daily rows are identical on any
+#: arrival order or micro-batch slicing of the same data (a ts-only sort
+#: folded same-ms ticks in arrival order, ADVICE r13)
+_rv_bipower_update = watermark_buffered(
+    lambda core, ripe: rv_bipower_fold(core, [(t, x) for t, x, _ in ripe]),
+    _rv_emit,
+    _rv_extract,
+    empty=(None, None, None, 0, 0, 0, 0),
+    n_buf=3,
+    sort_key=lambda p: (p[0], p[2]),
+)
 
 
 def rv_bipower_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -1362,11 +1210,7 @@ def rv_bipower_stream(ticks: DataFrame, watermark: str = "10 minutes") -> DataFr
     counts). The micros lanes reset per day, so int64 headroom is per
     (symbol, day) — ~1e10 extreme-magnitude returns/day before wrap,
     far past any real tape (see ``_RV_BIPOWER_STATE_SCHEMA``)."""
-    wm = ticks.withWatermark("datetime", watermark) if ticks.isStreaming else ticks
-    return wm.groupBy("symbol").applyInPandasWithState(
-        _update_rv_bipower,
-        outputStructType=RV_BIPOWER_SCHEMA,
-        stateStructType=_RV_BIPOWER_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _by_symbol(
+        ticks, watermark, _rv_bipower_update, RV_BIPOWER_SCHEMA,
+        _RV_BIPOWER_STATE_SCHEMA, "update"
     )

@@ -1,4 +1,5 @@
 import os
+import pickle
 import sys
 
 import pytest
@@ -28,3 +29,41 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+class FakeGroupState:
+    """In-memory stand-in for the ``GroupState`` an
+    ``applyInPandasWithState`` update function receives, with Spark's
+    rules: the state value round-trips through pickle, the timeout is
+    cleared on every call, and a timeout timestamp must be positive and
+    not older than the current watermark."""
+
+    def __init__(self, watermark_ms: int = -1, value=None):
+        self.watermark_ms = watermark_ms
+        self.blob = None if value is None else pickle.dumps(tuple(value))
+        self.timeout_ms = None
+        self.hasTimedOut = False
+
+    @property
+    def exists(self) -> bool:
+        return self.blob is not None
+
+    @property
+    def get(self):
+        assert self.blob is not None
+        return pickle.loads(self.blob)
+
+    def update(self, value) -> None:
+        self.blob = pickle.dumps(tuple(value))
+
+    def getCurrentWatermarkMs(self) -> int:
+        return self.watermark_ms
+
+    def setTimeoutTimestamp(self, ts_ms: int) -> None:
+        assert 0 < ts_ms and ts_ms >= self.watermark_ms, (ts_ms, self.watermark_ms)
+        self.timeout_ms = ts_ms
+
+    def call(self, update, key: tuple, pdfs=(), timed_out: bool = False) -> list:
+        """One invocation, as Spark makes it: the frames it yields."""
+        self.timeout_ms, self.hasTimedOut = None, timed_out
+        return list(update(key, iter(pdfs), self))

@@ -302,39 +302,33 @@ def test_sweep_merge_sessions_any_arrival_order(ts, gap, split):
     assert final == want
 
 
-@given(
-    ticks=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=10_000),
-            st.floats(min_value=1.0, max_value=1000.0, allow_nan=False, width=32),
-        ),
-        min_size=1,
-        max_size=80,
-        unique_by=lambda t: t[0],
+ORDERED_TICKS = st.lists(
+    st.tuples(
+        st.integers(min_value=0, max_value=10_000),
+        st.floats(min_value=1.0, max_value=1000.0, allow_nan=False, width=32),
     ),
-    cuts=st.lists(st.integers(min_value=0, max_value=80), max_size=6),
-    lag=st.integers(min_value=0, max_value=10_000),
+    min_size=1,
+    max_size=80,
+    unique_by=lambda t: t[0],
 )
-@settings(max_examples=200, deadline=None)
-def test_rsi_fold_incremental_equals_global(ticks, cuts, lag):
-    """Property of the shared streaming-RSI state machine (`rsi_fold` +
-    the watermark buffer discipline of `_update_rsi_ordered`): for ANY
-    partition of a tick series into micro-batches in ANY arrival order,
-    under the exact watermark contract Spark applies (pre-batch
-    watermark = prior max event time − delay; arrivals at or below it
-    are late-DROPPED, buffered ticks fold once the watermark passes
-    them), the concatenated emissions — after a final timer flush —
-    equal the single global event-time-ordered fold over the ADMITTED
-    ticks. This is the exactly-once, order-correct contract
-    `test_rsi_stream_volume_parity_out_of_order` pins on Spark, checked
-    here across 200 generated histories including ones where the
-    watermark genuinely drops ticks."""
-    from finance_data_ingestion_pipeline_with_kafka_spark.streaming.stateful import (
-        rsi_fold,
-    )
+BATCH_CUTS = st.lists(st.integers(min_value=0, max_value=80), max_size=6)
+WATERMARK_LAG = st.integers(min_value=0, max_value=10_000)
+IDLE_ADVANCES = st.lists(st.integers(min_value=0, max_value=10_000), max_size=6)
 
-    # arbitrary arrival permutation (deterministic shuffle) + arbitrary
-    # batch boundaries
+
+def _buffered_history(update, ticks, cuts, lag, idle):
+    """Feed ``ticks`` [(ts_ms, px)] through a shipped watermark-buffered
+    update function, on a ``FakeGroupState``, in an arbitrary arrival
+    permutation (deterministic shuffle) cut into arbitrary micro-batches,
+    under the watermark contract Spark applies: the pre-batch watermark
+    is the prior max event time − ``lag``, arrivals at or below it are
+    late-DROPPED, and a key without data is called only when its
+    event-time timer has passed. After batch i, ``idle[i]`` models other
+    keys advancing event time by that much while this key stays quiet
+    for a batch. A final timer flush runs once the watermark passes
+    everything. Returns (emitted rows, admitted ticks)."""
+    from .conftest import FakeGroupState
+
     arrival = sorted(ticks, key=lambda t: hash((t[0], 31)) % 1000)
     bounds = sorted({min(c, len(arrival)) for c in cuts} | {len(arrival)})
     batches, prev_b = [], 0
@@ -342,30 +336,121 @@ def test_rsi_fold_incremental_equals_global(ticks, cuts, lag):
         if b > prev_b:
             batches.append(arrival[prev_b:b])
             prev_b = b
-    prev_px, diffs, n, buf = 0.0, [], 0, []
-    got, admitted = [], []
-    wm, max_seen = -1, -1  # watermark lags one batch, as in Spark
-    for batch in batches:
-        keep = [t for t in batch if t[0] > wm]  # late-drop at the gate
-        admitted.extend(keep)
-        buf.extend(keep)
-        buf.sort()
-        ripe = [t for t in buf if t[0] <= wm]
-        buf = [t for t in buf if t[0] > wm]
-        prev_px, diffs, n, rows = rsi_fold(prev_px, diffs, n, ripe)
-        got.extend(rows)
-        if keep:
-            max_seen = max(max_seen, max(t for t, _ in keep))
-        wm = max_seen - lag
-    # final event-time timer: watermark passes everything
-    prev_px, diffs, n, rows = rsi_fold(prev_px, diffs, n, sorted(buf))
-    got.extend(rows)
+    state = FakeGroupState()
+    frames, admitted, max_seen = [], [], -1
 
-    # an admitted tick always folds in event-time position: a newer tick
-    # can only have folded earlier if the watermark already passed it,
-    # and then the older arrival would have been dropped at the gate
-    _, _, _, want = rsi_fold(0.0, [], 0, sorted(admitted))
-    assert got == want
+    def quiet_batch():
+        if state.timeout_ms is not None and state.timeout_ms < state.watermark_ms:
+            frames.extend(state.call(update, ("S",), timed_out=True))
+
+    for i, batch in enumerate(batches):
+        keep = [t for t in batch if t[0] > state.watermark_ms]  # the gate
+        admitted.extend(keep)
+        if keep:
+            pdf = pd.DataFrame(
+                {
+                    "datetime": pd.to_datetime([t for t, _ in keep], unit="ms"),
+                    "last_price": [x for _, x in keep],
+                }
+            )
+            frames += state.call(update, ("S",), [pdf])
+            max_seen = max(max_seen, max(t for t, _ in keep))
+        else:
+            quiet_batch()
+        state.watermark_ms = max_seen - lag  # lags one batch, as in Spark
+        if i < len(idle):
+            max_seen += idle[i]
+            state.watermark_ms = max_seen - lag
+            quiet_batch()
+    if state.timeout_ms is not None:
+        state.watermark_ms = 10**9
+        frames += state.call(update, ("S",), timed_out=True)
+    assert state.get[-1] == []  # every buffered tick folded
+    rows = []
+    for f in frames:
+        f = f.drop(columns="symbol")
+        if "datetime" in f:
+            f["datetime"] = f["datetime"].astype("int64") // 1_000_000
+        rows += [tuple(r) for r in f.itertuples(index=False)]
+    return rows, admitted
+
+
+@given(ticks=ORDERED_TICKS, cuts=BATCH_CUTS, lag=WATERMARK_LAG, idle=IDLE_ADVANCES)
+@settings(max_examples=200, deadline=None)
+def test_rsi_fold_incremental_equals_global(ticks, cuts, lag, idle):
+    """Property of the shipped streaming-RSI update function
+    (``watermark_buffered`` around ``rsi_fold``): for ANY partition of a
+    tick series into micro-batches in ANY arrival order, the
+    concatenated emissions — after a final timer flush — equal the
+    single global event-time-ordered fold over the ADMITTED ticks. This
+    is the exactly-once, order-correct contract
+    `test_rsi_stream_volume_parity_out_of_order` pins on Spark, checked
+    here across 200 generated histories including ones where the
+    watermark genuinely drops ticks. An admitted tick always folds in
+    event-time position: a newer tick can only have folded earlier if
+    the watermark already passed it, and then the older arrival would
+    have been dropped at the gate."""
+    from finance_data_ingestion_pipeline_with_kafka_spark.streaming import stateful
+
+    got, admitted = _buffered_history(stateful._rsi_update, ticks, cuts, lag, idle)
+    assert got == stateful.rsi_fold(0.0, [], 0, sorted(admitted))[3]
+
+
+@pytest.mark.parametrize("op", ["ewma", "macd", "bollinger"])
+@given(ticks=ORDERED_TICKS, cuts=BATCH_CUTS, lag=WATERMARK_LAG, idle=IDLE_ADVANCES)
+@settings(max_examples=200, deadline=None)
+def test_ordered_fold_incremental_equals_global(op, ticks, cuts, lag, idle):
+    """The RSI property above, for the other tick indicators on the same
+    buffer. MACD and Bollinger emit one row per tick: the emissions equal
+    the global fold's rows. The ordered EWMA emits its level after each
+    fold: every emitted (ewma, n_obs) is the global fold over the first
+    n_obs admitted ticks, and the last one covers them all."""
+    from finance_data_ingestion_pipeline_with_kafka_spark.streaming import stateful
+
+    update = {
+        "ewma": stateful._ewma_ordered_update,
+        "macd": stateful._macd_update,
+        "bollinger": stateful._bollinger_update,
+    }[op]
+    got, admitted = _buffered_history(update, ticks, cuts, lag, idle)
+    ordered = sorted(admitted)
+    if op == "macd":
+        assert got == stateful.macd_fold([], [], 0, ordered)[3]
+    elif op == "bollinger":
+        assert got == stateful.bollinger_fold([], 0, ordered)[2]
+    else:
+        prices = [x for _, x in ordered]
+        assert got == [stateful.ewma_fold(None, 0, prices[:n]) for _, n in got]
+        assert got[-1][1] == len(ordered)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    prices=st.lists(
+        st.one_of(
+            st.none(),
+            st.just(float("nan")),
+            st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
+        ),
+        max_size=60,
+    ),
+    cuts=st.lists(st.integers(min_value=0, max_value=60), max_size=5),
+)
+def test_ewma_fold_split_invariance(prices, cuts):
+    """State-carry law of ``ewma_fold``, the fold both EWMA operators
+    run: folding ANY split of a price series piece by piece through the
+    carried (level, count) equals one fold over the whole series,
+    bit-exactly; None/NaN prices are skipped."""
+    from finance_data_ingestion_pipeline_with_kafka_spark.streaming.stateful import (
+        ewma_fold,
+    )
+
+    y, n, prev = None, 0, 0
+    for c in sorted(min(c, len(prices)) for c in cuts) + [len(prices)]:
+        y, n = ewma_fold(y, n, prices[prev:c])
+        prev = c
+    assert (y, n) == ewma_fold(None, 0, prices)
+    assert n == sum(1 for x in prices if x is not None and x == x)
 
 
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])

@@ -1416,6 +1416,69 @@ def test_asof_fold_kernel_ties():
     assert rows2 == [(30, "t3", 6.0, 10, 2.0)]
 
 
+def test_asof_revised_bar_same_on_timer_and_data_flush():
+    """A revised yfinance bar keeps its bar's (ts, id) — the id is
+    sha2(ticker§datetime) — and only its close changes. A trade at that
+    ts must be enriched with the same revision whether the buffer is
+    flushed by the key's event-time timer or by its next data batch: the
+    later revision, whose close here is the lower one."""
+    import pandas as pd
+
+    from finance_data_ingestion_pipeline_with_kafka_spark.streaming.stateful import (
+        _asof_update,
+    )
+
+    from .conftest import FakeGroupState
+
+    ts_us = BASE_MS * 1_000
+    # arrival order: first revision, later revision, then the trade
+    buffered = (
+        None, None, [ts_us] * 3, [0, 0, 1], ["bar1", "bar1", "t1"], [101.0, 99.5, 50.0]
+    )
+    wm = BASE_MS + 10_000
+
+    timer = FakeGroupState(wm, buffered).call(_asof_update, ("AAPL",), timed_out=True)
+    later_trade = pd.DataFrame(
+        {
+            "datetime": [pd.Timestamp(BASE_MS + 60_000, unit="ms")],
+            "side": [1],
+            "id": ["t2"],
+            "value": [51.0],
+        }
+    )
+    data = FakeGroupState(wm, buffered).call(_asof_update, ("AAPL",), [later_trade])
+
+    got = [(f["trade_id"].tolist(), f["bar_value"].tolist()) for f in timer + data]
+    assert got == [(["t1"], [99.5]), (["t1"], [99.5])]
+
+
+def test_only_the_watermark_buffer_and_sessions_arm_timers():
+    """Source scan: under the package, ``setTimeoutTimestamp`` is called
+    only by ``watermark_buffered`` and by ``session_stream``'s updater.
+    An event-time-ordered operator gets its buffer and timer from the
+    factory instead of growing its own copy."""
+    import ast
+    import pathlib
+
+    import finance_data_ingestion_pipeline_with_kafka_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    calls = []
+    for f in sorted(root.rglob("*.py")):
+        for top in ast.parse(f.read_text()).body:
+            calls += [
+                (f.relative_to(root).as_posix(), getattr(top, "name", None))
+                for node in ast.walk(top)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "setTimeoutTimestamp"
+            ]
+    assert calls == [
+        ("streaming/stateful.py", "watermark_buffered"),
+        ("streaming/stateful.py", "_session_update_factory"),
+    ], calls
+
+
 def test_asof_stream_parity_out_of_order(spark, tmp_path):
     """Streaming as-of join vs an independent brute-force reference:
     trades and bars for 3 symbols arrive round-robin-interleaved across
