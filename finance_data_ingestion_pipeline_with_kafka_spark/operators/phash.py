@@ -8,10 +8,11 @@ This is the standard image-dedup stage of large multimodal corpus
 builds (DCT-based pHash): render a small grayscale raster, take the
 low-frequency 8×8 DCT band, and hash each AC coefficient's sign
 against the band median. Near-identical images differ in few bits of
-the hash, so near-dup detection is Hamming distance over 64-bit codes
-— exactly the shape the SimHash machinery already handles at corpus
-scale (banding by pigeonhole, hot-bucket star guard). Documents render
-to images via ``token_raster`` (a token-bucket histogram — edits stay
+the hash, so near-dup detection is Hamming distance over 64-bit codes,
+run through the banded-LSH pair core in ``dedup`` that the SimHash lane
+shares (``int_band_rows`` banding by pigeonhole, the hot-bucket star
+guard of ``guarded_bucket_pairs``, ``delta_probe_pairs``). Documents
+render to images via ``token_raster`` (a token-bucket histogram — edits stay
 local in pixel space, the property file-byte tiling lacks), and every
 raster round-trips through the real GIF89a/LZW codec before hashing.
 
@@ -41,7 +42,15 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
-from .dedup import _TRUTH_CTE, _minhash_cte, HOT_BUCKET_CAP
+from .dedup import (
+    HOT_BUCKET_CAP,
+    _TRUTH_CTE,
+    _minhash_cte,
+    delta_probe_pairs,
+    guarded_bucket_pairs,
+    int_band_rows,
+    survivor_verdicts,
+)
 
 #: Raster size the payload is tiled to before the DCT (pHash classic
 #: uses 32×32 → 8×8 low band).
@@ -162,92 +171,19 @@ def phash_column(frames: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def phash_pairs(
-    frames: DataFrame,
-    id_col: str = "doc_id",
-    hot_bucket_cap: int = HOT_BUCKET_CAP,
+    frames: DataFrame, hot_bucket_cap: int = HOT_BUCKET_CAP
 ) -> DataFrame:
-    """Banded Hamming pairs over pHash codes — same guarded plan shape
-    as ``dedup.simhash_pairs`` (one window over the band key sizes the
-    bucket, hot buckets stream star pairs, only ≤ cap buckets collect
-    into bounded struct arrays for all-pairs expansion), instantiated
-    for 4×16-bit bands over the 63-bit code."""
-    from pyspark.sql import Window
-
-    sigs = phash_column(frames, id_col)
-    mask = (1 << PHASH_BAND_BITS) - 1
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band_id"),
-                F.shiftright("phash", PHASH_BAND_BITS * k)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_val"),
-            )
-            for k in range(PHASH_BANDS)
-        ]
-    )
-    w = Window.partitionBy("band_id", "band_val")
-    wo = w.orderBy(id_col)
-    b = (
-        sigs.select(id_col, "phash", F.explode(bands).alias("b"))
-        .select(id_col, "phash", "b.band_id", "b.band_val")
-        .select(
-            id_col,
-            "phash",
-            "band_id",
-            "band_val",
-            F.count(F.lit(1)).over(w).alias("n"),
-            F.row_number().over(wo).alias("rn"),
-            F.min(id_col).over(w).alias("bmin"),
-            F.first("phash").over(wo).alias("bmin_hash"),
-        )
-    )
-    star_pairs = b.filter((F.col("n") > hot_bucket_cap) & (F.col("rn") > 1)).select(
-        F.col("bmin").alias("doc_a"),
-        F.col(id_col).alias("doc_b"),
-        F.bit_count(F.col("bmin_hash").bitwiseXOR(F.col("phash")))
-        .cast("int")
-        .alias("hamming"),
-    )
-    grouped = (
-        b.filter((F.col("n") <= hot_bucket_cap) & (F.col("n") >= 2))
-        .groupBy("band_id", "band_val")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("doc_id"), "phash"))
-            ).alias("ms")
-        )
-        .select("ms")
-    )
-    n = F.size("ms")
-
-    def pair(x, y):
-        return F.struct(
-            x["doc_id"].alias("doc_a"),
-            y["doc_id"].alias("doc_b"),
-            F.bit_count(x["phash"].bitwiseXOR(y["phash"]))
-            .cast("int")
-            .alias("hamming"),
-        )
-
-    all_pairs = F.flatten(
-        F.transform(
-            "ms",
-            lambda a, i: F.transform(
-                F.slice("ms", i + 2, F.greatest(n - i - 1, F.lit(0))),
-                lambda c: pair(a, c),
-            ),
-        )
-    )
-    cold_pairs = grouped.select(F.explode(all_pairs).alias("p")).select(
-        "p.doc_a", "p.doc_b", "p.hamming"
+    """Banded Hamming pairs over the pHash codes of a (doc_id, text)
+    frame: 4×16-bit bands of the 63-bit code through the shared core
+    (``int_band_rows`` → ``guarded_bucket_pairs``), Hamming ≤ 3."""
+    banded = int_band_rows(
+        phash_column(frames), "phash", PHASH_BANDS, PHASH_BAND_BITS
     )
     # Hamming gate BEFORE the distinct (fewer rows into the exchange;
     # per-pair-deterministic column, so DISTINCT/WHERE commute) and
-    # presentation sort dropped (order-insensitive compare) — both
-    # mirroring the r16 simhash_pairs change.
+    # presentation sort dropped (order-insensitive compare).
     return (
-        cold_pairs.unionByName(star_pairs)
+        guarded_bucket_pairs(banded, "band_val", "phash", hot_bucket_cap)
         .filter(F.col("hamming") <= PHASH_HAMMING)
         .distinct()
     )
@@ -536,26 +472,11 @@ def phash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[U4+U7] Full-corpus image-dedup decision: every hashable document
     with its pHash-cluster keeper (itself when unclustered) and a
     keep/drop verdict — ``filter(keep)`` IS the image-deduplicated
-    corpus, mirroring ``dedup_survivors``. One key-bounded left join
-    from the corpus to the (small) cluster table."""
-    clusters = phash_clusters(spark, sf_dir).withColumnRenamed(
-        "keeper_doc_id", "cluster_keeper"
+    corpus (``dedup.survivor_verdicts``)."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.octet_length(F.encode("text", "utf-8")) >= PHASH_MIN_BYTES
     )
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.octet_length(F.encode("text", "utf-8")) >= PHASH_MIN_BYTES)
-        .select("doc_id")
-    )
-    keeper = F.coalesce(F.col("cluster_keeper"), F.col("doc_id"))
-    return (
-        d.join(clusters, "doc_id", "left")
-        .select(
-            "doc_id",
-            keeper.alias("keeper_doc_id"),
-            (keeper == F.col("doc_id")).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
+    return survivor_verdicts(docs, phash_clusters(spark, sf_dir))
 
 
 def phash_incremental_pairs(
@@ -563,58 +484,21 @@ def phash_incremental_pairs(
 ) -> DataFrame:
     """Incremental image near-dup: Hamming pairs involving ≥1 DELTA doc.
 
-    The nightly shape of a 100 TB image lake, mirroring
-    ``dedup.minhash_incremental_pairs``: the corpus's (band_id,
+    The nightly shape of a 100 TB image lake: the corpus's (band_id,
     band_val, phash) table is persisted once (stood in here by banding
     ``phash_column(base_docs)`` — in production a parquet table
-    maintained across runs) and hashes are computed ONLY for the delta.
-    Candidates come from probing the delta's band rows against the full
-    band table, so the join touches exactly the buckets containing a
-    delta image; a bucket whose members are all pre-existing is never
-    re-paired. Unlike the MinHash lane there is no second verification
-    pass at all — the Hamming verify runs on the 8-byte codes already
-    carried by the band rows. Work per night ∝ |delta| ×
-    affected-bucket occupancy, never corpus size."""
+    maintained across runs) and hashes are computed ONLY for the delta;
+    ``delta_probe_pairs`` finds the candidates. Unlike the MinHash lane
+    there is no second verification pass at all — the Hamming verify
+    runs on the 8-byte codes already carried by the band rows."""
 
-    def bands_of(sigs: DataFrame) -> DataFrame:
-        mask = (1 << PHASH_BAND_BITS) - 1
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(k).alias("band_id"),
-                    F.shiftright("phash", PHASH_BAND_BITS * k)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("band_val"),
-                )
-                for k in range(PHASH_BANDS)
-            ]
+    def bands(docs: DataFrame) -> DataFrame:
+        return int_band_rows(
+            phash_column(docs), "phash", PHASH_BANDS, PHASH_BAND_BITS
         )
-        return sigs.select(
-            "doc_id", "phash", F.explode(arr).alias("b")
-        ).select("doc_id", "phash", "b.band_id", "b.band_val")
 
-    delta_bands = bands_of(phash_column(delta_docs))
-    # in production this is a read of the PERSISTED band table, not a
-    # recompute; the plan shape downstream is identical either way
-    all_bands = bands_of(phash_column(base_docs)).unionByName(delta_bands)
     return (
-        delta_bands.alias("a")
-        .join(
-            all_bands.alias("b"),
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        # delta×delta pairs surface twice (once from each side's probe):
-        # normalize to (min, max) and de-dup
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-            .cast("int")
-            .alias("hamming"),
-        )
-        .distinct()
+        delta_probe_pairs(bands(base_docs), bands(delta_docs), "band_val", "phash")
         .filter(F.col("hamming") <= PHASH_HAMMING)
         .orderBy("doc_a", "doc_b")
     )

@@ -420,8 +420,18 @@ def query(
 #: ``tools/driver_mimic.py`` checks those across the whole catalog. A
 #: change after a newer round is committed restamps it with that round.
 _MODIFIED_SINCE = (17, frozenset({
+    "dedup_survivors",
+    "incremental_clusters",
+    "lsh_bucket_profile",
+    "minhash_band_sweep",
+    "minhash_incremental",
+    "minhash_jaccard_estimate",
     "minhash_near_dup",
+    "minhash_recall",
     "ngram_jaccard_pairs",
+    "phash_incremental",
+    "phash_near_dup",
+    "phash_survivors",
     "simhash_near_dup",
 }))
 

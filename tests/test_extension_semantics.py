@@ -368,7 +368,9 @@ def test_connected_components_long_chain_converges(spark):
 def test_connected_components_matches_union_find(spark):
     """Property: star-contraction components equal a reference union-find
     on assorted adversarial graph shapes (clique, chain+bridge, binary
-    tree, two cliques joined by one edge, shuffled ids)."""
+    tree, two cliques joined by one edge, shuffled ids, single edge,
+    disjoint edges, a fork, a chain in scrambled order); the
+    contraction rounds (``_CC_ROUND_SQL``) leave no temp view behind."""
     from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
         connected_components,
     )
@@ -379,6 +381,10 @@ def test_connected_components_matches_union_find(spark):
         [(i, 2 * i) for i in range(1, 16)] + [(i, 2 * i + 1) for i in range(1, 16)],
         [(1, 2), (2, 3), (1, 3), (7, 8), (8, 9), (7, 9), (3, 7)],
         [(97, 13), (13, 55), (42, 7), (7, 97)],  # unordered ids, src>dst rows
+        [(1, 2)],
+        [(1, 2), (3, 4), (5, 6)],
+        [(2, 3), (2, 5), (7, 9)],
+        [(1, 2), (2, 3), (4, 5), (5, 6), (3, 4)],
     ]
     for edges in cases:
         parent = {}
@@ -398,33 +404,110 @@ def test_connected_components_matches_union_find(spark):
         df = spark.createDataFrame(edges, ["src", "dst"])
         got = {r["id"]: r["component"] for r in connected_components(df).collect()}
         assert got == expect, edges
+        # the contraction rounds' temp views must not leak
+        assert not [
+            t.name for t in spark.catalog.listTables() if t.name.startswith("__cc_round_")
+        ]
 
 
-def test_minhash_hot_bucket_guard_star_pairs(spark):
+def _lsh_kernel(name):
+    """The three banded pair kernels as ``fn(docs, cap)`` over a
+    (doc_id, text) frame."""
+    from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
+        simhash_pairs,
+    )
+    from finance_data_ingestion_pipeline_with_kafka_spark.operators.phash import (
+        phash_pairs,
+    )
+
+    return {
+        "minhash": lambda d, cap: minhash_candidates(minhash_signatures(d), cap),
+        "simhash": lambda d, cap: simhash_pairs(d, cap),
+        "phash": lambda d, cap: phash_pairs(d, cap),
+    }[name]
+
+
+@pytest.mark.parametrize("kernel", ["minhash", "simhash", "phash"])
+def test_hot_bucket_guard_star_pairs(spark, kernel):
     """A clone clique whose band bucket exceeds the cap must emit star
-    pairs (b−1 candidates), not all pairs (b(b−1)/2); below the cap the
-    exact all-pairs set is preserved; and clustering through the star
-    hub keeps the clique in one component."""
+    pairs (b−1 candidates, Hamming 0 through the hub), not all pairs
+    (b(b−1)/2); below the cap the exact all-pairs set is preserved; and
+    clustering through the star hub keeps the clique in one component.
+    One guard serves all three kernels."""
     from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
         connected_components,
     )
 
+    pairs_of = _lsh_kernel(kernel)
     clique = [(i, BASE) for i in range(1, 11)]  # 10 identical docs
     docs = spark.createDataFrame(clique + [(20, FAR)], ["doc_id", "text"])
-    sigs = minhash_signatures(docs)
-    capped = minhash_candidates(sigs, hot_bucket_cap=4).collect()
+    capped = pairs_of(docs, 4).collect()
     pairs = {(r["doc_a"], r["doc_b"]) for r in capped}
     assert pairs == {(1, b) for b in range(2, 11)}  # star to the min member
+    if kernel != "minhash":
+        assert {r["hamming"] for r in capped} == {0}
     # below the cap: the exact quadratic pair set
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_candidates(sigs, hot_bucket_cap=32).collect()
-    }
+    exact = {(r["doc_a"], r["doc_b"]) for r in pairs_of(docs, 32).collect()}
     assert exact == {(a, b) for a in range(1, 11) for b in range(a + 1, 11)}
     # connectivity through the hub survives verification (all J = 1.0)
     edges = spark.createDataFrame(sorted(pairs), ["src", "dst"])
     comp = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert comp == {i: 1 for i in range(1, 11)}
+
+
+def test_one_function_owns_each_lsh_pair_step():
+    """Source scan: under ``operators/``, the hot-bucket split (a
+    ``> cap`` star-branch filter next to a ``<= cap`` collect-branch
+    filter) and the integer band-array construction (``shiftright``
+    inside an ``array`` of band structs) each appear in exactly one
+    function. A banded lane calls the shared core instead of growing
+    its own copy."""
+    import ast
+    import pathlib
+
+    import finance_data_ingestion_pipeline_with_kafka_spark as pkg
+
+    def is_cap(node):
+        return "cap" in ast.unparse(node).lower()
+
+    def cap_filters(fn, op):
+        return [
+            c
+            for c in ast.walk(fn)
+            if isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "filter"
+            and any(
+                isinstance(cmp, ast.Compare)
+                and any(isinstance(o, op) for o in cmp.ops)
+                and is_cap(cmp.comparators[0])
+                for arg in c.args
+                for cmp in ast.walk(arg)
+            )
+        ]
+
+    def int_band_array(fn):
+        return any(
+            isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "array"
+            and "shiftright" in ast.unparse(c)
+            for c in ast.walk(fn)
+        )
+
+    root = pathlib.Path(pkg.__file__).parent / "operators"
+    split, banding = [], []
+    for f in sorted(root.glob("*.py")):
+        for fn in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            where = (f.name, fn.name)
+            if cap_filters(fn, ast.Gt) and cap_filters(fn, ast.LtE):
+                split.append(where)
+            if int_band_array(fn):
+                banding.append(where)
+    assert split == [("dedup.py", "guarded_bucket_pairs")], split
+    assert banding == [("dedup.py", "int_band_rows")], banding
 
 
 def test_approx_percentile_rank_error_bound(spark, sf_dir):
@@ -2017,29 +2100,6 @@ def test_incremental_clusters_merge_two_base_clusters(spark):
     merged = connected_components(base_star.unionByName(delta_pairs))
     got = {r["id"]: r["component"] for r in merged.collect()}
     assert got == {1: 1, 2: 1, 10: 1, 7: 7, 9: 7, 20: 7}  # 30 unclustered
-
-
-def test_simhash_hot_bucket_guard_star_pairs(spark):
-    """SimHash clone clique above the cap → star pairs only (hamming 0
-    through the hub), below the cap → exact all-pairs; same policy as
-    the MinHash guard."""
-    from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
-        simhash_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, BASE) for i in range(1, 9)] + [(20, FAR)], ["doc_id", "text"]
-    )
-    capped = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_pairs(docs, hot_bucket_cap=4).collect()
-    }
-    assert capped == {(1, b, 0) for b in range(2, 9)}
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in simhash_pairs(docs, hot_bucket_cap=64).collect()
-    }
-    assert exact == {(a, b) for a in range(1, 9) for b in range(a + 1, 9)}
 
 
 def test_historical_var_rank_semantics(spark, sf_dir, monkeypatch):
@@ -3795,15 +3855,28 @@ def test_pair_emitters_satisfy_assume_canonical_contract(spark, sf_dir):
 
 
 def test_cc_round_sql_equals_dataframe_form(spark):
-    """r17 pin (VERDICT r16 ask #4): the generated-SQL contraction round
-    (_cc_round_sql) must produce exactly the edge set of the DataFrame
-    form _small_star(_large_star(e)) it transcribes, on every topology
-    the r16 fast-path pin exercises."""
+    """The generated-SQL contraction round (_cc_round_sql) must produce
+    exactly the edge set of one small-star ∘ large-star round in its
+    set form (the DataFrame operations it transcribes), computed here
+    in plain Python, on every topology the fast-path pin exercises."""
     from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
         _cc_round_sql,
-        _large_star,
-        _small_star,
     )
+
+    def large_star(edges):
+        doubled = edges | {(v, u) for u, v in edges}
+        m = {}
+        for u, v in doubled:
+            m[u] = min(m.get(u, u), v)
+        return {(m[u], v) for u, v in doubled if v > u}
+
+    def small_star(edges):
+        m = {}
+        for u, v in edges:
+            m[v] = min(m.get(v, u), u)
+        return {(m[v], u) for u, v in edges if u != m[v]} | {
+            (m[v], v) for _, v in edges
+        }
 
     cases = [
         [(i, j) for i in range(1, 9) for j in range(i + 1, 9)],
@@ -3815,9 +3888,9 @@ def test_cc_round_sql_equals_dataframe_form(spark):
     ]
     for edges in cases:
         e = spark.createDataFrame(edges, ["u", "v"])
-        df_form = sorted(map(tuple, _small_star(_large_star(e)).collect()))
+        ref = sorted(small_star(large_star(set(edges))))
         sql_form = sorted(map(tuple, _cc_round_sql(e).collect()))
-        assert sql_form == df_form, edges
+        assert sql_form == ref, edges
         # the round's temp view must not leak
         assert not [
             t.name for t in spark.catalog.listTables() if t.name.startswith("__cc_round_")

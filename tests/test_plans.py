@@ -375,19 +375,25 @@ def test_lsh_pair_kernels_share_the_band_exchange(spark, sf_dir):
     execution (one shuffle of the band table, signature lineage runs
     once). If the branches ever diverge canonically below the window,
     the exchange duplicates and the signature pipeline silently
-    executes twice — this pins the reuse."""
+    executes twice — this pins the reuse for each kernel."""
     from finance_data_ingestion_pipeline_with_kafka_spark.catalog import load_table
     from finance_data_ingestion_pipeline_with_kafka_spark.operators.dedup import (
         minhash_candidates,
         minhash_signatures,
         simhash_pairs,
     )
+    from finance_data_ingestion_pipeline_with_kafka_spark.operators.phash import (
+        phash_pairs,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    p = executed_plan(minhash_candidates(minhash_signatures(docs)), run=True)
-    assert "ReusedExchange" in p
-    p2 = executed_plan(simhash_pairs(docs), run=True)
-    assert "ReusedExchange" in p2
+    kernels = {
+        "minhash": lambda: minhash_candidates(minhash_signatures(docs)),
+        "simhash": lambda: simhash_pairs(docs),
+        "phash": lambda: phash_pairs(docs),
+    }
+    for kernel, pairs in kernels.items():
+        assert "ReusedExchange" in executed_plan(pairs(), run=True), kernel
 
 
 def test_pq_path_broadcasts_and_shares_codebook(spark, sf_dir):

@@ -354,6 +354,10 @@ def _buffered_history(update, ticks, cuts, lag, idle):
                 }
             )
             frames += state.call(update, ("S",), [pdf])
+            # eviction: the state keeps only ticks the watermark this
+            # call saw has not passed (buffers are (ts_ms, px), so the
+            # event-time column is second from last)
+            assert all(t > state.watermark_ms for t in state.get[-2])
             max_seen = max(max_seen, max(t for t, _ in keep))
         else:
             quiet_batch()
