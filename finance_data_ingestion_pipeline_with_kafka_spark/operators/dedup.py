@@ -168,30 +168,28 @@ def minhash_signatures(docs: DataFrame, perms: int = MINHASH_PERMS) -> DataFrame
 # Banded-LSH pair core (see the module docstring).
 
 
-def band_rows(
-    sigs: DataFrame, n_bands: int = MINHASH_BANDS, n_rows: int = MINHASH_ROWS
-) -> DataFrame:
-    """(doc_id, band_id, band_hash) rows — LSH banding of the ``minhash``
-    array into ``n_bands`` bands of ``n_rows`` rows: band hash = md5 of
-    the band's concatenated row minhashes (fixed 32-char pieces — no
-    separator ambiguity). The 4×4 default is the production split;
-    ``minhash_band_sweep`` passes the other divisors."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat(
-                        *[
-                            F.element_at("minhash", b * n_rows + r + 1)
-                            for r in range(n_rows)
-                        ]
-                    )
-                ).alias("band_hash"),
+def _band(b: int, n_rows: int, *tags: F.Column) -> F.Column:
+    """Band ``b`` of ``n_rows`` rows of the ``minhash`` array as a
+    (*tags, band_id, band_hash) struct: band hash = md5 of the band's
+    concatenated row minhashes (fixed 32-char pieces — no separator
+    ambiguity)."""
+    return F.struct(
+        *tags,
+        F.lit(b).alias("band_id"),
+        F.md5(
+            F.concat(
+                *[F.element_at("minhash", b * n_rows + r + 1) for r in range(n_rows)]
             )
-            for b in range(n_bands)
-        ]
+        ).alias("band_hash"),
     )
+
+
+def band_rows(sigs: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash) rows — LSH banding of the ``minhash``
+    array into the production ``MINHASH_BANDS`` × ``MINHASH_ROWS`` split
+    (``_band``); ``minhash_band_sweep`` bands every other divisor split
+    in the same pass."""
+    bands = F.array(*[_band(b, MINHASH_ROWS) for b in range(MINHASH_BANDS)])
     return sigs.select("doc_id", F.explode(bands).alias("band")).select(
         "doc_id", "band.band_id", "band.band_hash"
     )
@@ -826,6 +824,34 @@ def exact_truth_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
+def pair_audit(
+    found: DataFrame, truth: DataFrame, configs: DataFrame | None = None
+) -> DataFrame:
+    """``n_truth``, ``n_found`` and ``n_hit`` (= |found ∩ truth|) of two
+    distinct (doc_a, doc_b) pair sets: one full outer join on the pair
+    with a presence flag per side, then one aggregation, so ``truth`` is
+    read once. ``configs``, an optional literal spine whose columns also
+    tag ``found``'s rows (``minhash_band_sweep``'s band splits), is
+    crossed with ``truth``; the result then has one row per spine row,
+    zeros included."""
+    keys = configs.columns if configs is not None else []
+    if configs is not None:
+        truth = truth.crossJoin(F.broadcast(configs))
+    on = [*keys, "doc_a", "doc_b"]
+    flagged = found.select(*on, F.lit(True).alias("f")).join(
+        truth.select(*on, F.lit(True).alias("t")), on, "full"
+    )
+    counts = flagged.groupBy(*keys).agg(
+        F.count("t").alias("n_truth"),
+        F.count("f").alias("n_found"),
+        # null AND true is null: counts the rows present on both sides
+        F.count(F.col("t") & F.col("f")).alias("n_hit"),
+    )
+    if configs is None:
+        return counts
+    return configs.join(F.broadcast(counts), keys, "left").na.fill(0)
+
+
 @query(
     "minhash_recall",
     oracle=f"""
@@ -873,31 +899,25 @@ def minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is one row — a build-time persist would outlive the action (no
     # post-action hook here), and leaked cached blocks cost more than
     # the recompute
-    truth = exact_truth_pairs(docs)
-    sigs = minhash_signatures(docs)
-    cands = minhash_candidates(sigs)
-    verified = minhash_near_dup(spark, sf_dir)
-    n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-    n_cand = cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
-    n_ver = verified.agg(F.count(F.lit(1)).cast("bigint").alias("n_verified"))
-    out = (
-        n_truth.crossJoin(n_cand)  # three 1-row frames: literal-carry, not cartesian
-        .crossJoin(n_ver)
-        .select(
-            "n_truth",
-            "n_candidates",
-            "n_verified",
-            F.when(
-                F.col("n_truth") > 0,
-                F.col("n_verified").cast("double") / F.col("n_truth"),
-            ).alias("recall"),
-            F.when(
-                F.col("n_candidates") > 0,
-                F.col("n_verified").cast("double") / F.col("n_candidates"),
-            ).alias("candidate_precision"),
-        )
+    audit = pair_audit(
+        minhash_candidates(minhash_signatures(docs)), exact_truth_pairs(docs)
     )
-    return out
+    n_ver = minhash_near_dup(spark, sf_dir).agg(
+        F.count(F.lit(1)).alias("n_verified")
+    )
+    return audit.crossJoin(n_ver).select(  # 1-row frames: literal-carry
+        "n_truth",
+        F.col("n_found").alias("n_candidates"),
+        "n_verified",
+        _ratio("n_verified", "n_truth").alias("recall"),
+        _ratio("n_verified", "n_found").alias("candidate_precision"),
+    )
+
+
+def _ratio(num: str, den: str) -> F.Column:
+    """``num / den`` as a double, null when ``den`` is 0 — the oracles'
+    ``CASE WHEN den > 0 THEN CAST(num AS DOUBLE) / den END``."""
+    return F.when(F.col(den) > 0, F.col(num).cast("double") / F.col(den))
 
 
 @query(
@@ -1261,16 +1281,32 @@ def simhash_pairs(
     )
 
 
-@query(
-    "simhash_recall",
-    oracle=f"""
+def _flagged_recall(spark: SparkSession, sf_dir: str, flagged: DataFrame) -> DataFrame:
+    """(n_truth, n_flagged, n_hit, recall, precision) of a detector's
+    distinct flagged (doc_a, doc_b[, ...]) pairs against the exact truth
+    pairs of the corpus (``pair_audit``) — the cross-representation
+    audit row of ``simhash_recall`` and ``phash.phash_recall``."""
+    truth = exact_truth_pairs(load_table(spark, sf_dir, "documents"))
+    return pair_audit(flagged.select("doc_a", "doc_b"), truth).select(
+        "n_truth",
+        F.col("n_found").alias("n_flagged"),
+        "n_hit",
+        _ratio("n_hit", "n_truth").alias("recall"),
+        _ratio("n_hit", "n_found").alias("precision"),
+    )
+
+
+def _flagged_recall_oracle(cte: str, flagged: str) -> str:
+    """Oracle SQL of ``_flagged_recall`` for the detector whose ``cte``
+    ends in the ``flagged`` pair relation."""
+    return f"""
     WITH {_minhash_cte()},
     {_TRUTH_CTE},
-    {_simhash_cte()},
+    {cte},
     counts AS (
       SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-             CAST((SELECT COUNT(*) FROM sh_flagged) AS BIGINT) AS n_flagged,
-             CAST((SELECT COUNT(*) FROM sh_flagged f
+             CAST((SELECT COUNT(*) FROM {flagged}) AS BIGINT) AS n_flagged,
+             CAST((SELECT COUNT(*) FROM {flagged} f
                    JOIN truth t ON t.doc_a = f.doc_a AND t.doc_b = f.doc_b)
                   AS BIGINT) AS n_hit
     )
@@ -1280,7 +1316,12 @@ def simhash_pairs(
            CASE WHEN n_flagged > 0
                 THEN CAST(n_hit AS DOUBLE) / n_flagged END AS precision
     FROM counts
-    """,
+    """
+
+
+@query(
+    "simhash_recall",
+    oracle=_flagged_recall_oracle(_simhash_cte(), "sh_flagged"),
     tags=("U4",),
     crossover=False,
 )
@@ -1299,30 +1340,7 @@ def simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus dedup pass. Same audit-path scale contract as
     ``minhash_recall``: exact integer counts, engine-identical double
     ratios."""
-    docs = load_table(spark, sf_dir, "documents")
-    truth = exact_truth_pairs(docs)
-    flagged = simhash_near_dup(spark, sf_dir)
-    hit = flagged.join(truth, ["doc_a", "doc_b"])
-    n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-    n_flagged = flagged.agg(F.count(F.lit(1)).cast("bigint").alias("n_flagged"))
-    n_hit = hit.agg(F.count(F.lit(1)).cast("bigint").alias("n_hit"))
-    return (
-        n_truth.crossJoin(n_flagged)  # three 1-row frames: literal-carry
-        .crossJoin(n_hit)
-        .select(
-            "n_truth",
-            "n_flagged",
-            "n_hit",
-            F.when(
-                F.col("n_truth") > 0,
-                F.col("n_hit").cast("double") / F.col("n_truth"),
-            ).alias("recall"),
-            F.when(
-                F.col("n_flagged") > 0,
-                F.col("n_hit").cast("double") / F.col("n_flagged"),
-            ).alias("precision"),
-        )
-    )
+    return _flagged_recall(spark, sf_dir, simhash_near_dup(spark, sf_dir))
 
 
 def connected_components(
@@ -1637,15 +1655,10 @@ def survivor_verdicts(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     (small) cluster table."""
     clusters = clusters.withColumnRenamed("keeper_doc_id", "cluster_keeper")
     keeper = F.coalesce(F.col("cluster_keeper"), F.col("doc_id"))
-    return (
-        docs.select("doc_id")
-        .join(clusters, "doc_id", "left")
-        .select(
-            "doc_id",
-            keeper.alias("keeper_doc_id"),
-            (keeper == F.col("doc_id")).alias("keep"),
-        )
-        .orderBy("doc_id")
+    return docs.select("doc_id").join(clusters, "doc_id", "left").select(
+        "doc_id",
+        keeper.alias("keeper_doc_id"),
+        (keeper == F.col("doc_id")).alias("keep"),
     )
 
 
@@ -2249,7 +2262,6 @@ def _sweep_oracle() -> str:
     "minhash_band_sweep",
     oracle=f"WITH {_minhash_cte()},\n    {_TRUTH_CTE},\n    {_sweep_oracle()}",
     tags=("U4",),
-    prepared=False,  # localCheckpoint materializes per-config counts at build
     crossover=False,
 )
 def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2269,66 +2281,60 @@ def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     All counts are exact integers from engine-identical md5 pipelines;
     ratios are single double divisions. Truth is the AUDIT-path
     inverted-index kernel (see ``minhash_recall`` for its scale
-    contract); signatures and truth are persisted once and shared by
-    all four configs, so the sweep costs one signature build + four
-    banded self-joins — at lake scale, four probes of one stored
-    signature table."""
+    contract). One pass: the signatures explode into all 30 bands of the
+    four configs tagged (n_bands, n_rows), ONE self-join on (n_bands,
+    band_id, band_hash) pairs every config, and ``pair_audit`` scores
+    all four against one read of the truth — no persist, no
+    per-config action (15 jobs per invocation at sf0.1); at lake scale,
+    one probe of one stored signature table."""
     docs = load_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(docs).persist()
-    truth = exact_truth_pairs(docs).persist()
-    n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-    rows = []
-    for nb, nr in _SWEEP_CONFIGS:
-        cands = band_rows(sigs, nb, nr)
-        cands = (
-            cands.alias("a")
-            .join(
-                cands.alias("b"),
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .distinct()
-            .persist()
+    bands = F.array(
+        *[
+            _band(b, nr, F.lit(nb).alias("n_bands"), F.lit(nr).alias("n_rows"))
+            for nb, nr in _SWEEP_CONFIGS
+            for b in range(nb)
+        ]
+    )
+    banded = minhash_signatures(docs).select(
+        "doc_id", F.explode(bands).alias("band")
+    ).select("doc_id", "band.*")
+    key = ("n_bands", "band_id", "band_hash")
+    cands = (
+        banded.alias("a")
+        .join(
+            banded.alias("b"),
+            [F.col(f"a.{c}") == F.col(f"b.{c}") for c in key]
+            + [F.col("a.doc_id") < F.col("b.doc_id")],
         )
-        counts = (
-            cands.agg(F.count(F.lit(1)).cast("bigint").alias("n_candidates"))
-            .crossJoin(  # 1-row frames: literal-carry, not cartesian
-                cands.join(truth, ["doc_a", "doc_b"]).agg(
-                    F.count(F.lit(1)).cast("bigint").alias("n_hits")
-                )
-            )
-            .crossJoin(n_truth)
-            .select(
-                F.lit(nb).cast("int").alias("n_bands"),
-                F.lit(nr).cast("int").alias("n_rows"),
-                "n_truth",
-                "n_candidates",
-                "n_hits",
+        .select(
+            "a.n_bands",
+            "a.n_rows",
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+        )
+        .distinct()
+    )
+    # pure-plan literal (inline over a one-row Range): createDataFrame
+    # would plant a LogicalRDD in this prepared query's cached plan
+    configs = spark.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(nb).alias("n_bands"), F.lit(nr).alias("n_rows"))
+                    for nb, nr in _SWEEP_CONFIGS
+                ]
             )
         )
-        counts = materialize(counts)  # materialize the 1-row result now
-        cands.unpersist()
-        rows.append(counts)
-    sigs.unpersist()
-    truth.unpersist()
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out.select(
+    )
+    audit = pair_audit(cands, exact_truth_pairs(docs), configs)
+    return audit.select(
         "n_bands",
         "n_rows",
         "n_truth",
-        "n_candidates",
-        "n_hits",
-        F.when(
-            F.col("n_truth") > 0, F.col("n_hits").cast("double") / F.col("n_truth")
-        ).alias("recall"),
-        F.when(
-            F.col("n_candidates") > 0,
-            F.col("n_hits").cast("double") / F.col("n_candidates"),
-        ).alias("candidate_precision"),
+        F.col("n_found").alias("n_candidates"),
+        F.col("n_hit").alias("n_hits"),
+        _ratio("n_hit", "n_truth").alias("recall"),
+        _ratio("n_hit", "n_found").alias("candidate_precision"),
     ).orderBy("n_bands")
 
 
@@ -2474,7 +2480,7 @@ def incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = connected_components(base_star.unionByName(delta_pairs))
     return merged.select(
         F.col("id").alias("doc_id"), F.col("component").alias("keeper_doc_id")
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------

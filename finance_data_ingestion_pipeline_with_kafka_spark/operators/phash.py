@@ -44,8 +44,8 @@ from ..catalog import load_table
 from ..registry import query
 from .dedup import (
     HOT_BUCKET_CAP,
-    _TRUTH_CTE,
-    _minhash_cte,
+    _flagged_recall,
+    _flagged_recall_oracle,
     delta_probe_pairs,
     guarded_bucket_pairs,
     int_band_rows,
@@ -325,29 +325,9 @@ def phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phash_pairs(docs.select("doc_id", "text"))
 
 
-_PHASH_RECALL_ORACLE = f"""
-    WITH {_minhash_cte()},
-    {_TRUTH_CTE},
-    {_phash_cte()},
-    counts AS (
-      SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_truth,
-             CAST((SELECT COUNT(*) FROM ph_flagged) AS BIGINT) AS n_flagged,
-             CAST((SELECT COUNT(*) FROM ph_flagged f
-                   JOIN truth t ON t.doc_a = f.doc_a AND t.doc_b = f.doc_b)
-                  AS BIGINT) AS n_hit
-    )
-    SELECT n_truth, n_flagged, n_hit,
-           CASE WHEN n_truth > 0
-                THEN CAST(n_hit AS DOUBLE) / n_truth END AS recall,
-           CASE WHEN n_flagged > 0
-                THEN CAST(n_hit AS DOUBLE) / n_flagged END AS precision
-    FROM counts
-    """
-
-
 @query(
     "phash_recall",
-    oracle=_PHASH_RECALL_ORACLE,
+    oracle=_flagged_recall_oracle(_phash_cte(), "ph_flagged"),
     tags=("U4", "U7"),
     crossover=False,
 )
@@ -361,32 +341,7 @@ def phash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared ``exact_truth_pairs`` kernel quantify the representation
     gap an operator accepts when fronting an image-dedup pass with
     pHash. Exact integer counts; engine-identical double ratios."""
-    from .dedup import exact_truth_pairs
-
-    docs = load_table(spark, sf_dir, "documents")
-    truth = exact_truth_pairs(docs)
-    flagged = phash_near_dup(spark, sf_dir)
-    hit = flagged.join(truth, ["doc_a", "doc_b"])
-    n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-    n_flagged = flagged.agg(F.count(F.lit(1)).cast("bigint").alias("n_flagged"))
-    n_hit = hit.agg(F.count(F.lit(1)).cast("bigint").alias("n_hit"))
-    return (
-        n_truth.crossJoin(n_flagged)  # three 1-row frames: literal-carry
-        .crossJoin(n_hit)
-        .select(
-            "n_truth",
-            "n_flagged",
-            "n_hit",
-            F.when(
-                F.col("n_truth") > 0,
-                F.col("n_hit").cast("double") / F.col("n_truth"),
-            ).alias("recall"),
-            F.when(
-                F.col("n_flagged") > 0,
-                F.col("n_hit").cast("double") / F.col("n_flagged"),
-            ).alias("precision"),
-        )
-    )
+    return _flagged_recall(spark, sf_dir, phash_near_dup(spark, sf_dir))
 
 
 @query(
@@ -497,11 +452,9 @@ def phash_incremental_pairs(
             phash_column(docs), "phash", PHASH_BANDS, PHASH_BAND_BITS
         )
 
-    return (
-        delta_probe_pairs(bands(base_docs), bands(delta_docs), "band_val", "phash")
-        .filter(F.col("hamming") <= PHASH_HAMMING)
-        .orderBy("doc_a", "doc_b")
-    )
+    return delta_probe_pairs(
+        bands(base_docs), bands(delta_docs), "band_val", "phash"
+    ).filter(F.col("hamming") <= PHASH_HAMMING)
 
 
 @query(

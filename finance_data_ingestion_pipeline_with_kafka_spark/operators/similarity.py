@@ -106,6 +106,57 @@ def decimal_centroids(assigned, cell_col: str):
     )
 
 
+def top_k(
+    scored: DataFrame,
+    order: Column | str,
+    k: int = TOP_K,
+    id_col: str = "vec_id",
+    by: tuple[str, ...] = ("query_id",),
+) -> DataFrame:
+    """The first ``k`` rows of ``scored`` per ``by`` group, ranked by
+    ``order`` and then ``id_col`` ascending — the id tie-break every
+    oracle's ``ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score,
+    id)`` uses, so equal rounded scores cut the same rows in both
+    engines. Same columns as ``scored``, in no order: the oracle compare
+    is order-insensitive, and a presentation sort would cost a range
+    exchange and a global sort per run."""
+    w = Window.partitionBy(*by).orderBy(order, id_col)
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def recall_at_k(
+    approx: DataFrame, truth: DataFrame, groups: DataFrame | None = None
+) -> DataFrame:
+    """Per-query recall@k of the approximate top-k rows ``approx``
+    (query_id, vec_id) against the exact top-k ``truth``: (*groups,
+    query_id, n_hits, recall_at_k) for every query of ``truth`` — times
+    every row of the optional ``groups`` literal spine (methods, probe
+    counts), whose columns also tag ``approx``'s rows — with 0 hits where
+    nothing matched. ``truth`` is at most ``N_QUERY_VECS·TOP_K`` rows
+    and is broadcast-pinned: under the tiny-input AQE-off policy no
+    runtime conversion would rescue a sort-merge hit join."""
+    keys = [*(groups.columns if groups is not None else []), "query_id"]
+    truth = truth.select("query_id", "vec_id")
+    spine = truth.select("query_id").distinct()
+    if groups is not None:
+        spine = spine.crossJoin(F.broadcast(groups))
+    hits = (
+        approx.join(F.broadcast(truth), ["query_id", "vec_id"])
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    c = F.coalesce(F.col("c"), F.lit(0))
+    return spine.join(F.broadcast(hits), keys, "left").select(
+        *keys,
+        c.cast("bigint").alias("n_hits"),
+        (c.cast("double") / F.lit(float(TOP_K))).alias("recall_at_k"),
+    )
+
+
 _ORACLE_COSINE = """
     WITH vecs AS (
       SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
@@ -220,15 +271,7 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.concat(parts, ignore_index=True)
 
-    scored = e.mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "label", "cosine_sim")
-        # presentation sort dropped (order-insensitive compare); the
-        # window's partition sort is the semantic top-k order
-    )
+    return top_k(e.mapInPandas(score, schema), F.desc("cosine_sim"))
 
 
 def hyperplane(seed: int, dim: int) -> list[float]:
@@ -352,13 +395,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot("qv", "v") / (F.col("qnorm") * F.col("norm")), 6
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "label", "cosine_sim")
-        .orderBy("query_id", F.desc("cosine_sim"), "vec_id")
-    )
+    return top_k(scored, F.desc("cosine_sim"))
 
 
 @query(
@@ -523,8 +560,8 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple:
     runs once inside the action as the model broadcast's build job;
     assignment is a projection over the corpus scan (``_elect_structs``).
     r11's eager ``materialize()`` + two full broadcast builds (and r10's
-    repeated training jobs) are gone — measured A/B (tools/ab_ann*.py,
-    SCALE.md Round 12): every sharing strategy (checkpoint / persist /
+    repeated training jobs) are gone — measured A/B (a since-deleted
+    tool, SCALE.md Round 12): every sharing strategy (checkpoint / persist /
     recompute / driver-collected literals) lands in the same 1.0-1.3 s
     floor band at sf0.1 1×-10×, so the shape with the best scale
     properties and no replay hazard wins."""
@@ -599,14 +636,7 @@ def _ivf_topk(
             "cosine_sim"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "label", "cosine_sim")
-        # presentation sort dropped: compare is order-insensitive and the
-        # range exchange + global sort is pure per-run overhead
-    )
+    return top_k(scored, F.desc("cosine_sim"))
 
 
 @query("ivf_ann", oracle=_ivf_oracle(), tags=("U5",), policy=sized)
@@ -1193,7 +1223,7 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape (rewritten r12 under the honest per-pass protocol —
     A/B'd against checkpoint/persist/recompute sharing AND against
-    driver-collected literal codebooks, tools/ab_ann*.py, SCALE.md
+    driver-collected literal codebooks, a since-deleted tool, SCALE.md
     Round 12): the codebook trains IN-PLAN and is pivoted per-dim into a
     cl-sorted value array (``carr``) that broadcasts (bounded: EMBED_DIM
     rows × |labels| doubles), and the per-(vec, sub, cl) distance table
@@ -1247,14 +1277,7 @@ def pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_subs") == PQ_SUBS)
         .drop("n_subs")
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "vec_id")
-    return (
-        adc.select("query_id", "vec_id", "adc_dist", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-        # presentation sort dropped: compare is order-insensitive and the
-        # range exchange + global sort is pure per-run overhead
-    )
+    return top_k(adc, "adc_dist")
 
 
 _PQ_DISTORTION_ORACLE = f"""
@@ -1474,6 +1497,28 @@ def ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recall_oracle_tail(group: str, spine: str, group_out: str) -> str:
+    """Oracle SQL of ``recall_at_k`` after the ``gt`` and (``group``,
+    query_id, vec_id) ``approx`` CTEs: the (``spine`` × truth query)
+    rows, each with its hit count over ``TOP_K``."""
+    return f"""    ), qm AS (
+      SELECT DISTINCT m.{group}, g.query_id
+      FROM gt g CROSS JOIN ({spine}) m
+    ), matched AS (
+      SELECT a.{group}, a.query_id, COUNT(*) AS c
+      FROM approx a JOIN gt g
+        ON g.query_id = a.query_id AND g.vec_id = a.vec_id
+      GROUP BY a.{group}, a.query_id
+    )
+    SELECT {group_out}, qm.query_id,
+           CAST(COALESCE(matched.c, 0) AS BIGINT) AS n_hits,
+           CAST(COALESCE(matched.c, 0) AS DOUBLE) / {TOP_K} AS recall_at_k
+    FROM qm LEFT JOIN matched
+      ON matched.{group} = qm.{group} AND matched.query_id = qm.query_id
+    ORDER BY qm.{group}, qm.query_id
+"""
+
+
 _ANN_RECALL_ORACLE = f"""
     WITH gt AS (
       {_ORACLE_COSINE.format(nq=N_QUERY_VECS, k=TOP_K)}
@@ -1485,22 +1530,9 @@ _ANN_RECALL_ORACLE = f"""
       SELECT 'ivf' AS method, query_id, vec_id FROM ivf
       UNION ALL
       SELECT 'pq' AS method, query_id, vec_id FROM pq
-    ), qm AS (
-      SELECT DISTINCT m.method, g.query_id
-      FROM gt g CROSS JOIN (SELECT 'ivf' AS method UNION ALL SELECT 'pq') m
-    ), matched AS (
-      SELECT a.method, a.query_id, COUNT(*) AS c
-      FROM approx a JOIN gt g
-        ON g.query_id = a.query_id AND g.vec_id = a.vec_id
-      GROUP BY a.method, a.query_id
-    )
-    SELECT qm.method, qm.query_id,
-           CAST(COALESCE(matched.c, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(matched.c, 0) AS DOUBLE) / {TOP_K} AS recall_at_k
-    FROM qm LEFT JOIN matched
-      ON matched.method = qm.method AND matched.query_id = qm.query_id
-    ORDER BY qm.method, qm.query_id
-"""
+{_recall_oracle_tail(
+    "method", "SELECT 'ivf' AS method UNION ALL SELECT 'pq'", "qm.method"
+)}"""
 
 
 # prepared=False: composes knn_bruteforce, whose CONSTRUCTION collects
@@ -1514,13 +1546,13 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Composes the three catalog queries verbatim (same builders, same
     determinism contracts), so the metric itself is exact and
     hash-comparable: every input ranking is rounded-score + id tie-broken.
-    The per-(method, query) spine is a crossJoin of the 5 distinct query
-    ids with a 2-row method literal — a broadcast literal-carry, not a
-    cartesian. Scale: the expensive inputs are the index scans themselves;
-    the recall join touches only 3·k·n_queries id pairs — evaluation
-    cost is index cost, the shape a recall dashboard at 100 TB needs
-    (ground truth restricted to a sampled query set, as here)."""
-    gt = knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
+    ``recall_at_k`` scores both over a (method × query) spine: the 5
+    distinct query ids crossed with a 2-row method literal — a broadcast
+    literal-carry, not a cartesian. Scale: the expensive inputs are the
+    index scans themselves; the recall join touches only 3·k·n_queries
+    id pairs — evaluation cost is index cost, the shape a recall
+    dashboard at 100 TB needs (ground truth restricted to a sampled
+    query set, as here)."""
     approx = (
         ivf_ann(spark, sf_dir)
         .select(F.lit("ivf").alias("method"), "query_id", "vec_id")
@@ -1531,23 +1563,8 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     methods = spark.createDataFrame([("ivf",), ("pq",)], "method string")
-    qm = gt.select("query_id").distinct().crossJoin(F.broadcast(methods))
-    matched = (
-        approx.join(gt, ["query_id", "vec_id"])
-        .groupBy("method", "query_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        qm.join(F.broadcast(matched), ["method", "query_id"], "left")
-        .select(
-            "method",
-            "query_id",
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("n_hits"),
-            (
-                F.coalesce(F.col("c"), F.lit(0)).cast("double") / F.lit(float(TOP_K))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("method", "query_id")
+    return recall_at_k(approx, knn_bruteforce(spark, sf_dir), methods).orderBy(
+        "method", "query_id"
     )
 
 
@@ -1832,32 +1849,9 @@ def sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("qcos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qcos"), "vec_id")
-    topk = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id")
-    )
-    gt = knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    matched = (
-        topk.join(gt, ["query_id", "vec_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        gt.select("query_id")
-        .distinct()
-        .join(matched, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("n_hits"),
-            (
-                F.coalesce(F.col("c"), F.lit(0)).cast("double")
-                / F.lit(float(TOP_K))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(
+        top_k(scored, F.desc("qcos")), knn_bruteforce(spark, sf_dir)
+    ).orderBy("query_id")
 
 
 _PROBE_SWEEP = (1, 2, 3)
@@ -1874,22 +1868,11 @@ _IVF_PROBE_SWEEP_ORACLE = (
         f"      SELECT {p} AS n_probe, query_id, vec_id FROM ivf_p{p}\n"
         for p in _PROBE_SWEEP
     )
-    + f"""    ), qm AS (
-      SELECT DISTINCT m.n_probe, g.query_id
-      FROM gt g CROSS JOIN (SELECT unnest(ARRAY{list(_PROBE_SWEEP)}) AS n_probe) m
-    ), matched AS (
-      SELECT a.n_probe, a.query_id, COUNT(*) AS c
-      FROM approx a JOIN gt g
-        ON g.query_id = a.query_id AND g.vec_id = a.vec_id
-      GROUP BY a.n_probe, a.query_id
+    + _recall_oracle_tail(
+        "n_probe",
+        f"SELECT unnest(ARRAY{list(_PROBE_SWEEP)}) AS n_probe",
+        "CAST(qm.n_probe AS INT) AS n_probe",
     )
-    SELECT CAST(qm.n_probe AS INT) AS n_probe, qm.query_id,
-           CAST(COALESCE(matched.c, 0) AS BIGINT) AS n_hits,
-           CAST(COALESCE(matched.c, 0) AS DOUBLE) / {TOP_K} AS recall_at_k
-    FROM qm LEFT JOIN matched
-      ON matched.n_probe = qm.n_probe AND matched.query_id = qm.query_id
-    ORDER BY qm.n_probe, qm.query_id
-"""
 )
 
 
@@ -1917,7 +1900,6 @@ def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the assigned table three times and built three broadcasts — r11 also
     eagerly materialized it to blunt exactly that recompute; with one
     consumer the materialize is gone too)."""
-    gt = knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
     model, assigned, q = _ivf_index(spark, sf_dir)
     max_p = max(_PROBE_SWEEP)
     probe_list = F.broadcast(
@@ -1948,32 +1930,9 @@ def ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = spark.createDataFrame([(p,) for p in _PROBE_SWEEP], "n_probe int")
     fanned = scored.join(F.broadcast(probes), F.col("n_probe") >= F.col("probe_rank"))
-    wp = Window.partitionBy("n_probe", "query_id").orderBy(F.desc("cosine_sim"), "vec_id")
-    approx = (
-        fanned.withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= TOP_K)
-        .select("n_probe", "query_id", "vec_id")
-    )
-    qm = gt.select("query_id").distinct().crossJoin(F.broadcast(probes))
-    matched = (
-        # gt is queries × k rows — broadcast-pinned (the sweep runs under
-        # the tiny-input AQE-off policy, so no runtime conversion rescues
-        # a sort-merge plan here)
-        approx.join(F.broadcast(gt), ["query_id", "vec_id"])
-        .groupBy("n_probe", "query_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        qm.join(F.broadcast(matched), ["n_probe", "query_id"], "left")
-        .select(
-            "n_probe",
-            "query_id",
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("n_hits"),
-            (
-                F.coalesce(F.col("c"), F.lit(0)).cast("double") / F.lit(float(TOP_K))
-            ).alias("recall_at_k"),
-        )
-        .orderBy("n_probe", "query_id")
+    approx = top_k(fanned, F.desc("cosine_sim"), by=("n_probe", "query_id"))
+    return recall_at_k(approx, knn_bruteforce(spark, sf_dir), probes).orderBy(
+        "n_probe", "query_id"
     )
 
 
@@ -2351,10 +2310,8 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.coalesce(1.0 / (RRF_K + F.col("vec_rank")), F.lit(0.0))
         ).alias("rrf_score"),
     )
-    wf = Window.partitionBy("query_id").orderBy(F.desc("rrf_score"), "doc_id")
     return (
-        fused.withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= RRF_TOP_K)
+        top_k(fused, F.desc("rrf_score"), RRF_TOP_K, "doc_id")
         .select(
             "query_id",
             "doc_id",
@@ -2590,13 +2547,7 @@ def ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("n_subs") == PQ_SUBS)
     )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "vec_id")
-    return (
-        adc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("query_id", "vec_id", "adc_dist")
-        .orderBy("query_id", "adc_dist", "vec_id")
-    )
+    return top_k(adc, "adc_dist").select("query_id", "vec_id", "adc_dist")
 
 
 _IVFPQ_RECALL_ORACLE = (
@@ -2645,18 +2596,6 @@ def ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pq_refine_rerank`` rerank pattern). Composes the two catalog
     builders verbatim; evaluation cost is index cost — the join touches
     k·n_queries id pairs."""
-    gt = knn_bruteforce(spark, sf_dir).select("query_id", "vec_id")
-    top = ivfpq_ann(spark, sf_dir).select(
-        "query_id", "vec_id", F.lit(1).alias("hit")
-    )
-    return (
-        gt.join(top, ["query_id", "vec_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("hit").cast("bigint").alias("n_hits"),
-            (F.count("hit").cast("double") / F.lit(float(TOP_K))).alias(
-                "recall_at_k"
-            ),
-        )
-        .orderBy("query_id")
-    )
+    return recall_at_k(
+        ivfpq_ann(spark, sf_dir), knn_bruteforce(spark, sf_dir)
+    ).orderBy("query_id")

@@ -420,8 +420,11 @@ def query(
 #: ``tools/driver_mimic.py`` checks those across the whole catalog. A
 #: change after a newer round is committed restamps it with that round.
 _MODIFIED_SINCE = (17, frozenset({
+    "ann_recall",
     "dedup_survivors",
     "incremental_clusters",
+    "ivf_probe_sweep",
+    "ivfpq_recall",
     "lsh_bucket_profile",
     "minhash_band_sweep",
     "minhash_incremental",
@@ -431,8 +434,11 @@ _MODIFIED_SINCE = (17, frozenset({
     "ngram_jaccard_pairs",
     "phash_incremental",
     "phash_near_dup",
+    "phash_recall",
     "phash_survivors",
     "simhash_near_dup",
+    "simhash_recall",
+    "sq8_recall",
 }))
 
 _ROUND_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")

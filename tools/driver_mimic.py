@@ -88,6 +88,12 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     bad = []
     for sf in args.sf.split(","):
         con = duckdb_connection(sf)
+        # a third of physical memory: unbounded, an oracle self-join
+        # (minhash_band_sweep's 16x1 candidates at sf0.1) beside the
+        # 16g driver JVM exhausts a 16 GB box; bounded, DuckDB spills
+        # to its temp dir (.tmp/) instead
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        con.execute(f"SET memory_limit='{phys // 3 >> 20}MB'")
         ok, dtype_warnings = 0, []
         t_start = time.time()
         for i, name in enumerate(names):
