@@ -150,7 +150,7 @@ def main() -> None:
     # headline-vs-crossover intra-run delta decomposed to pure
     # measurement maturity — an early-session min-of-3 sits ~0.3 s above
     # the fully-JIT-warmed min-of-5 floor the later phases read
-    # (tools/ab_minhash_phase.py: back-to-back min3 1.57 vs late min5
+    # (tools/ab_minhash_phase.py, since deleted: back-to-back min3 1.57 vs late min5
     # 1.21 on the same query; interleaving and the lake cache both
     # exonerated — the interleaved arm ran FASTER). The DuckDB
     # denominator below escalates symmetrically.
@@ -619,7 +619,7 @@ def _scale_crossover(spark, sf_dir: str, factor: int = 10) -> dict:
     # Fresh-child-JVM redraw for cells whose in-bench spark scaling
     # exceeds the standalone band (VERDICT r14 ask #3): two consecutive
     # rounds read session_window_agg spark_scaling 4.5–5.8 in THIS phase
-    # while the standalone tool (tools/ab_session_window.py, five draws)
+    # while the standalone tool (tools/ab_session_window.py, since deleted, five draws)
     # and the 30× deep cells read 2.3–2.5 — a reproducible property of
     # the long-lived bench JVM's state at this phase, not of the kernel.
     # When a banded cell inverts, its Spark numerators are re-drawn in a
@@ -1041,7 +1041,7 @@ def _streaming_stateful_ab(n_runs: int = 1) -> list[float]:
 #: query: when the in-bench crossover cell reads above its band, the
 #: Spark numerators are re-drawn in a fresh child JVM (VERDICT r14 ask
 #: #3). session_window_agg's band top is the five-draw standalone
-#: ceiling from tools/ab_session_window.py (2.31–2.47) plus the 30×
+#: ceiling from tools/ab_session_window.py (since deleted; 2.31–2.47) plus the 30×
 #: deep-cell reads (2.3–4.07/30≈linear-equivalent), rounded up to 3.0 —
 #: the r13/r14 in-bench inversions read 4.5–5.8, well clear of it.
 _XO_REDRAW_BANDS = {"session_window_agg": 3.0}

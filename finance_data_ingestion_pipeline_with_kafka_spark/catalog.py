@@ -6,13 +6,14 @@ and prunes columns into the scan (verified in tests/test_plans.py). At
 partition pruning applies; nothing in the query layer changes.
 
 Opening a table is metadata-only after its first open in a session
-family: scans are memoized per session, and a policy child session
+family: scans are memoized per session (``execution.SessionMemo``,
+weakly keyed by the session), and a policy child session
 (``registry.policy_session``) re-homes its parent's scan instead of
 reading parquet footers again. With ``ENGINE_LAKE_CACHE=1`` large tables
 are read from the engine's own 16-file lake copy, which opens from a
 schema sidecar with no Spark job; the sidecar also stamps the copy with
 its source (path, size, mtime), and any mismatch rebuilds it. See
-``_SCAN_CACHE`` and ``_N_LAKE_FILES``.
+``_SCANS`` and ``_N_LAKE_FILES``.
 """
 
 from __future__ import annotations
@@ -20,13 +21,12 @@ from __future__ import annotations
 import json
 import os
 import threading
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .execution import rewrap_analyzed
+from .execution import SessionMemo, rewrap_analyzed
 from .registry import parent_session
 
 #: Oracle-SQL CTE normalizing events.ts to µs precision (DuckDB reads the
@@ -80,14 +80,9 @@ KEY_SHIFT = 10**12
 #: a miss, a child re-homes its parent's scan (``execution.rewrap_analyzed``,
 #: ~5 ms) instead of listing and reading footers again. A child differs
 #: from its parent only in the policy keys (AQE, shuffle width, AQE's
-#: initial partition count), which no scan reads.
-#: The outer map is WEAKLY keyed by the live session object (not
-#: ``id(spark)``, which CPython can reuse after a stopped session is
-#: GC'd): a collected session releases its scans and the JVM objects they
-#: pin. The inner map is capped, evicting oldest-first.
-_SCAN_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_SCAN_CACHE_MAX = 256  # per session: ~10 tables × few sf dirs × env combos
-_SCAN_CACHE_LOCK = threading.Lock()  # bench's concurrent phase shares one session
+#: initial partition count), which no scan reads. 256 per session: ~10
+#: tables × few sf dirs × env combos.
+_SCANS = SessionMemo(256)
 
 #: Lake-layout ingest (opt-in via ENGINE_LAKE_CACHE=1). The driver's
 #: fixtures are written as ONE parquet row group per table, which caps
@@ -214,13 +209,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, replicate: int = 1) 
     if not KEY_SHIFT_COLS.get(name, ()):  # fixed-size dims don't grow
         replicate = 1
     lake_cache = os.environ.get("ENGINE_LAKE_CACHE") == "1"
-    per_session = _SCAN_CACHE.get(spark)
-    if per_session is None:
-        per_session = _SCAN_CACHE.setdefault(spark, {})
-    key = (sf_dir, name, replicate, lake_cache)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
+    return _SCANS.get(
+        spark, (sf_dir, name, replicate, lake_cache),
+        lambda: _open_table(spark, sf_dir, name, replicate, lake_cache),
+    )
+
+
+def _open_table(
+    spark: SparkSession, sf_dir: str, name: str, replicate: int, lake_cache: bool
+) -> DataFrame:
+    """A fresh scan for :func:`load_table`: the parent session's scan
+    re-homed onto a policy child, otherwise the lake copy or the source."""
     # Timestamp determinism on externally built sessions (the driver's
     # vanilla session inherits the HOST timezone): every events-derived
     # epoch/window/watermark result — and the TIMESTAMP_NTZ→TIMESTAMP cast
@@ -255,13 +254,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, replicate: int = 1) 
             df = _source_scan(spark, sf_dir, name)
         if replicate > 1:
             df = _replicate_shifted(df, name, replicate)
-    with _SCAN_CACHE_LOCK:
-        while len(per_session) >= _SCAN_CACHE_MAX:
-            try:
-                per_session.pop(next(iter(per_session)))
-            except (KeyError, StopIteration):
-                break
-        per_session[key] = df
     return df
 
 

@@ -3,7 +3,9 @@
 Home of :func:`materialize` — the single switch point every operator
 that eagerly materializes an intermediate (dedup pipeline stages, the
 shared PQ distance subtree) routes through, so the fault posture of the
-whole engine flips with one env var.
+whole engine flips with one env var — and of :class:`SessionMemo`, the
+one per-session memo behind the policy children, prepared plans and
+table scans.
 """
 
 from __future__ import annotations
@@ -11,9 +13,12 @@ from __future__ import annotations
 import os
 import threading
 import weakref
-from collections.abc import Callable
+from collections.abc import Callable, Hashable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 #: Last ENGINE_RELIABLE_CHECKPOINT value actually applied via
 #: setCheckpointDir. Tracked here instead of reverse-parsing
@@ -118,7 +123,7 @@ def rewrap_analyzed(
 ) -> DataFrame | None:
     """Fresh Dataset over ``df``'s memoized ANALYZED plan — re-executes
     every stage (new RDD, no shuffle-stage reuse), the prepared-statement
-    rewrap both plan caches use. With ``session``, the fresh Dataset
+    rewrap of :func:`prepared_plan`. With ``session``, the fresh Dataset
     belongs to that session instead of ``df``'s, so it plans and runs
     under that session's runtime conf (the CC loop re-homes its edge set
     onto a narrow-width child this way). Returns ``None`` when the
@@ -147,65 +152,83 @@ def rewrap_analyzed(
             import logging
 
             logging.getLogger(__name__).warning(
-                "classic Dataset.ofRows rewrap unavailable (%s): plan caches "
+                "classic Dataset.ofRows rewrap unavailable (%s): prepared plans "
                 "fall back to full rebuilds — correct but slower (prepared-"
                 "statement reuse disabled)", ex,
             )
         return None
 
 
-#: Analyzed SUB-plan memo: session → {(tag, anchor frame): DataFrame}.
-#: registry._PLAN_CACHE gives every ``prepared=True`` catalog query
-#: prepared-statement semantics, but the ``prepared=False`` pipelines
-#: (dedup's checkpointed stages) rebuild their whole expression tree on
-#: every invocation — measured ~0.9-1.1 s of pure Python→JVM py4j round
-#: trips for the MinHash signatures+candidates subtree at any SF, paid
-#: per bench pass and per driver-verify run. Only the PLAN is memoized:
-#: each hit re-wraps the analyzed plan in a fresh Dataset (new RDD, new
-#: shuffle stages — every stage re-executes), and the eager checkpoint a
-#: caller applies on top runs per invocation as before. Rows are never
-#: stored; this is the registry's prepared-statement rule applied to a
-#: sub-tree. Keys hold the anchor DataFrame strongly (the scan cache
-#: already pins those frames); the map is weakly keyed by the session so
-#: a stopped session releases everything it owned.
-_SUBPLAN_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_SUBPLAN_CACHE_MAX = 256
-_SUBPLAN_LOCK = threading.Lock()
+class SessionMemo:
+    """Bounded, weakly keyed, thread-safe per-session memo: ``session →
+    {key: value}``, at most ``cap`` keys per session, evicting
+    oldest-first. Every piece of state the engine keeps per session is
+    one of these: the policy children (``registry.policy_session``), the
+    prepared plans (:func:`prepared_plan`) and the table scans
+    (``catalog.load_table``).
+
+    The outer map is WEAKLY keyed by the live session object, not
+    ``id(session)``, which CPython can reuse after a stopped session is
+    collected: a collected session releases every value it owned, and
+    the JVM objects those values pin, with it.
+
+    ``build`` runs outside the lock, because a scan build opens its
+    parent session's scan through the same memo and a lake rebuild takes
+    seconds. Threads that miss together may each build; the first value
+    stored wins, and every caller gets it (one child per policy)."""
+
+    def __init__(self, cap: int):
+        self.cap = cap
+        #: session → {key: value}, oldest first
+        self.by_session: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+        self._lock = threading.Lock()
+
+    def get(self, session: object, key: Hashable, build: Callable[[], T]) -> T:
+        with self._lock:
+            value = self.by_session.get(session, {}).get(key)
+        if value is None:
+            value = build()
+            with self._lock:
+                entries = self.by_session.setdefault(session, {})
+                while key not in entries and len(entries) >= self.cap:
+                    entries.pop(next(iter(entries)))
+                value = entries.setdefault(key, value)
+        return value
 
 
-def cached_subplan(
-    tag: str, anchor: DataFrame, builder: Callable[[], DataFrame]
+#: Prepared plans: session → {key: DataFrame}, for the registry's
+#: catalog queries (key ``(sf_dir, name, env)``) and for the MinHash
+#: signatures+candidates sub-plan below its first checkpoint (key
+#: ``(tag, anchor frame)``). Building a catalog query's DataFrame costs
+#: 30-300 ms of Python→JVM expression construction (hundreds of py4j
+#: round trips for the wider plans, ~1 s for the MinHash subtree) before
+#: Spark sees an action: the prepared-statement cost. Only the analyzed
+#: plan is kept, never rows. 512 per session: |catalog| × a few sf_dirs
+#: × env combos.
+_PLANS = SessionMemo(512)
+
+
+def prepared_plan(
+    session: SparkSession, key: Hashable, build: Callable[[], DataFrame]
 ) -> DataFrame:
-    """Build-once/re-wrap-forever for an expensive sub-plan.
+    """Build-once/re-wrap-forever: ``build()`` on the first call for
+    ``(session, key)``, a fresh Dataset over the stored ANALYZED plan
+    afterwards (:func:`rewrap_analyzed`, a full rebuild when its hook is
+    missing). No Dataset object goes to two invocations: repeated actions
+    on one Dataset reuse its materialized shuffle stages (skipped
+    stages), which would turn a re-run into an incremental computation,
+    while a fresh one re-executes every stage. A caller that loses a
+    concurrent first build keeps its own Dataset. A key may hold a frame
+    (input identity: the MinHash sub-plan keys on the catalog's memoized
+    scan); a frame not memoized upstream just misses every time."""
+    mine: list[DataFrame] = []
 
-    ``anchor`` keys the cache by INPUT IDENTITY: callers pass the source
-    frame the built plan closes over (e.g. the catalog's memoized scan,
-    one object per (session, sf_dir, replicate, lake_cache) — so a
-    replicated bench scan and the plain scan can never collide). A
-    caller-computed frame that isn't cached upstream simply misses every
-    time: correctness never depends on a hit. PySpark DataFrames use
-    object identity for ``__eq__``/``__hash__``, so dict keying is safe."""
-    spark = anchor.sparkSession
-    key = (tag, anchor)
-    # lookup under the lock too (ADVICE r16): the lock previously guarded
-    # only insertion/eviction, so the stated thread-safety was GIL luck
-    with _SUBPLAN_LOCK:
-        per_session = _SUBPLAN_CACHE.get(spark)
-        if per_session is None:
-            per_session = _SUBPLAN_CACHE.setdefault(spark, {})
-        df = per_session.get(key)
-    if df is None:
-        df = builder()
-        with _SUBPLAN_LOCK:
-            if key not in per_session:
-                while len(per_session) >= _SUBPLAN_CACHE_MAX:
-                    try:
-                        per_session.pop(next(iter(per_session)))
-                    except (KeyError, StopIteration):
-                        break
-                per_session[key] = df
-        return df
-    # fresh Dataset over the memoized ANALYZED plan: re-executes every
-    # stage (no shuffle-stage reuse), exactly like registry's cache
+    def build_mine() -> DataFrame:
+        mine.append(build())
+        return mine[0]
+
+    df = _PLANS.get(session, key, build_mine)
+    if mine:
+        return mine[0]
     rewrapped = rewrap_analyzed(df)
-    return rewrapped if rewrapped is not None else builder()
+    return rewrapped if rewrapped is not None else build()

@@ -606,16 +606,17 @@ def minhash_pairs(docs: DataFrame) -> DataFrame:
     pipeline is ``prepared=False`` (the registry can't plan-cache a
     query whose construction materializes checkpoints). The subtree
     BELOW the first checkpoint is side-effect-free, so its analyzed
-    plan is memoized via ``cached_subplan`` keyed on the (already
-    scan-cached) ``docs`` frame — every invocation still re-executes
-    every stage through a fresh Dataset + a fresh eager checkpoint;
-    only the Python-side expression construction is amortized."""
-    from ..execution import cached_subplan
+    plan is memoized via ``execution.prepared_plan`` keyed on the
+    (already scan-cached) ``docs`` frame — every invocation still
+    re-executes every stage through a fresh Dataset + a fresh eager
+    checkpoint; only the Python-side expression construction is
+    amortized."""
+    from ..execution import prepared_plan
 
     cands = materialize(
-        cached_subplan(
-            "minhash_sigs_cands",
-            docs,
+        prepared_plan(
+            docs.sparkSession,
+            ("minhash_sigs_cands", docs),
             lambda: minhash_candidates(minhash_signatures(docs)),
         )
     )
@@ -631,7 +632,7 @@ def _verified_pairs(cands: DataFrame, docs: DataFrame) -> DataFrame:
     # generated SQL over temp views of the fresh checkpoints (r17,
     # VERDICT r16 ask #4): their DataFrame construction was ~0.15-0.45 s
     # of py4j Column round trips PER INVOCATION, unmemoizable by
-    # cached_subplan because both close over this invocation's cands
+    # prepared_plan because both close over this invocation's cands
     # checkpoint (an analyzed-plan memo would replay LAST run's rows).
     # ``spark.sql`` analyzes eagerly, so the views are dropped right
     # after each call; names are unique so concurrent invocations never

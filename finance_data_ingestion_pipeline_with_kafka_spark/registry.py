@@ -74,13 +74,14 @@ from __future__ import annotations
 import functools
 import json
 import re
-import threading
 import weakref
 from collections.abc import Callable, Iterable, Mapping
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .execution import SessionMemo, prepared_plan
 
 
 @dataclass(frozen=True)
@@ -124,6 +125,9 @@ class QuerySpec:
     #: and return ``None`` or an adaptive policy at lake scale; see the
     #: module docstring for the three in use and their measurements.
     policy: Policy | None = None
+    #: memoize the constructed plan per (session, sf_dir, env); off for
+    #: queries whose construction materializes data (see :func:`query`)
+    prepared: bool = True
 
 
 QUERIES: dict[str, QuerySpec] = {}
@@ -239,17 +243,14 @@ def sized(spark: SparkSession, sf_dir: str) -> ExecPolicy:
 #: Child sessions: parent session → {(policy, parent conf): child}. A
 #: child is ``cloneSession()`` of its parent (runtime conf, temp views,
 #: functions) plus the policy's keys, so everything the engine memoizes
-#: per session (plan cache, ``cached_subplan``) follows the child on its
-#: own, and the catalog's scan cache starts from the parent's scans
-#: (:func:`parent_session`). ``newSession()`` would not do: it starts
-#: from the SparkContext conf and drops what the parent's session options
-#: or caller set (e.g. ``parquet.nanosAsLong``, the session timezone). Keying on the
-#: parent's runtime conf makes a conf the caller sets on the parent
-#: after a first invocation govern the next one. Weakly keyed by the
-#: parent, and capped per parent (oldest first), like the other caches.
-_CHILD_SESSIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_CHILD_SESSIONS_MAX = 16
-_CHILD_SESSIONS_LOCK = threading.Lock()
+#: per session (prepared plans) follows the child on its own, and the
+#: catalog's scans start from the parent's (:func:`parent_session`).
+#: ``newSession()`` would not do: it starts from the SparkContext conf and
+#: drops what the parent's session options or caller set (e.g.
+#: ``parquet.nanosAsLong``, the session timezone). Keying on the parent's
+#: runtime conf makes a conf the caller sets on the parent after a first
+#: invocation govern the next one. 16 per parent.
+_CHILDREN = SessionMemo(16)
 #: Child → weak reference to the parent it was cloned from, so the
 #: catalog's scan cache can re-home a parent's scans onto its children
 #: (:func:`parent_session`). Weak both ways: the parent holds its
@@ -270,41 +271,17 @@ def policy_session(spark: SparkSession, policy: ExecPolicy | None) -> SparkSessi
     ``spark``'s plus ``policy.confs()``. ``spark`` is never written."""
     if policy is None:
         return spark
+
+    def clone() -> SparkSession:
+        child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+        for k, v in policy.confs().items():
+            child.conf.set(k, v)
+        _PARENTS[child] = weakref.ref(spark)
+        return child
+
     # one py4j call: dict(spark.conf.getAll) costs ~60 ms of per-entry
     # round trips, the JVM map's string form ~1 ms
-    key = (policy, spark._jsparkSession.conf().getAll().toString())
-    with _CHILD_SESSIONS_LOCK:
-        children = _CHILD_SESSIONS.get(spark)
-        if children is None:
-            children = _CHILD_SESSIONS.setdefault(spark, {})
-        child = children.get(key)
-        if child is None:
-            child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-            for k, v in policy.confs().items():
-                child.conf.set(k, v)
-            _PARENTS[child] = weakref.ref(spark)
-            while len(children) >= _CHILD_SESSIONS_MAX:
-                children.pop(next(iter(children)))
-            children[key] = child
-    return child
-
-
-#: Prepared-plan cache: session → {(sf_dir, name, env fingerprint): DataFrame}.
-#: Building a catalog query's DataFrame costs 30-300 ms of Python→JVM
-#: expression construction (hundreds of py4j round trips for the wider
-#: plans) before Spark ever sees an action — the classic prepared-statement
-#: cost. DataFrames are immutable descriptions of a plan, so re-executing a
-#: cached one is a full re-run of the query (results are NOT cached; only
-#: the parsed plan is). The outer map is WEAKLY keyed by the live session:
-#: when a session is dropped/stopped and garbage-collected, every plan it
-#: owned (and the JVM objects those plans pin) is released with it. The
-#: inner map is capped — stale (sf_dir, env) combos evict oldest-first.
-_PLAN_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_PLAN_CACHE_MAX = 512  # per session: |catalog| × a few sf_dirs × env combos
-#: bench.py's concurrent phase calls spec.fn from ~20 threads on one
-#: session; at the cap two threads could race pop(next(iter(...))) into
-#: a KeyError, so the insert/evict critical section takes this lock.
-_PLAN_CACHE_LOCK = threading.Lock()
+    return _CHILDREN.get(spark, (policy, spark._jsparkSession.conf().getAll().toString()), clone)
 
 
 def _env_fingerprint() -> tuple:
@@ -326,85 +303,31 @@ def query(
 ):
     """Decorator registering a query in the catalog. The registered
     callable runs the query on ``policy_session(spark, policy(spark,
-    sf_dir))`` (see :attr:`QuerySpec.policy`) and memoizes the
-    constructed DataFrame per (session, sf_dir, env): repeat invocations
-    reuse the analyzed plan — execution still happens per action,
-    exactly like a prepared statement.
+    sf_dir))`` (see :attr:`QuerySpec.policy`) and, when ``prepared``,
+    through :func:`execution.prepared_plan` per (session, sf_dir, env):
+    repeat invocations reuse the analyzed plan and skip its 30-300 ms of
+    construction, while execution still happens per action, exactly like
+    a prepared statement.
 
     ``prepared=False`` opts out, for queries whose construction
     materializes data into their returned lineage (``localCheckpoint``,
     iterative loops): caching those would replay stored ROWS, not re-run
     the query."""
 
-    def session_for(spark: SparkSession, sf_dir: str) -> SparkSession:
-        return policy_session(spark, policy(spark, sf_dir) if policy else None)
-
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in QUERIES:
             raise ValueError(f"duplicate query name {name!r}")
-        if not prepared:
-            def unprepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-                return fn(session_for(spark, sf_dir), sf_dir)
 
-            unprepared.__name__ = fn.__name__
-            unprepared.__module__ = fn.__module__
-            unprepared.__doc__ = fn.__doc__
-            # NOTE: deliberately no ``__wrapped__`` — that attribute marks
-            # prepared (plan-cached) fns; tests assert unprepared queries
-            # don't carry it. ``__source_fn__`` gives doc tooling
-            # (tools/gen_catalog.py) the real definition site without
-            # reintroducing that marker.
-            unprepared.__source_fn__ = fn
-            QUERIES[name] = QuerySpec(
-                name=name, fn=unprepared, oracle=oracle, tags=tags, bench=bench,
-                crossover=crossover, policy=policy,
-            )
-            return fn
+        @functools.wraps(fn)
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            spark = policy_session(spark, policy(spark, sf_dir) if policy else None)
+            if not prepared:
+                return fn(spark, sf_dir)
+            return prepared_plan(spark, (sf_dir, name, _env_fingerprint()), lambda: fn(spark, sf_dir))
 
-        def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            spark = session_for(spark, sf_dir)
-            per_session = _PLAN_CACHE.get(spark)
-            if per_session is None:
-                per_session = _PLAN_CACHE.setdefault(spark, {})
-            key = (sf_dir, name, _env_fingerprint())
-            df = per_session.get(key)
-            if df is None:
-                df = fn(spark, sf_dir)
-                with _PLAN_CACHE_LOCK:
-                    # double-check under the lock: if another bench thread
-                    # built the same plan while we did, keep ITS cache entry
-                    # (don't overwrite) but return our own fresh Dataset —
-                    # sharing one executing Dataset across threads would
-                    # reuse its shuffle stages and distort timings
-                    if key not in per_session:
-                        while len(per_session) >= _PLAN_CACHE_MAX:
-                            try:
-                                per_session.pop(next(iter(per_session)))
-                            except (KeyError, StopIteration):
-                                break
-                        per_session[key] = df
-                return df
-            # Re-wrap the cached ANALYZED plan in a fresh Dataset rather
-            # than returning the same object: repeated actions on one
-            # Dataset reuse its already-materialized shuffle stages
-            # (skipped stages), which would turn a re-run into an
-            # incremental computation. A fresh Dataset over the same
-            # logical plan re-executes every stage — prepared-statement
-            # reuse, not result reuse. rewrap_analyzed probes the
-            # JVM-internal hook once per session and warns once on
-            # fallback (ADVICE r16).
-            from .execution import rewrap_analyzed
-
-            rewrapped = rewrap_analyzed(df)
-            return rewrapped if rewrapped is not None else fn(spark, sf_dir)
-
-        cached.__name__ = fn.__name__
-        cached.__module__ = fn.__module__
-        cached.__doc__ = fn.__doc__
-        cached.__wrapped__ = fn
         QUERIES[name] = QuerySpec(
-            name=name, fn=cached, oracle=oracle, tags=tags, bench=bench,
-            crossover=crossover, policy=policy,
+            name=name, fn=run, oracle=oracle, tags=tags, bench=bench,
+            crossover=crossover, policy=policy, prepared=prepared,
         )
         return fn
 

@@ -266,14 +266,11 @@ def foreach_batch_upsert_snapshot(
                     elect(fresh.select(*cols).unionByName(existing.select(*cols)))
                     .withColumn(SNAPSHOT_BUCKET_COL, bucket)
                 )
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                merged.write.mode("overwrite").partitionBy(SNAPSHOT_BUCKET_COL).parquet(
-                    sink_dir
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            # a per-write option, not the session conf: queries on the
+            # shared session and a concurrent upsert never see dynamic mode
+            merged.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(SNAPSHOT_BUCKET_COL).parquet(sink_dir)
         finally:
             fresh.unpersist()
 

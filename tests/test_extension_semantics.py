@@ -3866,12 +3866,13 @@ def test_connected_components_assume_canonical_equals_generic(spark):
 
 
 def test_cached_subplan_reexecutes_and_matches(spark):
-    """r16 optimization pin: cached_subplan memoizes only the ANALYZED
-    plan — a cache hit returns a FRESH Dataset (different object, new
-    execution) whose result equals a from-scratch build."""
+    """r16 optimization pin: the sub-plan memo (execution.prepared_plan,
+    the registry's prepared-plan path) keeps only the ANALYZED plan — a
+    hit returns a FRESH Dataset (different object, new execution) whose
+    result equals a from-scratch build."""
     from finance_data_ingestion_pipeline_with_kafka_spark.execution import (
-        _SUBPLAN_CACHE,
-        cached_subplan,
+        _PLANS,
+        prepared_plan,
     )
 
     anchor = spark.range(100).withColumnRenamed("id", "n")
@@ -3881,8 +3882,8 @@ def test_cached_subplan_reexecutes_and_matches(spark):
         build_calls.append(1)
         return anchor.groupBy((F.col("n") % 7).alias("k")).count()
 
-    a = cached_subplan("test_tag", anchor, builder)
-    b = cached_subplan("test_tag", anchor, builder)
+    a = prepared_plan(spark, ("test_tag", anchor), builder)
+    b = prepared_plan(spark, ("test_tag", anchor), builder)
     assert len(build_calls) == 1  # second call was a cache hit
     assert a is not b  # hit re-wraps into a fresh Dataset, never the cached object
     rows_a = sorted(map(tuple, a.collect()))
@@ -3890,10 +3891,9 @@ def test_cached_subplan_reexecutes_and_matches(spark):
     assert rows_a == rows_b
     # a different anchor object misses (input identity IS the key)
     anchor2 = spark.range(100).withColumnRenamed("id", "n")
-    cached_subplan("test_tag", anchor2, builder)
+    prepared_plan(spark, ("test_tag", anchor2), builder)
     assert len(build_calls) == 2
-    per_session = _SUBPLAN_CACHE.get(spark)
-    assert ("test_tag", anchor) in per_session
+    assert ("test_tag", anchor) in _PLANS.by_session[spark]
 
 
 def test_tfidf_single_corpus_tokenize(spark, sf_dir):
@@ -3912,7 +3912,7 @@ def test_rewrap_fallback_warns_once_and_rebuilds(spark, caplog):
     """r17 pin (ADVICE r16): when the classic Dataset.ofRows hook is
     unavailable, rewrap_analyzed returns None after logging ONE warning,
     the per-session capability flag short-circuits further probes, and
-    cached_subplan falls back to a full rebuild (correct, just slower)."""
+    prepared_plan falls back to a full rebuild (correct, just slower)."""
     import logging
 
     from finance_data_ingestion_pipeline_with_kafka_spark import execution as ex
@@ -3939,7 +3939,7 @@ def test_rewrap_fallback_warns_once_and_rebuilds(spark, caplog):
             "ofRows rewrap unavailable" in r.message for r in caplog.records
         ) == 1
         # flagged session: rewrap short-circuits (no exception, no more
-        # warnings) and cached_subplan hits rebuild via the builder
+        # warnings) and prepared_plan hits rebuild via the builder
         assert ex.rewrap_analyzed(df) is None
         calls = []
 
@@ -3947,8 +3947,8 @@ def test_rewrap_fallback_warns_once_and_rebuilds(spark, caplog):
             calls.append(1)
             return anchor.groupBy((F.col("n") % 3).alias("k")).count()
 
-        ex.cached_subplan("rewrap_fb_tag", anchor, builder)
-        out = ex.cached_subplan("rewrap_fb_tag", anchor, builder)
+        ex.prepared_plan(spark, ("rewrap_fb_tag", anchor), builder)
+        out = ex.prepared_plan(spark, ("rewrap_fb_tag", anchor), builder)
         assert len(calls) == 2  # hit path rebuilt instead of rewrapping
         assert sorted(map(tuple, out.collect())) == sorted(
             map(tuple, df.collect())

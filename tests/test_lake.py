@@ -218,7 +218,7 @@ def _jobs(spark, fn):
 
 def _forget(spark, sf):
     """Drop ``spark``'s memoized scans of ``sf`` so the next open is a miss."""
-    per_session = catalog._SCAN_CACHE.get(spark, {})
+    per_session = catalog._SCANS.by_session.get(spark, {})
     for key in [k for k in per_session if k[0] == sf]:
         del per_session[key]
 

@@ -3,15 +3,18 @@
 Pins the honesty contract: repeat catalog invocations reuse the ANALYZED
 PLAN (skipping py4j expression construction) but must still re-execute
 every stage — never replay materialized rows or already-built shuffle
-stages. See registry._PLAN_CACHE.
+stages. See execution.prepared_plan and execution.SessionMemo.
 """
 
 import gc
+import inspect
 import os
+import sys
+import threading
 
 import pytest
 
-from finance_data_ingestion_pipeline_with_kafka_spark import catalog, registry
+from finance_data_ingestion_pipeline_with_kafka_spark import catalog, execution, registry
 from finance_data_ingestion_pipeline_with_kafka_spark.registry import load_all
 
 
@@ -41,9 +44,9 @@ def test_cached_plan_still_scans_source_not_rows(spark, sf_dir):
 
 
 def test_materializing_queries_opt_out(spark, sf_dir):
-    # Queries whose CONSTRUCTION runs jobs register their RAW fn (no
-    # __wrapped__ marker): caching their plan would freeze/replay that
-    # construction-time state. Two classes here: localCheckpoint
+    # Queries whose CONSTRUCTION runs jobs register with prepared=False:
+    # caching their plan would freeze/replay that construction-time
+    # state. Two classes here: localCheckpoint
     # pipelines (stored-row replay — the dedup precedent) and
     # knn-composers whose construction collects the query vectors into
     # the kernel closure (ivf_probe_sweep, ann_recall — r11 HIGH advice
@@ -51,12 +54,16 @@ def test_materializing_queries_opt_out(spark, sf_dir):
     # their rewritten kernels are pure lazy plans (nothing materialized,
     # no LogicalRDD — plan-pinned), so the prepared-statement cache is
     # honest for them again.
+    cat = _catalog()
     for name in (
         "minhash_near_dup", "near_dup_clusters",
         "ivf_probe_sweep", "ann_recall",
     ):
-        fn = _catalog()[name].fn
-        assert not hasattr(fn, "__wrapped__"), name
+        assert not cat[name].prepared, name
+    # prepared or not, every query runs through the one registry wrapper,
+    # and inspect.unwrap reaches the decorated function
+    assert len({s.fn.__code__ for s in cat.values()}) == 1
+    assert inspect.unwrap(cat["ann_recall"].fn).__name__ == "ann_recall"
 
 
 def test_env_knobs_bust_the_cache(spark, sf_dir):
@@ -76,40 +83,117 @@ class _FakeSession:
 
 
 def test_dead_session_entries_are_released():
-    """A stopped/dropped session must not pin its plans (and their JVM
-    objects) in the process-lifetime caches — the round-2 advice item."""
-    for cache in (registry._PLAN_CACHE, catalog._SCAN_CACHE):
+    """A stopped/dropped session must not pin its children, plans or
+    scans (and their JVM objects) in the process-lifetime memos — the
+    round-2 advice item."""
+    for memo in (registry._CHILDREN, execution._PLANS, catalog._SCANS):
         fake = _FakeSession()
-        cache[fake] = {("sf", "name"): object()}
-        assert fake in cache
+        memo.get(fake, ("sf", "name"), object)
+        assert fake in memo.by_session
         del fake
         gc.collect()
         # the weak outer key released the per-session map with the session
-        assert len([k for k in cache.keys() if isinstance(k, _FakeSession)]) == 0
+        assert not [k for k in memo.by_session.keys() if isinstance(k, _FakeSession)]
 
 
 def test_plan_cache_is_bounded(spark, sf_dir):
     spec = _catalog()["filter_project"]
     # the cache is per session the query runs on (a child under its policy)
     session = spec.fn(spark, sf_dir).sparkSession
-    per_session = registry._PLAN_CACHE[session]
-    # flood with synthetic entries well past the cap; the real insert path
+    memo = execution._PLANS
+    # flood with synthetic entries well past the cap; the insert path
     # must evict oldest-first rather than grow without bound
-    for i in range(registry._PLAN_CACHE_MAX + 10):
-        per_session[("synthetic", str(i))] = object()
+    for i in range(memo.cap + 10):
+        memo.get(session, ("synthetic", str(i)), object)
     spec.fn(spark, f"{sf_dir}/")  # distinct sf_dir key → fresh insert
-    assert len(registry._PLAN_CACHE[session]) <= registry._PLAN_CACHE_MAX
+    entries = memo.by_session[session]
+    assert len(entries) == memo.cap
+    assert ("synthetic", "10") not in entries and ("synthetic", "11") in entries
+    assert list(entries)[-1][:2] == (f"{sf_dir}/", "filter_project")
 
 
 def test_scan_cache_is_bounded(spark, sf_dir):
     from finance_data_ingestion_pipeline_with_kafka_spark.catalog import load_table
 
     load_table(spark, sf_dir, "region")
-    per_session = catalog._SCAN_CACHE[spark]
-    for i in range(catalog._SCAN_CACHE_MAX + 10):
-        per_session[("synthetic", str(i))] = object()
+    memo = catalog._SCANS
+    for i in range(memo.cap + 10):
+        memo.get(spark, ("synthetic", str(i)), object)
     load_table(spark, f"{sf_dir}/", "region")
-    assert len(catalog._SCAN_CACHE[spark]) <= catalog._SCAN_CACHE_MAX
+    entries = memo.by_session[spark]
+    assert len(entries) == memo.cap
+    assert ("synthetic", "10") not in entries and ("synthetic", "11") in entries
+    assert list(entries)[-1][:2] == (f"{sf_dir}/", "region")
+
+
+def test_prepared_query_under_threads_builds_once(spark, sf_dir):
+    """16 threads invoking one prepared query at once get 16 distinct
+    Datasets (none shares another's, or the first invocation's, shuffle
+    stages) and the plan is built once: the first invocation builds, every
+    later one re-wraps the stored analyzed plan."""
+    raw = inspect.unwrap(_catalog()["pricing_summary"].fn)
+    builds = []
+
+    def counted(session, path):
+        builds.append(1)
+        return raw(session, path)
+
+    name = "_prepared_threads_probe"
+    registry.query(name)(counted)
+    got, errors, threads = [], [], []
+    interval = sys.getswitchinterval()
+    try:
+        fn = registry.QUERIES[name].fn
+        first = fn(spark, sf_dir)
+        start = threading.Barrier(16)
+
+        def invoke():
+            try:
+                start.wait(60)
+                got.append(fn(spark, sf_dir))
+            except Exception as ex:  # surfaced in the main thread
+                errors.append(ex)
+
+        sys.setswitchinterval(1e-6)
+        threads += [threading.Thread(target=invoke) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+        registry.QUERIES.pop(name, None)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors and len(got) == 16, errors
+    assert len(builds) == 1
+    frames = [first, *got]
+    assert not any(
+        a._jdf.equals(b._jdf) for i, a in enumerate(frames) for b in frames[i + 1:]
+    )
+    assert sorted(got[-1].collect()) == sorted(first.collect())
+
+
+def test_oldest_first_eviction_lives_in_one_function():
+    """Source scan: the package evicts oldest-first (``next(iter(...))``
+    or ``popitem``) in exactly one place, ``execution.SessionMemo.get``;
+    every per-session cache is one of its instances."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).parent
+    hits = [
+        (f.name, node.lineno)
+        for f in sorted(pkg.rglob("*.py"))
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call) and (
+            (isinstance(node.func, ast.Name) and node.func.id == "next"
+             and "iter(" in ast.unparse(node))
+            or (isinstance(node.func, ast.Attribute) and node.func.attr == "popitem")
+        )
+    ]
+    src, first = inspect.getsourcelines(execution.SessionMemo.get)
+    assert len(hits) == 1 and hits[0][0] == "execution.py", hits
+    assert first <= hits[0][1] < first + len(src), hits
 
 
 def test_sized_partition_policy(spark, sf_dir, monkeypatch):
@@ -450,15 +534,13 @@ def test_micro_batch_keeps_session_conf_while_cc_loop_runs(spark, sf_dir, tmp_pa
 # judge audit. Plan-string check only — no job runs.
 # ---------------------------------------------------------------------------
 
-_PREPARED_NAMES = sorted(
-    n for n, s in _catalog().items() if hasattr(s.fn, "__wrapped__")
-)
+_PREPARED_NAMES = sorted(n for n, s in _catalog().items() if s.prepared)
 
 
 def test_prepared_sweep_covers_most_of_the_catalog():
-    """Guard the sweep itself: if a refactor accidentally strips the
-    __wrapped__ marker from the prepared path, the parametrized sweep
-    below would silently collapse to nothing."""
+    """Guard the sweep itself: if a refactor accidentally stops recording
+    ``QuerySpec.prepared``, the parametrized sweep below would silently
+    collapse to nothing."""
     cat = _catalog()
     assert len(_PREPARED_NAMES) >= 0.8 * len(cat), (
         len(_PREPARED_NAMES), len(cat)
@@ -491,16 +573,21 @@ def test_prepared_plan_is_materialization_free(spark, sf_dir, name):
 
 
 def test_no_session_conf_writes_in_operators_or_registry():
-    """Source scan: no operator module and nothing in the registry writes
-    a session's runtime conf. An execution policy reaches Spark only
-    through a child session's conf, set once when registry.policy_session
-    builds that child; catalog.py's UTC and nanosAsLong guards for
-    externally built sessions are outside this scan."""
+    """Source scan: no operator module, no streaming module and nothing in
+    the registry writes a session's runtime conf. An execution policy
+    reaches Spark only through a child session's conf, set once when
+    registry.policy_session builds that child, and a sink's write mode
+    through a per-write option; catalog.py's UTC and nanosAsLong guards
+    for externally built sessions are outside this scan."""
     import pathlib
     import re
 
     pkg = pathlib.Path(registry.__file__).parent
-    files = sorted((pkg / "operators").glob("*.py")) + [pkg / "registry.py"]
+    files = [
+        *sorted((pkg / "operators").glob("*.py")),
+        *sorted((pkg / "streaming").glob("*.py")),
+        pkg / "registry.py",
+    ]
     writes = [
         (f.name, line.strip())
         for f in files

@@ -140,3 +140,26 @@ def test_no_case_insensitive_name_collisions():
     cat = load_all()
     lowered = [n.lower() for n in cat]
     assert len(lowered) == len(set(lowered))
+
+
+def test_catalog_md_is_generated_from_the_registry():
+    """CATALOG.md is exactly what ``tools/gen_catalog.py`` renders, so a
+    query added, renamed or re-documented without regenerating it fails
+    here; rows name ``file::function``, so edits elsewhere in a module do
+    not move them."""
+    from pathlib import Path
+
+    from tools import gen_catalog
+
+    assert Path(gen_catalog.PATH).read_text() == gen_catalog.render()
+
+
+def test_gen_catalog_rejects_arguments(monkeypatch):
+    """``gen_catalog.py --help`` exits non-zero instead of rewriting
+    CATALOG.md."""
+    from tools import gen_catalog
+
+    monkeypatch.setattr(gen_catalog, "render", lambda: pytest.fail("rendered"))
+    with pytest.raises(SystemExit) as exc:
+        gen_catalog.main(["--help"])
+    assert exc.value.code not in (0, None)

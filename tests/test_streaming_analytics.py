@@ -774,6 +774,36 @@ def test_upsert_snapshot_sink(spark, tmp_path):
     }
 
 
+def test_upsert_snapshot_overwrites_only_touched_buckets(spark, tmp_path):
+    """A batch that touches one key's bucket rewrites only that bucket:
+    the other key's row survives (dynamic partition overwrite, set per
+    write), and the session's partitionOverwriteMode is never written."""
+    import datetime as dt
+
+    from finance_data_ingestion_pipeline_with_kafka_spark.streaming.sinks import (
+        SNAPSHOT_BUCKET_COL,
+        foreach_batch_upsert_snapshot,
+    )
+
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(conf_key)
+    sink = str(tmp_path / "snap")
+    write = foreach_batch_upsert_snapshot(sink, key="symbol", ts_col="datetime")
+
+    def batch(*rows):
+        return spark.createDataFrame(
+            list(rows), "symbol string, datetime timestamp, last_price double"
+        )
+
+    t0 = dt.datetime(2024, 1, 2, 9, 30)
+    write(batch(("AAPL", t0, 1.0), ("MSFT", t0, 2.0)), 0)
+    write(batch(("AAPL", t0 + dt.timedelta(seconds=5), 3.0)), 1)
+    snap = spark.read.parquet(sink)
+    assert snap.select(SNAPSHOT_BUCKET_COL).distinct().count() == 2  # two buckets
+    assert {r.symbol: r.last_price for r in snap.collect()} == {"AAPL": 3.0, "MSFT": 2.0}
+    assert spark.conf.get(conf_key) == before
+
+
 def test_ewma_stream_ordered_matches_event_time_fold(spark, tmp_path):
     """The buffered variant folds the SAME out-of-order fixture in true
     event-time order — the level the batch ewma operator would compute —

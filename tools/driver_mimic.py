@@ -30,6 +30,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import tempfile
 import time
 import traceback
 
@@ -51,6 +52,22 @@ def flag_fragile_oracle_dtypes(con, sql: str, name: str) -> list[str]:
     return warnings
 
 
+def oracle_connection(sf: str, spill_dir: str):
+    """DuckDB over ``sf``'s parquet, capped at a third of physical
+    memory and spilling to ``spill_dir``. Unbounded, an oracle self-join
+    (minhash_band_sweep's 16x1 candidates at sf0.1) beside the 16g driver
+    JVM exhausts a 16 GB box; bounded, DuckDB spills (8.7 GB for that
+    query), and by default it would spill to ``.tmp/`` in the working
+    directory."""
+    from tests.oracle_utils import duckdb_connection
+
+    con = duckdb_connection(sf)
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con.execute(f"SET memory_limit='{phys // 3 >> 20}MB'")
+    con.execute(f"SET temp_directory='{spill_dir}'")
+    return con
+
+
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
     """Run t1 and the t2 sweep; 0 when every compare is exact. ``spark``
     defaults to a fresh vanilla session."""
@@ -61,7 +78,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     args = parser.parse_args(argv)
 
     import __spark_entry__ as entrymod
-    from tests.oracle_utils import assert_frames_match, duckdb_connection
+    from tests.oracle_utils import assert_frames_match
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -87,13 +104,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
     bad = []
     for sf in args.sf.split(","):
-        con = duckdb_connection(sf)
-        # a third of physical memory: unbounded, an oracle self-join
-        # (minhash_band_sweep's 16x1 candidates at sf0.1) beside the
-        # 16g driver JVM exhausts a 16 GB box; bounded, DuckDB spills
-        # to its temp dir (.tmp/) instead
-        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-        con.execute(f"SET memory_limit='{phys // 3 >> 20}MB'")
+        # DuckDB's spill dir goes with its sf dir, never into the working dir
+        spill = tempfile.TemporaryDirectory(prefix="driver-mimic-spill-")
+        con = oracle_connection(sf, spill.name)
         ok, dtype_warnings = 0, []
         t_start = time.time()
         for i, name in enumerate(names):
@@ -111,6 +124,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             if (i + 1) % 25 == 0:
                 print(f"  ... {i + 1}/{len(names)} ({time.time() - t_start:.0f}s)", flush=True)
         con.close()
+        spill.cleanup()
         print(
             f"t2 sweep {sf}: {ok} oracle-exact, {len(names) - ok} FAILED "
             f"in {time.time() - t_start:.0f}s"

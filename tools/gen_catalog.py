@@ -1,7 +1,9 @@
 """Regenerate CATALOG.md: the full query inventory — name, SURVEY §2
-tags, defining file:line, oracle/bench flags, and the first docstring
-sentence — generated straight from the registry so it can never drift
-from the code. Run after adding queries: ``python tools/gen_catalog.py``.
+tags, defining ``file::function``, oracle/bench flags, and the first
+docstring sentence — generated straight from the registry so it can
+never drift from the code (a tier-1 test compares the file with
+:func:`render`). Run after adding queries: ``python tools/gen_catalog.py``
+(it takes no arguments).
 """
 
 from __future__ import annotations
@@ -9,7 +11,9 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PATH = os.path.join(ROOT, "CATALOG.md")
+sys.path.insert(0, ROOT)
 
 HEADER = """# CATALOG — every registered query (auto-generated)
 
@@ -18,7 +22,7 @@ per ``queries()`` entry the driver sees. **Tags** are SURVEY §2 row ids
 (the judge's coverage checklist); **oracle** marks a DuckDB-exact
 hash-compare twin (queries without one are streaming/iterative shapes
 verified by unit tests); **bench** marks headline-benchmark membership.
-File:line points at the decorated function (docstrings there carry the
+``file::function`` names the decorated function (docstrings there carry the
 determinism contract and the 100 TB scale note for each query).
 """
 
@@ -34,24 +38,21 @@ def first_sentence(doc: str | None) -> str:
     return text[:220]
 
 
-def main() -> None:
-    from finance_data_ingestion_pipeline_with_kafka_spark.registry import load_all
-
+def render() -> str:
+    """CATALOG.md's text for the registry as it is now."""
     import inspect
 
-    cat = load_all()
+    from finance_data_ingestion_pipeline_with_kafka_spark.registry import load_all
+
     rows = []
-    for name, spec in sorted(cat.items()):
-        # prepared fns carry __wrapped__ (inspect.unwrap follows it);
-        # unprepared fns carry __source_fn__ instead (registry.py)
-        fn = inspect.unwrap(getattr(spec.fn, "__source_fn__", spec.fn))
-        code = fn.__code__
-        rel = os.path.relpath(code.co_filename, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    for name, spec in sorted(load_all().items()):
+        fn = inspect.unwrap(spec.fn)
+        rel = os.path.relpath(inspect.getsourcefile(fn), ROOT)
         rows.append(
             (
                 name,
                 ",".join(spec.tags),
-                f"`{rel}:{code.co_firstlineno}`",
+                f"`{rel}::{fn.__name__}`",
                 "yes" if spec.oracle else "—",
                 "yes" if spec.bench else "—",
                 first_sentence(fn.__doc__),
@@ -63,13 +64,16 @@ def main() -> None:
     out.append("|---|---|---|---|---|---|")
     for r in rows:
         out.append("| " + " | ".join(c.replace("|", "\\|") for c in r) + " |")
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CATALOG.md"
-    )
-    with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"wrote {path}: {len(rows)} rows")
+    return "\n".join(out) + "\n"
+
+
+def main(argv: list[str]) -> None:
+    if argv:
+        sys.exit(f"usage: python tools/gen_catalog.py (no arguments; got {' '.join(argv)})")
+    with open(PATH, "w") as f:
+        f.write(render())
+    print(f"wrote {PATH}")
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
