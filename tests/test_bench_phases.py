@@ -1,11 +1,18 @@
-"""Smoke tests for bench.py's measurement phases — the phases mutate
-session-global confs and env vars, so a save/restore bug would silently
-poison every phase that runs after them. These pin the contract at a
-tiny scale factor (the real measurements run at sf0.1 inside bench.py).
+"""Smoke tests for bench.py's measurement phases — the phases scope the
+scan replication env var and plan on child sessions, so a leaked value or
+a conf write would silently poison every phase that runs after them.
+These pin the contract at a tiny scale factor (the real measurements run
+at sf0.1 inside bench.py), plus the child launcher and the tools' flag
+parsers.
 """
 
+import importlib
 import os
+import subprocess
 import sys
+import time
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,58 +48,93 @@ def test_streaming_stateful_throughput_reports_rate(spark):
     assert rate > 0
 
 
-def test_soak_flag_parsing_is_strict():
-    """ADVICE r12: the soak tool's space-separated flag form must reject
-    a trailing bare flag cleanly and must NOT treat unrelated flags
-    (--sfoo) as --sf."""
-    import pytest
-
-    from tools import soak_sf1
-
-    # simulate main()'s parse loop via the module-level helper semantics:
-    # we can't call main() (it builds a session), so reproduce the
-    # closure's contract through a tiny harness mirroring its use
-    def parse(argv):
-        names, sf_dir = None, None
-
-        def _flag_value(i, a, flag):
-            if a.startswith(flag + "="):
-                return a.split("=", 1)[1]
-            if a == flag:
-                if i + 1 >= len(argv):
-                    raise SystemExit(f"usage: {flag} requires a value operand")
-                return argv[i + 1]
-            return None
-
-        for i, a in enumerate(argv):
-            if (v := _flag_value(i, a, "--queries")) is not None:
-                names = v.split(",")
-            elif (v := _flag_value(i, a, "--sf")) is not None:
-                sf_dir = v
-        return names, sf_dir
-
-    assert parse(["--sf=/x", "--queries=a,b"]) == (["a", "b"], "/x")
-    assert parse(["--sf", "/y"]) == (None, "/y")
-    # unrelated flag prefixed with --sf must not consume the next token
-    assert parse(["--sfoo", "/z"]) == (None, None)
-    with pytest.raises(SystemExit):
-        parse(["--queries"])
-    # and the real module must carry the strict form (no bare startswith)
-    import inspect
-
-    src = inspect.getsource(soak_sf1.main)
-    assert 'startswith("--sf")' not in src and "startswith('--sf')" not in src
-
-
 def test_stream_ab_subprocess_mode_contract():
-    """bench.py's SPARK_GRAFT_STREAM_AB_ONLY mode must exist and the
-    trigger threshold must match the documented 25k gate."""
+    """bench.py's ``--child stream`` mode must exist and the trigger
+    threshold must match the documented 25k gate."""
     import inspect
 
     src = inspect.getsource(bench.main)
-    assert "SPARK_GRAFT_STREAM_AB_ONLY" in src
+    assert "stream" in bench._CHILD_MODES
+    assert '_child("stream", {})' in src
     assert "25_000" in src
-    assert callable(bench._streaming_steady_ab)
+
+
+def test_child_timeout_comes_from_the_remaining_budget(monkeypatch):
+    """A hung child must not outlive the bench: every ``--child`` mode's
+    subprocess timeout fits inside the remaining budget, down to the
+    smallest budget any launch site lets through (100 s), and the child's
+    own budget ends before its timeout. A timeout or a failed child
+    raises with the mode and the stderr tail."""
+    seen = {}
+
+    def run(argv, timeout=None, env=None, **kw):
+        assert argv[2] == "--child"
+        seen[argv[3]] = (timeout, bench._budget_left(), float(env["SPARK_GRAFT_BENCH_BUDGET"]))
+        return subprocess.CompletedProcess(argv, 0, '{"ok": 1}\n', "")
+
+    monkeypatch.setattr(subprocess, "run", run)
+    monkeypatch.setattr(bench, "_BENCH_T0", time.monotonic())
+    for budget in ("101", "150", "400", "100000"):
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_BUDGET", budget)
+        for mode in bench._CHILD_MODES:
+            assert bench._child(mode, {}) == {"ok": 1}
+            timeout, left, child_budget = seen.pop(mode)
+            assert timeout <= left, (mode, budget, timeout, left)
+            assert child_budget < timeout, (mode, budget)
+
+    def hang(argv, timeout=None, **kw):
+        raise subprocess.TimeoutExpired(argv, timeout, stderr=b"java.lang.OutOfMemoryError")
+
+    monkeypatch.setattr(subprocess, "run", hang)
+    with pytest.raises(RuntimeError, match="stream child timed out.*OutOfMemoryError"):
+        bench._child("stream", {})
+    monkeypatch.setattr(
+        subprocess, "run", lambda argv, **kw: subprocess.CompletedProcess(argv, 1, "", "boom")
+    )
+    with pytest.raises(RuntimeError, match="deep child rc=1: boom"):
+        bench._child("deep", {})
+
+
+def test_one_function_owns_each_bench_measurement_step():
+    """Source scan: in bench.py, ``perf_counter`` appears only in
+    ``_walls`` and the two streaming replays (whose walls span a stream's
+    start and termination), and ``subprocess.run`` only in ``_child``;
+    across bench.py and ``tools/``, only ``_replicated`` names
+    ``ENGINE_SCAN_REPLICATE`` in code. A phase times, replicates and
+    launches children through the shared helpers instead of growing its
+    own copy."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(bench.__file__).parent
+
+    def owners(files, hit):
+        found = set()
+        for f in files:
+            for stmt in ast.parse(f.read_text()).body:
+                if any(hit(c) for c in ast.walk(stmt)):
+                    found.add((f.name, getattr(stmt, "name", "<module>")))
+        return found
+
+    def attr(name, of=None):
+        return lambda c: (
+            isinstance(c, ast.Attribute)
+            and c.attr == name
+            and (of is None or ast.unparse(c.value) == of)
+        )
+
+    def replicate_env(c):
+        return isinstance(c, ast.Constant) and c.value == "ENGINE_SCAN_REPLICATE"
+
+    here = [root / "bench.py"]
+    assert owners(here, attr("perf_counter")) == {
+        ("bench.py", "_walls"),
+        ("bench.py", "_streaming_throughput"),
+        ("bench.py", "_streaming_stateful_throughput"),
+    }
+    assert owners(here, attr("run", "subprocess")) == {("bench.py", "_child")}
+    tools = sorted((root / "tools").glob("*.py"))
+    assert owners(here + tools, replicate_env) == {("bench.py", "_replicated")}
 
 
 def test_dedup_crossover_budget_exhaustion_is_loud(spark, sf_dir, monkeypatch):
@@ -129,18 +171,25 @@ def test_dedup_crossover_order_is_cheapest_first():
     )
 
 
-def test_probe_100x_flag_parsing_is_strict():
-    """The 100x probe tool follows the soak tool's strict-flag contract:
-    exact flag matches only, clean usage errors for a trailing bare
-    flag, unknown flags rejected instead of silently consumed."""
-    import pytest
-
-    from tools.probe_100x import DEFAULT_QUERIES, parse_args
-
-    names, factor, sf = parse_args(["--queries", "a,b", "--factor", "50"])
-    assert names == ["a", "b"] and factor == 50
-    names, factor, sf = parse_args(["--factor=25", "--sf=/tmp/x"])
-    assert list(names) == list(DEFAULT_QUERIES) and factor == 25 and sf == "/tmp/x"
-    for bad in (["--factor"], ["--queries"], ["--sf"], ["--sfoo", "x"], ["stray"]):
+@pytest.mark.parametrize("tool", ["attr_floor", "probe_100x", "soak_sf1"])
+def test_tool_flag_parsing_is_strict(tool):
+    """Each tool's own parser takes exactly ``--flag value`` and
+    ``--flag=value``: a trailing bare flag, an unrelated flag that merely
+    starts with a real one (``--sfoo``) and a stray token where no query
+    name goes all stop with a usage error instead of being consumed or
+    silently ignored."""
+    parse_args = importlib.import_module(f"tools.{tool}").parse_args
+    lead = ["top_revenue_orders"] if tool == "attr_floor" else []
+    assert parse_args([*lead, "--sf", "/x"]).sf == "/x"
+    assert parse_args([*lead, "--sf=/y"]).sf == "/y"
+    bad = [["--sf"], ["--sfoo", "/z"], ["stray"]]
+    if tool != "attr_floor":
+        assert parse_args(["--queries", "a,b"]).queries == ["a", "b"]
+        assert parse_args(["--queries=c"]).queries == ["c"]
+        bad.append(["--queries"])
+    if tool == "probe_100x":
+        assert parse_args(["--factor", "50"]).factor == 50
+        bad.append(["--factor"])
+    for argv in bad:
         with pytest.raises(SystemExit):
-            parse_args(bad)
+            parse_args([*lead, *argv])

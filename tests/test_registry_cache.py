@@ -573,12 +573,14 @@ def test_prepared_plan_is_materialization_free(spark, sf_dir, name):
 
 
 def test_no_session_conf_writes_in_operators_or_registry():
-    """Source scan: no operator module, no streaming module and nothing in
-    the registry writes a session's runtime conf. An execution policy
-    reaches Spark only through a child session's conf, set once when
-    registry.policy_session builds that child, and a sink's write mode
-    through a per-write option; catalog.py's UTC and nanosAsLong guards
-    for externally built sessions are outside this scan."""
+    """Source scan: no operator module, no streaming module, nothing in
+    the registry and nothing in bench.py or ``tools/`` writes a session's
+    runtime conf. An execution policy reaches Spark only through a child
+    session's conf, set once when registry.policy_session builds that
+    child, the bench's skew fixture through the child it plans on, and a
+    sink's write mode through a per-write option; catalog.py's UTC and
+    nanosAsLong guards for externally built sessions are outside this
+    scan."""
     import pathlib
     import re
 
@@ -587,6 +589,8 @@ def test_no_session_conf_writes_in_operators_or_registry():
         *sorted((pkg / "operators").glob("*.py")),
         *sorted((pkg / "streaming").glob("*.py")),
         pkg / "registry.py",
+        pkg.parent / "bench.py",
+        *sorted((pkg.parent / "tools").glob("*.py")),
     ]
     writes = [
         (f.name, line.strip())
@@ -594,7 +598,10 @@ def test_no_session_conf_writes_in_operators_or_registry():
         for line in f.read_text().splitlines()
         if re.search(r"\.conf\.(set|unset)\(", line)
     ]
-    assert writes == [("registry.py", "child.conf.set(k, v)")], writes
+    assert writes == [
+        ("registry.py", "child.conf.set(k, v)"),
+        ("bench.py", 'child.conf.set(k, "-1")'),
+    ], writes
 
 
 def test_policy_session_is_one_child_per_policy_under_threads(spark):

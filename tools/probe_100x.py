@@ -8,19 +8,19 @@ of an extrapolation from the 10x/30x tables.
 Usage: python tools/probe_100x.py [--queries a,b,c] [--factor 100]
                                   [--sf /root/testdata/sf0.1]
 
-Protocol notes (matches bench._deep_crossover): DuckDB then Spark
-back-to-back per (query, rep) so co-tenant spikes hit both sides of a
-ratio; one warm pass then min-of-3 timed per engine (walls at 100x are
+Protocol notes (one ``bench._cell`` per (query, rep), as in the bench's
+crossover phases): DuckDB then Spark back-to-back so co-tenant spikes
+hit both sides of a ratio; one warm pass then min-of-3 timed per engine (walls at 100x are
 seconds — a deeper min buys little and costs minutes); both scale
 points measured inside one JVM state.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,43 +35,22 @@ DEFAULT_QUERIES = (
 )
 
 
-def parse_args(argv: list[str]) -> tuple[list[str], int, str]:
-    names = list(DEFAULT_QUERIES)
-    factor = 100
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--queries="):
-            names = a.split("=", 1)[1].split(",")
-        elif a == "--queries":
-            if i + 1 >= len(argv):
-                raise SystemExit("--queries requires a value")
-            i += 1
-            names = argv[i].split(",")
-        elif a.startswith("--factor="):
-            factor = int(a.split("=", 1)[1])
-        elif a == "--factor":
-            if i + 1 >= len(argv):
-                raise SystemExit("--factor requires a value")
-            i += 1
-            factor = int(argv[i])
-        elif a.startswith("--sf="):
-            sf_dir = a.split("=", 1)[1]
-        elif a == "--sf":
-            if i + 1 >= len(argv):
-                raise SystemExit("--sf requires a value")
-            i += 1
-            sf_dir = argv[i]
-        else:
-            raise SystemExit(f"unknown argument {a!r}")
-        i += 1
-    return names, factor, sf_dir
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    p = argparse.ArgumentParser(
+        description="two-engine walls at 1x and N x volume", allow_abbrev=False
+    )
+    p.add_argument("--queries", type=lambda v: v.split(","), default=list(DEFAULT_QUERIES))
+    p.add_argument("--factor", type=int, default=100)
+    p.add_argument(
+        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    )
+    return p.parse_args(argv)
 
 
 def main() -> int:
-    names, factor, sf_dir = parse_args(sys.argv[1:])
-    from bench import _duck_connect_replicated, _force
+    args = parse_args(sys.argv[1:])
+    names, factor, sf_dir = args.queries, args.factor, args.sf
+    from bench import _cell, _replicated
 
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import load_all
     from finance_data_ingestion_pipeline_with_kafka_spark.session import get_spark
@@ -83,34 +62,15 @@ def main() -> int:
     spark = get_spark(app_name="probe-100x")
 
     def measure(rep: int) -> tuple[dict[str, float], dict[str, float]]:
-        con = _duck_connect_replicated(sf_dir, rep)
         duck, spk = {}, {}
-        os.environ["ENGINE_SCAN_REPLICATE"] = str(rep)
-        try:
+        with _replicated(sf_dir, rep) as con:
             for name in names:
-                spec = cat[name]
-                con.sql(spec.oracle).df()  # warm
-                ts = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    con.sql(spec.oracle).df()
-                    ts.append(time.perf_counter() - t0)
-                duck[name] = min(ts)
-                _force(spec.fn(spark, sf_dir))  # warm (plan+codegen at N×)
-                ts = []
-                for _ in range(3):
-                    t0 = time.perf_counter()
-                    _force(spec.fn(spark, sf_dir))
-                    ts.append(time.perf_counter() - t0)
-                spk[name] = min(ts)
+                duck[name], spk[name] = _cell(spark, con, cat[name], sf_dir, 1, 1, 3)
                 print(
                     f"  rep={rep} {name}: spark {spk[name]:.2f} s, "
                     f"duckdb {duck[name]:.2f} s",
                     file=sys.stderr,
                 )
-        finally:
-            os.environ.pop("ENGINE_SCAN_REPLICATE", None)
-            con.close()
         return duck, spk
 
     duck_1x, spark_1x = measure(1)

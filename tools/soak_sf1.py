@@ -10,6 +10,7 @@ Usage: python tools/soak_sf1.py [--queries a,b,c] [--sf /root/testdata/sf0.1]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -51,30 +52,24 @@ def _delta(before: dict, after: dict) -> dict:
     }
 
 
+def parse_args(argv: list[str]) -> argparse.Namespace:
+    p = argparse.ArgumentParser(
+        description="dedup/ANN walls and shuffle bytes at 1x and 10x", allow_abbrev=False
+    )
+    p.add_argument("--queries", type=lambda v: v.split(","), default=list(DEFAULT_QUERIES))
+    p.add_argument(
+        "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    )
+    return p.parse_args(argv)
+
+
 def main() -> int:
+    args = parse_args(sys.argv[1:])
+    names, sf_dir = args.queries, args.sf
+    from bench import _replicated
+
     from finance_data_ingestion_pipeline_with_kafka_spark.registry import load_all
     from finance_data_ingestion_pipeline_with_kafka_spark.session import get_spark
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = list(DEFAULT_QUERIES)
-    argv = sys.argv[1:]
-    def _flag_value(i: int, a: str, flag: str) -> str | None:
-        # accept exactly --flag=value and --flag value (ADVICE r12:
-        # bare startswith also swallowed unrelated flags like --sfoo,
-        # and the space form indexed past argv on a trailing bare flag)
-        if a.startswith(flag + "="):
-            return a.split("=", 1)[1]
-        if a == flag:
-            if i + 1 >= len(argv):
-                raise SystemExit(f"usage: {flag} requires a value operand")
-            return argv[i + 1]
-        return None
-
-    for i, a in enumerate(argv):
-        if (val := _flag_value(i, a, "--queries")) is not None:
-            names = val.split(",")
-        elif (val := _flag_value(i, a, "--sf")) is not None:
-            sf_dir = val
 
     spark = get_spark(app_name="soak-sf1", extra_conf={"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
@@ -83,21 +78,20 @@ def main() -> int:
 
     report = {}
     for rep in (1, 10):
-        os.environ["ENGINE_SCAN_REPLICATE"] = str(rep)
-        for name in names:
-            spec = cat[name]
-            runs = []
-            for tag in ("cold", "warm"):
-                before = _stage_totals(ui)
-                t0 = time.perf_counter()
-                n_rows = len(spec.fn(spark, sf_dir).toPandas())
-                wall = round(time.perf_counter() - t0, 2)
-                d = _delta(before, _stage_totals(ui))
-                d.update({"wall_s": wall, "rows": n_rows, "run": tag})
-                runs.append(d)
-                print(f"rep={rep} {name} {tag}: {d}", flush=True)
-            report[f"{name}@{rep}x"] = runs
-    os.environ.pop("ENGINE_SCAN_REPLICATE", None)
+        with _replicated(sf_dir, rep):
+            for name in names:
+                spec = cat[name]
+                runs = []
+                for tag in ("cold", "warm"):
+                    before = _stage_totals(ui)
+                    t0 = time.perf_counter()
+                    n_rows = len(spec.fn(spark, sf_dir).toPandas())
+                    wall = round(time.perf_counter() - t0, 2)
+                    d = _delta(before, _stage_totals(ui))
+                    d.update({"wall_s": wall, "rows": n_rows, "run": tag})
+                    runs.append(d)
+                    print(f"rep={rep} {name} {tag}: {d}", flush=True)
+                report[f"{name}@{rep}x"] = runs
     print(json.dumps(report))
     return 0
 
