@@ -193,3 +193,15 @@ def test_tool_flag_parsing_is_strict(tool):
     for argv in bad:
         with pytest.raises(SystemExit):
             parse_args([*lead, *argv])
+
+
+@pytest.mark.parametrize("tool", ["attr_floor", "probe_100x", "soak_sf1"])
+def test_tool_import_leaves_environ_unchanged(tool, monkeypatch):
+    """Importing a tool (as the flag-parser test does) sets no variable:
+    the lake cache a tool turns on belongs to its ``main()``, not to
+    every test that runs after the import in the same process."""
+    monkeypatch.delenv("ENGINE_LAKE_CACHE", raising=False)
+    monkeypatch.delitem(sys.modules, f"tools.{tool}", raising=False)
+    before = dict(os.environ)
+    importlib.import_module(f"tools.{tool}")
+    assert dict(os.environ) == before

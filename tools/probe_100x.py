@@ -24,8 +24,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("ENGINE_LAKE_CACHE", "1")
-
 DEFAULT_QUERIES = (
     "pricing_summary",       # q1-class scan-agg: the per-row efficiency bar
     "top_revenue_orders",    # q3-class join + topk
@@ -49,6 +47,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 
 def main() -> int:
     args = parse_args(sys.argv[1:])
+    os.environ.setdefault("ENGINE_LAKE_CACHE", "1")
     names, factor, sf_dir = args.queries, args.factor, args.sf
     from bench import _cell, _replicated
 

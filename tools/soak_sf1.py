@@ -19,8 +19,6 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("ENGINE_LAKE_CACHE", "1")
-
 DEFAULT_QUERIES = ("minhash_near_dup", "near_dup_clusters", "ivf_ann", "pq_ann")
 
 
@@ -65,6 +63,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 
 def main() -> int:
     args = parse_args(sys.argv[1:])
+    os.environ.setdefault("ENGINE_LAKE_CACHE", "1")
     names, sf_dir = args.queries, args.sf
     from bench import _replicated
 
